@@ -2440,8 +2440,10 @@ class Engine:
 
     # ---- teardown ----------------------------------------------------------
     def close(self) -> None:
+        # running statements stop: a streaming query, or a batch result's
+        # JVM-side partition server and prefetched job
         for s in self.statements:
-            if isinstance(s, StreamingStatement) and s.state == "RUNNING":
+            if s.state == "RUNNING":
                 try:
                     s.cancel()
                 except Exception:  # noqa: BLE001

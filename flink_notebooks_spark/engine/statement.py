@@ -15,22 +15,37 @@ Mirrors the reference's SQL-gateway operation/result protocol:
 - pause / resume / cancel of a running streaming statement
   (flinkNotebookController.ts:748-850)
 
-Spark mapping: a batch statement pages ``toLocalIterator`` (nothing is
-materialized on the driver beyond the current page — large results stream
-partition-by-partition); a streaming statement is a ``foreachBatch`` query
+Spark mapping: a batch statement reads its result as Arrow record batches.
+The query's ``toArrowBatchRdd`` is served to this process one partition at a
+time, with the next partition's job prefetched, so the Spark application
+holds at most two partitions in the JVM and one Arrow batch (≤
+``spark.sql.execution.arrow.maxRecordsPerBatch`` rows) in Python. A page is
+a slice of that batch; its Python values are built column by column, by a
+converter chosen once per column from the Spark type. A page has two views:
+``data``, the values ``collect()`` returns, and ``wire()``, the JSON-ready
+values the gateway sends. A streaming statement is a ``foreachBatch`` query
 appending to a bounded in-memory buffer the client drains with the same
 token protocol.
 """
 
 from __future__ import annotations
 
+import struct
 import threading
 import time
 import uuid
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Any
 
+import numpy as np
+import pyarrow as pa
+from pyspark.serializers import SpecialLengths, read_int, write_int
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
+from pyspark.traceback_utils import SCCallSiteSync
+from pyspark.util import local_connect_and_auth
 
 PAGE_SIZE = 100  # reference sqlGatewayClient.ts:128
 MAX_STREAM_ROWS = 10_000  # reference flinkNotebookController.ts:428
@@ -49,12 +64,72 @@ class ColumnInfo:
     nullable: bool = True
 
 
-@dataclass
+def _jsonable(v):
+    """A row value as the JSON rowFormat carries it: JSON-native values as
+    they are, containers element-wise, anything else through ``str``."""
+    if v is None or isinstance(v, (bool, int, float, str)):
+        return v
+    if isinstance(v, (list, tuple)):
+        return [_jsonable(x) for x in v]
+    if isinstance(v, dict):
+        return {k: _jsonable(x) for k, x in v.items()}
+    return str(v)
+
+
 class ResultPage:
-    result_type: str  # NOT_READY | PAYLOAD | EOS
-    columns: list[ColumnInfo] = field(default_factory=list)
-    data: list[dict[str, Any]] = field(default_factory=list)  # {kind, fields}
-    next_token: int | None = None
+    """One page of a statement's result.
+
+    ``data`` holds the rows as ``{kind, fields}`` with the values
+    ``collect()`` returns; ``wire()`` gives the same rows with JSON-ready
+    fields. A batch statement's page keeps its Arrow rows (``table``) and
+    builds each view column by column on first use."""
+
+    def __init__(
+        self,
+        result_type: str,  # NOT_READY | PAYLOAD | EOS
+        columns: list[ColumnInfo] | None = None,
+        data: list[dict[str, Any]] | None = None,
+        next_token: int | None = None,
+        table: pa.Table | None = None,
+        codecs: list[_Column] | None = None,
+    ):
+        self.result_type = result_type
+        self.columns = columns if columns is not None else []
+        self.next_token = next_token
+        self._data = [] if data is None and table is None else data
+        self._table = table
+        self._codecs = codecs
+        self._wire: list[dict[str, Any]] | None = None
+
+    @property
+    def data(self) -> list[dict[str, Any]]:
+        if self._data is None:
+            self._data = self._rows("native")
+        return self._data
+
+    def wire(self) -> list[dict[str, Any]]:
+        if self._wire is None:
+            if self._table is None:
+                self._wire = [
+                    {"kind": r["kind"], "fields": _jsonable(r["fields"])}
+                    for r in self.data
+                ]
+            else:
+                self._wire = self._rows("wire")
+        return self._wire
+
+    def compact(self) -> None:
+        """Copy the page's Arrow rows out of the batch they slice, so a kept
+        page does not hold the whole batch."""
+        if self._table is not None:
+            self._table = self._table.take(np.arange(self._table.num_rows))
+
+    def _rows(self, view: str) -> list[dict[str, Any]]:
+        cols = [
+            getattr(c, view)(a) for c, a in zip(self._codecs, self._table.columns)
+        ]
+        rows = zip(*cols) if cols else [()] * self._table.num_rows
+        return [{"kind": "INSERT", "fields": list(f)} for f in rows]
 
 
 def _columns_of(df: DataFrame) -> list[ColumnInfo]:
@@ -66,6 +141,261 @@ def _columns_of(df: DataFrame) -> list[ColumnInfo]:
 
 def _rows(batch: list, kind: str = "INSERT") -> list[dict[str, Any]]:
     return [{"kind": kind, "fields": list(r)} for r in batch]
+
+
+# ------------------------------------------------------------ Arrow results
+# Types whose Arrow values, as Python lists, are already what collect()
+# returns and what the JSON rowFormat carries.
+_PLAIN = (
+    T.BooleanType,
+    T.ByteType,
+    T.ShortType,
+    T.IntegerType,
+    T.LongType,
+    T.FloatType,
+    T.DoubleType,
+    T.StringType,
+)
+# numpy unit and valid range (years 1-9999, Python's) of the types whose
+# str() is an ISO string numpy can write for a whole column at once
+_ISO = {
+    T.DateType: ("D", -719_162, 2_932_896),
+    T.TimestampNTZType: ("us", -62_135_596_800_000_000, 253_402_300_799_999_999),
+}
+
+
+def _same(v):
+    return v
+
+
+def _from_arrow(dt: T.DataType):
+    """A function from one non-null Arrow ``to_pylist`` value to the value
+    ``collect()`` returns for Spark type ``dt``, or None where they agree.
+    Arrow values are read with integer temporal storage and struct fields
+    named by position (``_arrow_read_type``), so each leaf goes through
+    Spark's own ``fromInternal`` like the row path does."""
+    if isinstance(dt, T.StructType):
+        names = dt.names
+        convs = [_from_arrow(f.dataType) for f in dt.fields]
+
+        def struct(d):
+            vals = zip(convs, d.values())
+            return T._create_row(
+                names, [v if c is None or v is None else c(v) for c, v in vals]
+            )
+
+        return struct
+    if isinstance(dt, T.ArrayType):
+        conv = _from_arrow(dt.elementType)
+        if conv is None:
+            return None
+        return lambda xs: [None if x is None else conv(x) for x in xs]
+    if isinstance(dt, T.MapType):
+        kc = _from_arrow(dt.keyType) or _same
+        vc = _from_arrow(dt.valueType) or _same
+        order = _hashmap_order(dt.keyType)
+        return lambda kvs: {kc(k): None if v is None else vc(v) for k, v in order(kvs)}
+    if isinstance(dt, T.VariantType):
+        return lambda d: T.VariantVal(*map(bytearray, d.values()))
+    if isinstance(dt, T.UserDefinedType):
+        inner = _from_arrow(dt.sqlType()) or _same
+        return lambda v: dt.deserialize(inner(v))
+    return dt.fromInternal if dt.needConversion() else None
+
+
+def _i32(x: int) -> int:
+    return (x + 2**31) % 2**32 - 2**31
+
+
+def _java_hash(dt: T.DataType):
+    """Java ``hashCode`` of a map key of Spark type ``dt``, from its Arrow
+    value, as the boxed object the row path puts in a ``java.util.HashMap``;
+    None for key types whose order is left as Arrow gives it."""
+    if isinstance(dt, (T.ByteType, T.ShortType, T.IntegerType, T.DateType)):
+        return _same
+    if isinstance(
+        dt, (T.LongType, T.TimestampType, T.TimestampNTZType, T.DayTimeIntervalType)
+    ):
+        return lambda v: _i32(v ^ (v % 2**64 >> 32))
+    if isinstance(dt, T.BooleanType):
+        return lambda v: 1231 if v else 1237
+    if isinstance(dt, T.StringType):
+
+        def string(s):
+            h = 0
+            for (u,) in struct.iter_unpack(">H", s.encode("utf-16-be")):
+                h = (31 * h + u) & 0xFFFFFFFF
+            return h
+
+        return string
+    if isinstance(dt, T.DoubleType):
+
+        def double(v):  # doubleToLongBits maps every NaN to one value
+            bits = 0x7FF8 << 48
+            if v == v:
+                bits = struct.unpack(">q", struct.pack(">d", v))[0]
+            return _i32(bits ^ (bits % 2**64 >> 32))
+
+        return double
+    if isinstance(dt, T.FloatType):
+
+        def float_(v):  # floatToIntBits maps every NaN to one value
+            if v != v:
+                return 0x7FC00000
+            return struct.unpack(">i", struct.pack(">f", v))[0]
+
+        return float_
+    if isinstance(dt, T.DecimalType):
+
+        def decimal(d):  # java.math.BigDecimal.hashCode
+            sign, digits, exp = d.as_tuple()
+            mag = int("".join(map(str, digits)) or "0")
+            if mag < 2**63:  # compact form
+                temp = _i32(_i32(_i32(mag >> 32) * 31) + (mag & 0xFFFFFFFF))
+                return _i32(31 * (-temp if sign else temp) - exp)
+            h = 0
+            for i in range((mag.bit_length() + 31) // 32 - 1, -1, -1):
+                h = _i32(31 * h + (mag >> (32 * i) & 0xFFFFFFFF))
+            return _i32(31 * (-h if sign else h) - exp)
+
+        return decimal
+    return None
+
+
+def _hashmap_order(key_type: T.DataType):
+    """A function putting a map's Arrow (key, value) pairs in the order the
+    row path returned them: it copied each map into a ``java.util.HashMap``
+    sized to the map and iterated that. Entries go by hash bucket, and by
+    insertion within one; buckets of nine or more keys, which Java turns
+    into trees, are not modelled."""
+    keyhash = _java_hash(key_type)
+    if keyhash is None:
+        return _same
+
+    def order(kvs):
+        n = len(kvs)
+        cap = 1 << max(n - 1, 0).bit_length()
+        if n > cap * 3 // 4:
+            cap *= 2
+
+        def bucket(kv):
+            h = keyhash(kv[0]) & 0xFFFFFFFF
+            return (h ^ h >> 16) & (cap - 1)
+
+        return sorted(kvs, key=bucket)
+
+    return order
+
+
+def _iso_strings(v: np.ndarray, unit: str) -> list[str]:
+    """``str()`` of each date (``unit`` 'D', days) or naive datetime ('us',
+    microseconds since the epoch), written by numpy for the whole column."""
+    s = np.datetime_as_string(v.astype(f"M8[{unit}]"), unit=unit)
+    if unit == "D":
+        return s.astype("U10").tolist()
+    s = s.astype("U26")  # YYYY-MM-DDTHH:MM:SS.ffffff
+    s.view(np.uint32).reshape(-1, 26)[:, 10] = ord(" ")
+    return np.where(v % 1_000_000 == 0, s.astype("U19"), s).tolist()
+
+
+class _Column:
+    """Python values of one result column, chosen once per statement from
+    its Spark type. ``native`` equals what ``collect()`` returns, ``wire``
+    equals ``_jsonable`` of it. Null-free plain and ISO-printable columns
+    are converted by numpy in one call; the rest go value by value."""
+
+    def __init__(self, dt: T.DataType):
+        self.plain = type(dt) in _PLAIN
+        self.iso = _ISO.get(type(dt))
+        self.convert = _from_arrow(dt)
+
+    def native(self, col: pa.ChunkedArray) -> list:
+        if self.plain and not col.null_count:
+            return col.to_numpy(zero_copy_only=False).tolist()
+        vals = col.to_pylist()
+        conv = self.convert
+        if conv is None:
+            return vals
+        return [None if v is None else conv(v) for v in vals]
+
+    def wire(self, col: pa.ChunkedArray) -> list:
+        if self.plain:
+            return self.native(col)
+        if self.iso is not None and not col.null_count:
+            unit, lo, hi = self.iso
+            v = col.to_numpy()
+            if not len(v) or (v.min() >= lo and v.max() <= hi):
+                return _iso_strings(v, unit)
+        return [_jsonable(v) for v in self.native(col)]
+
+
+def _arrow_read_type(t: pa.DataType) -> pa.DataType:
+    """``t`` with temporal leaves read as their integer storage and struct
+    fields named by position — the same buffers, so any Arrow batch of
+    ``t`` reads as this type too."""
+    if pa.types.is_timestamp(t) or pa.types.is_duration(t) or pa.types.is_time64(t):
+        return pa.int64()
+    if pa.types.is_date32(t):
+        return pa.int32()
+    if pa.types.is_struct(t):
+        return pa.struct(
+            [
+                f.with_name(f"_{i}").with_type(_arrow_read_type(f.type))
+                for i, f in enumerate(t)
+            ]
+        )
+    if pa.types.is_map(t):
+        return pa.map_(
+            t.key_field.with_type(_arrow_read_type(t.key_type)),
+            t.item_field.with_type(_arrow_read_type(t.item_type)),
+        )
+    if pa.types.is_list(t):
+        return pa.list_(t.value_field.with_type(_arrow_read_type(t.value_type)))
+    return t
+
+
+def _positional(dt: T.DataType) -> T.DataType:
+    """``dt`` with every struct field renamed by position."""
+    if isinstance(dt, T.StructType):
+        return T.StructType(
+            [
+                T.StructField(f"_{i}", _positional(f.dataType), f.nullable)
+                for i, f in enumerate(dt.fields)
+            ]
+        )
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_positional(dt.elementType), dt.containsNull)
+    if isinstance(dt, T.MapType):
+        return T.MapType(
+            _positional(dt.keyType), _positional(dt.valueType), dt.valueContainsNull
+        )
+    return dt
+
+
+def _dup_names(dt: T.DataType) -> bool:
+    """Whether a struct anywhere in ``dt`` repeats a field name."""
+    if isinstance(dt, T.StructType):
+        return len(set(dt.names)) < len(dt.names) or any(
+            _dup_names(f.dataType) for f in dt.fields
+        )
+    if isinstance(dt, T.ArrayType):
+        return _dup_names(dt.elementType)
+    if isinstance(dt, T.MapType):
+        return _dup_names(dt.keyType) or _dup_names(dt.valueType)
+    return False
+
+
+def _arrow_safe(df: DataFrame) -> DataFrame:
+    """``df``, or when a struct in it repeats a field name (Spark's Arrow
+    writer rejects that) ``df`` with every field renamed by position. Values
+    are unchanged; the reader takes names from the original schema."""
+    fields = df.schema.fields
+    if not any(_dup_names(f.dataType) for f in fields):
+        return df
+    cols = [f"_{i}" for i in range(len(fields))]
+    return df.toDF(*cols).select(
+        *[F.col(c).cast(_positional(f.dataType)).alias(c) for c, f in zip(cols, fields)]
+    )
 
 
 def changelog_entries(
@@ -134,6 +464,8 @@ class Statement:
         self.started_at = time.time()
         self.finished_at: float | None = None
         self.is_streaming = False
+        self._columns: list[ColumnInfo] = []
+        self._wire_columns: list[dict[str, Any]] | None = None
 
     # --- protocol surface -------------------------------------------------
     def status(self) -> str:
@@ -141,6 +473,19 @@ class Statement:
 
     def fetch(self, token: int = 0, max_rows: int = PAGE_SIZE) -> ResultPage:
         raise NotImplementedError
+
+    def wire_columns(self) -> list[dict[str, Any]]:
+        """The result's ``columns`` block as the gateway sends it, built
+        once per statement."""
+        if self._wire_columns is None:
+            self._wire_columns = [
+                {
+                    "name": c.name,
+                    "logicalType": {"type": c.type, "nullable": c.nullable},
+                }
+                for c in self._columns
+            ]
+        return self._wire_columns
 
     def cancel(self) -> None:
         if self.state in (PENDING, RUNNING):
@@ -173,57 +518,178 @@ def ok_statement(message: str = "OK") -> ImmediateStatement:
     return ImmediateStatement([ColumnInfo("result", "STRING", False)], [[message]])
 
 
+class _ArrowStream:
+    """A DataFrame's result as Arrow record batches, served to this process
+    one partition at a time over a local socket; the JVM runs the next
+    partition's job while this one is read. Every job carries the job tag
+    ``tag``, so ``close`` (or the owner) can cancel the prefetched one."""
+
+    def __init__(self, df: DataFrame, tag: str):
+        spark = df.sparkSession
+        large = spark._jconf.arrowUseLargeVarTypes()
+        types = [
+            to_arrow_type(f.dataType, prefers_large_types=large) for f in df.schema
+        ]
+        self._schema = pa.schema(
+            [(f"_{i}", _arrow_read_type(t)) for i, t in enumerate(types)]
+        )
+        self._sc, self._tag = spark.sparkContext, tag
+        self._sc.addJobTag(tag)
+        try:
+            with SCCallSiteSync(self._sc):
+                rdd = _arrow_safe(df)._jdf.toArrowBatchRdd()
+                port, secret, self._server = (
+                    self._sc._jvm.PythonRDD.toLocalIteratorAndServe(rdd, True)
+                )
+        finally:
+            self._sc.removeJobTag(tag)
+        self._file, self._sock = local_connect_and_auth(port, secret)
+        self._sock.settimeout(None)  # a partition's job may take any time
+        self._in_partition = False
+        self._done = False
+        self._batches = self._read()
+
+    def _read(self):
+        f = self._file
+        while True:
+            write_int(1, f)  # ask for the next partition
+            f.flush()
+            status = read_int(f)
+            if status != 1:
+                if status == -1:
+                    self._server.getResult()  # raises the job's error
+                self._done = True
+                return
+            self._in_partition = True
+            while (n := read_int(f)) != SpecialLengths.END_OF_DATA_SECTION:
+                yield pa.ipc.read_record_batch(pa.py_buffer(f.read(n)), self._schema)
+            self._in_partition = False
+
+    def next_batch(self) -> pa.RecordBatch | None:
+        """The next record batch, or None once every partition was read."""
+        return next(self._batches, None)
+
+    def close(self) -> None:
+        """Stop the JVM side: cancel the tagged jobs, finish reading the
+        partition in flight (the JVM writes whole partitions) and tell the
+        serving thread to stop, then close the socket."""
+        f, self._file = self._file, None
+        if f is None:
+            return
+        try:
+            if not self._done:
+                self._sc.cancelJobsWithTag(self._tag)
+                while self._in_partition:
+                    n = read_int(f)
+                    if n == SpecialLengths.END_OF_DATA_SECTION:
+                        break
+                    f.read(n)
+                write_int(0, f)
+                f.flush()
+        except (OSError, EOFError, ValueError):  # the JVM side closed first
+            pass
+        finally:
+            self._done = True
+            f.close()
+            self._sock.close()
+
+
 class BatchStatement(Statement):
-    """A batch query: pages toLocalIterator, PAGE_SIZE rows per token."""
+    """A batch query paged from its Arrow result, PAGE_SIZE rows per token.
+
+    The first fetch starts an ``_ArrowStream``: the result's partitions are
+    computed one job at a time (the next one prefetched) and served as Arrow
+    batches of at most ``spark.sql.execution.arrow.maxRecordsPerBatch`` rows.
+    Pages are slices of the current batch (a page may span two), so the
+    application holds at most two partitions in the JVM plus one batch and the
+    retained page in Python. The latest page is kept for an idempotent
+    retry of its token. EOS, an error or ``cancel()`` close the stream:
+    the JVM serving thread ends and a prefetched job is cancelled."""
 
     def __init__(self, df: DataFrame):
         super().__init__()
         self.df = df
         self._columns = _columns_of(df)
-        self._iter = None
-        self._pages: dict[int, list] = {}
+        self._codecs = [_Column(f.dataType) for f in df.schema.fields]
+        self._tag = f"statement-{self.statement_id}"  # on the result's jobs
+        self._stream: _ArrowStream | None = None
+        self._batch: pa.RecordBatch | None = None
+        self._offset = 0
+        self._last: tuple[int, ResultPage] | None = None  # retained for retry
         self._done_token: int | None = None
         self.state = RUNNING
         self._lock = threading.Lock()
 
+    def _eos(self) -> ResultPage:
+        return ResultPage("EOS", self._columns, [], None)
+
+    def _next_rows(self, n: int) -> pa.Table | None:
+        parts = []
+        while n:
+            if self._batch is None or self._offset == self._batch.num_rows:
+                self._batch, self._offset = self._stream.next_batch(), 0
+                if self._batch is None:
+                    break
+                continue
+            part = self._batch.slice(self._offset, n)
+            self._offset += part.num_rows
+            n -= part.num_rows
+            parts.append(part)
+        return pa.Table.from_batches(parts) if parts else None
+
+    def _close(self) -> None:
+        """Close the stream and drop the current batch; the retained page
+        keeps a copy of its own rows only (caller holds the lock)."""
+        if self._stream is not None:
+            self._stream.close()
+        self._batch = None
+        if self._last is not None:
+            self._last[1].compact()
+
     def fetch(self, token: int = 0, max_rows: int = PAGE_SIZE) -> ResultPage:
         with self._lock:
             if self.state == CANCELED:
-                return ResultPage("EOS", self._columns, [], None)
+                return self._eos()
+            if self._done_token is not None and token >= self._done_token:
+                return self._eos()
+            if self._last is not None and self._last[0] == token:
+                return self._last[1]  # idempotent retry
+            if self.state == ERROR:
+                raise RuntimeError(self.error)
             try:
-                if self._iter is None:
-                    # toLocalIterator streams partitions to the driver one at
-                    # a time — no full materialization even for huge results.
-                    self._iter = self.df.toLocalIterator(prefetchPartitions=True)
-                if self._done_token is not None and token >= self._done_token:
-                    self.state = FINISHED
-                    self.finished_at = self.finished_at or time.time()
-                    return ResultPage("EOS", self._columns, [], None)
-                if token in self._pages:  # idempotent retry
-                    return ResultPage(
-                        "PAYLOAD", self._columns, _rows(self._pages[token]), token + 1
-                    )
-                batch = []
-                for row in self._iter:
-                    batch.append(row)
-                    if len(batch) >= max_rows:
-                        break
-                if not batch:
-                    self._done_token = token
-                    self.state = FINISHED
-                    self.finished_at = time.time()
-                    return ResultPage("EOS", self._columns, [], None)
-                self._pages[token] = batch
-                # retain only the latest page for retry (bound driver memory)
-                for k in list(self._pages):
-                    if k < token:
-                        del self._pages[k]
-                return ResultPage("PAYLOAD", self._columns, _rows(batch), token + 1)
+                if self._stream is None:
+                    self._stream = _ArrowStream(self.df, self._tag)
+                table = self._next_rows(max_rows)
             except Exception as e:  # noqa: BLE001
+                self._close()
+                if self.state == CANCELED:  # the cancel stopped our job
+                    return self._eos()
                 self.state = ERROR
                 self.error = str(e)
                 self.finished_at = time.time()
                 raise
+            if table is None:
+                self._close()
+                self._done_token = token
+                self.state = FINISHED
+                self.finished_at = time.time()
+                return self._eos()
+            page = ResultPage(
+                "PAYLOAD", self._columns, None, token + 1, table, self._codecs
+            )
+            self._last = (token, page)
+            return page
+
+    def cancel(self) -> None:
+        super().cancel()
+        if self.state != CANCELED:
+            return
+        # cancel the jobs before taking the lock: a fetch waiting on one of
+        # them then fails at once (and returns EOS) instead of holding it
+        self.df.sparkSession.sparkContext.cancelJobsWithTag(self._tag)
+        with self._lock:
+            self._close()
+            self._last = None
 
 
 class StreamingStatement(Statement):

@@ -20,9 +20,10 @@ server — no extra dependencies, threaded so long statements don't block
 health checks. A notebook client written against the reference's gateway
 can point at this endpoint unchanged for the covered calls.
 
-Serialization: row fields may be timestamps/decimals/arrays — anything not
-JSON-native goes through ``str``, matching the JSON rowFormat's stringly
-encoding.
+Serialization: each page's ``wire()`` view (engine/statement.py) gives
+JSON-ready fields — anything not JSON-native goes through ``str``, matching
+the JSON rowFormat's stringly encoding; batch results are encoded column by
+column from Arrow.
 """
 
 from __future__ import annotations
@@ -60,16 +61,6 @@ _ROUTES = {
         r"/result/(?P<token>\d+)$"
     ),
 }
-
-
-def _jsonable(v):
-    if v is None or isinstance(v, (bool, int, float, str)):
-        return v
-    if isinstance(v, (list, tuple)):
-        return [_jsonable(x) for x in v]
-    if isinstance(v, dict):
-        return {k: _jsonable(x) for k, x in v.items()}
-    return str(v)
 
 
 class Gateway:
@@ -156,22 +147,11 @@ class Gateway:
         return {"status": "CANCELED"}
 
     def fetch_result(self, h: str, op: str, token: int) -> dict:
-        page = self._stmt(h, op).fetch(token)
+        stmt = self._stmt(h, op)
+        page = stmt.fetch(token)
         out = {
             "resultType": page.result_type,
-            "results": {
-                "columns": [
-                    {
-                        "name": c.name,
-                        "logicalType": {"type": c.type, "nullable": c.nullable},
-                    }
-                    for c in page.columns
-                ],
-                "data": [
-                    {"kind": r["kind"], "fields": _jsonable(r["fields"])}
-                    for r in page.data
-                ],
-            },
+            "results": {"columns": stmt.wire_columns(), "data": page.wire()},
         }
         if page.result_type != "EOS":
             nxt = page.next_token if page.next_token is not None else token

@@ -204,6 +204,101 @@ def test_paged_fetch_and_retry(engine):
     engine.execute_sql("DROP TABLE orders_pages")
 
 
+def _await_no_active_jobs(sc, timeout: float) -> list:
+    import time
+
+    t0 = time.time()
+    while (active := list(sc.statusTracker().getActiveJobsIds())) and (
+        time.time() - t0 < timeout
+    ):
+        time.sleep(0.1)
+    return active
+
+
+# the second partition's first row sleeps 15 s: its (prefetched) job is
+# still running when the first page has been served
+SLOW_SECOND_PARTITION = (
+    "SELECT id, reflect('java.lang.Thread', 'sleep', "
+    "CAST(IF(id = {n}, 15000, 0) AS BIGINT)) AS s FROM range(0, {m}, 1, 2)"
+)
+
+
+def test_cancel_mid_drain_stops_the_result_jobs(engine, spark):
+    """Cancelling a half-drained batch statement stops the JVM side at once:
+    the prefetched partition job is cancelled rather than left to finish,
+    and later fetches return EOS."""
+    sc = spark.sparkContext
+    stmt = engine.execute_stream_df(spark.sql(SLOW_SECOND_PARTITION.format(n=150, m=300)))
+    page = stmt.fetch(0)
+    assert page.result_type == "PAYLOAD" and len(page.data) == 100
+    assert sc.statusTracker().getActiveJobsIds()  # partition 2 is prefetching
+    stmt.cancel()
+    assert _await_no_active_jobs(sc, timeout=8.0) == []
+    assert stmt.fetch(1).result_type == "EOS"
+    assert stmt.fetch(0).result_type == "EOS"
+    assert stmt.status() == "CANCELED"
+
+
+def test_engine_close_stops_a_half_drained_batch_statement(spark):
+    sc = spark.sparkContext
+    eng = Engine(spark)
+    stmt = eng.execute_stream_df(spark.sql(SLOW_SECOND_PARTITION.format(n=150, m=300)))
+    assert stmt.fetch(0).result_type == "PAYLOAD"
+    eng.close()
+    assert stmt.status() == "CANCELED"
+    assert _await_no_active_jobs(sc, timeout=8.0) == []
+
+
+def test_cancel_racing_concurrent_fetches(engine, spark):
+    """Eight threads drain one batch statement while it is cancelled: no
+    fetch raises, every thread ends on EOS, and no result job survives."""
+    import sys
+    import threading
+
+    sc = spark.sparkContext
+    stmt = engine.execute_stream_df(spark.sql("SELECT id FROM range(0, 400000, 1, 8)"))
+    errors: list[Exception] = []
+    last: list[str] = []
+    first_page = threading.Event()
+
+    def drain():
+        token, kind = 0, None
+        try:
+            for _ in range(10_000):
+                page = stmt.fetch(token)
+                kind = page.result_type
+                if kind == "EOS":
+                    break
+                first_page.set()
+                token = page.next_token
+        except Exception as e:  # noqa: BLE001
+            errors.append(e)
+        last.append(kind)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=drain) for _ in range(8)]
+        for t in threads:
+            t.start()
+        assert first_page.wait(60)
+        stmt.cancel()
+        for t in threads:
+            t.join(60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors
+    assert last == ["EOS"] * 8
+    assert stmt.status() == "CANCELED"
+    assert _await_no_active_jobs(sc, timeout=8.0) == []
+
+
+def test_zero_column_result_pages_every_row(engine, spark):
+    stmt = engine.execute_stream_df(spark.range(0, 250, 1, 3).select())
+    assert [len(r["fields"]) for r in drain(stmt)] == [0] * 250
+
+
 def test_filesystem_connector_roundtrip(engine, sf_dir, tmp_path):
     engine.execute_sql("SET 'execution.runtime-mode' = 'batch'")
     engine.execute_sql(

@@ -723,3 +723,162 @@ def test_ttl_stateful_stream_serves_changelog_kinds(gw_obj, spark, sf_dir):
     for r in rows:
         first_kind.setdefault(r["fields"][ui], r["kind"])
     assert set(first_kind.values()) == {"INSERT"}
+
+
+# ---------------------------------------------------------------------------
+# Batch results travel as Arrow batches and are encoded column by column.
+# Every case below must give what the row path gave: ``collect()`` values
+# from Statement.fetch, and the row path's JSON encoding over the gateway.
+# ---------------------------------------------------------------------------
+
+
+def _row_jsonable(v):
+    """The gateway's encoding of a ``Row`` value before results moved to
+    Arrow, kept here as the reference."""
+    if v is None or isinstance(v, (bool, int, float, str)):
+        return v
+    if isinstance(v, (list, tuple)):
+        return [_row_jsonable(x) for x in v]
+    if isinstance(v, dict):
+        return {k: _row_jsonable(x) for k, x in v.items()}
+    return str(v)
+
+
+_NULLS = ", ".join(
+    f"CAST(NULL AS {t})"
+    for t in (
+        "TINYINT", "INT", "BIGINT", "FLOAT", "DOUBLE", "DECIMAL(5,2)", "STRING",
+        "BINARY", "BOOLEAN", "DATE", "TIMESTAMP_NTZ", "TIMESTAMP",
+        "INTERVAL DAY TO SECOND", "ARRAY<INT>", "MAP<STRING,INT>", "STRUCT<a:INT>",
+    )
+)
+
+PARITY_CASES = {
+    "integers": (
+        "SELECT CAST(-128 AS TINYINT) a, CAST(32767 AS SMALLINT) b, "
+        "-2147483648 c, 9223372036854775807 d"
+    ),
+    "floats": (
+        "SELECT CAST(0.1 AS FLOAT) a, 0.1D b, CAST('NaN' AS DOUBLE) c, "
+        "CAST('Infinity' AS DOUBLE) d, CAST('-Infinity' AS FLOAT) e, -0.0D f"
+    ),
+    "decimals": (
+        "SELECT CAST(1.5 AS DECIMAL(10,2)) a, CAST(0 AS DECIMAL(20,10)) b, "
+        "CAST(-123456789.123456789 AS DECIMAL(38,18)) c, "
+        "CAST(1e20 AS DECIMAL(38,0)) d"
+    ),
+    "string_binary_boolean": (
+        "SELECT 'héllo ☃ 日本' a, '' b, X'00FF41' c, true d, false e"
+    ),
+    "dates": "SELECT DATE'1969-07-20' a, DATE'0001-01-01' b, DATE'9999-12-31' c",
+    "day_time_intervals": (
+        "SELECT INTERVAL '1 02:03:04.5' DAY TO SECOND a, INTERVAL '-3' HOUR b"
+    ),
+    "timestamp_ntz": (
+        "SELECT * FROM VALUES (TIMESTAMP_NTZ'1969-07-20 20:17:40'), "
+        "(TIMESTAMP_NTZ'1900-03-01 12:00:00.5'), "
+        "(TIMESTAMP_NTZ'1970-01-01 00:00:00.000001'), "
+        "(TIMESTAMP_NTZ'2024-02-29 23:59:59.999999'), "
+        "(TIMESTAMP_NTZ'0001-01-01 00:00:00') t(ts)"
+    ),
+    "timestamp_ltz": (
+        "SELECT TIMESTAMP_LTZ'2024-03-10 07:30:00 UTC' a, "
+        "TIMESTAMP_LTZ'1960-01-01 00:00:00.123 UTC' b"
+    ),
+    "nested": (
+        "SELECT array(1, NULL, 3) a, "
+        "named_struct('x', 1, 'y', array(named_struct('z', DATE'2020-01-01')), "
+        "'w', CAST(NULL AS STRING)) s, "
+        "array(map(1, X'01'), NULL) am, map('k', array(NULL, 'v')) ma"
+    ),
+    "maps": (
+        "SELECT map('n', 1, 'k', 2, 'é☃', 3, 'zz', NULL) s, "
+        "map(5, 'a', -7, 'b', 65536, 'c', 17, 'd') i, "
+        "map(5000000000L, 1, -1L, 2, 3L, 3) l, "
+        "map(1.5D, 1, -0.0D, 2, CAST('NaN' AS DOUBLE), 3) d, "
+        "map(true, 1, false, 2) b, "
+        "map(CAST(1.5 AS FLOAT), 1, CAST('NaN' AS FLOAT), 2, CAST(-7 AS FLOAT), 3) f, "
+        "map(CAST(12345678901234567890.5 AS DECIMAL(38,2)), 1, "
+        "CAST(-98765432109876543210.25 AS DECIMAL(38,2)), 2) bigdec, "
+        "map(CAST(1.25 AS DECIMAL(10,2)), 1, CAST(-3.5 AS DECIMAL(10,2)), 2) dec, "
+        "map(DATE'2020-01-01', 1, DATE'1969-01-01', 2, DATE'2000-02-29', 3) dt, "
+        "map_from_arrays(sequence(1, 40), sequence(1, 40)) big"
+    ),
+    "nulls_everywhere": f"SELECT {_NULLS}",
+    "null_variant_time": (
+        "SELECT NULL AS n, parse_json('{\"a\": [1, 2]}') AS v, TIME'12:34:56.789' AS t"
+    ),
+    "duplicate_names": (
+        "SELECT 1 AS a, 2 AS a, named_struct('a', 1, 'a', 2) s, "
+        "array(named_struct('b', 'x', 'b', 'y')) arr"
+    ),
+    "empty": "SELECT id, CAST(id AS STRING) s FROM range(0)",
+    "multi_partition_batches": (
+        "SELECT id, CAST(id AS STRING) s, id % 3 = 0 b, "
+        "TIMESTAMP_NTZ'2020-01-01 00:00:00' + make_interval(0, 0, 0, 0, 0, 0, id / 7) ts, "
+        "DATE'2020-01-01' + CAST(id % 400 AS INT) d, "
+        "IF(id % 5 = 0, NULL, id * 0.5D) x FROM range(0, 25000, 1, 2)"
+    ),
+}
+
+
+@pytest.fixture()
+def local_tz_new_york():
+    """The gateway process in a non-UTC zone (the Spark session stays UTC)."""
+    import os
+    import time
+
+    old = os.environ.get("TZ")
+    os.environ["TZ"] = "America/New_York"
+    time.tzset()
+    yield
+    if old is None:
+        del os.environ["TZ"]
+    else:
+        os.environ["TZ"] = old
+    time.tzset()
+
+
+@pytest.mark.parametrize("case", list(PARITY_CASES))
+def test_batch_results_match_the_row_path(spark, local_tz_new_york, case):
+    from flink_notebooks_spark.engine.statement import BatchStatement
+    from flink_notebooks_spark.gateway import Gateway
+
+    sql = PARITY_CASES[case]
+    want = [list(r) for r in spark.sql(sql).collect()]
+
+    stmt, native, token = BatchStatement(spark.sql(sql)), [], 0
+    while (page := stmt.fetch(token)).result_type == "PAYLOAD":
+        assert len(page.data) == 100 or len(native) + len(page.data) == len(want)
+        native += [r["fields"] for r in page.data]
+        token = page.next_token
+    # repr: NaN compares equal to itself there, and dict order counts
+    assert repr(native) == repr(want)
+
+    gw = Gateway(spark)
+    h = gw.open_session({})["sessionHandle"]
+    op = gw.submit_stream(h, spark.sql(sql))["operationHandle"]
+    wire, token = [], 0
+    while (out := gw.fetch_result(h, op, token))["resultType"] == "PAYLOAD":
+        assert gw.fetch_result(h, op, token) == out  # idempotent retry
+        wire += out["results"]["data"]
+        token += 1
+    assert out["resultType"] == "EOS"
+    expected = [{"kind": "INSERT", "fields": _row_jsonable(r)} for r in want]
+    assert repr(wire) == repr(expected)
+    if case != "maps":  # date and decimal map keys are not JSON object keys
+        assert json.dumps(wire) == json.dumps(expected)
+    gw.close_session(h)
+
+
+def test_timestamp_ltz_renders_in_the_process_time_zone(spark, local_tz_new_york):
+    """TIMESTAMP (LTZ) values come back as naive wall time in the gateway
+    process's zone, not in ``spark.sql.session.timeZone`` (UTC here)."""
+    import datetime
+
+    from flink_notebooks_spark.engine.statement import BatchStatement
+
+    stmt = BatchStatement(spark.sql("SELECT TIMESTAMP_LTZ'2024-03-10 07:30:00 UTC' t"))
+    page = stmt.fetch(0)
+    assert page.data[0]["fields"] == [datetime.datetime(2024, 3, 10, 3, 30)]
+    assert page.wire()[0]["fields"] == ["2024-03-10 03:30:00"]
