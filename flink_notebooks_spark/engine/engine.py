@@ -14,6 +14,8 @@ SparkSession (= one MiniCluster) but have independent registries/properties.
 
 from __future__ import annotations
 
+import os
+import re
 import tempfile
 import uuid
 
@@ -38,6 +40,32 @@ from .statement import (
 
 BATCH = "batch"
 STREAMING = "streaming"
+
+
+def _location(table: TableDef) -> str | None:
+    """Where a file-backed table keeps its data: the normalized path of a
+    ``filesystem`` table, or ``<servers dir>/<topic>`` for a Kafka topic
+    emulated on files. None when the engine cannot tell (JDBC, CDC, a real
+    broker, Iceberg, datagen)."""
+    if table.connector == "filesystem":
+        path = table.options.get("path")
+    elif table.connector in ("kafka", "upsert-kafka"):
+        from ..sources import kafka
+
+        path = kafka._emulation_dir(table)  # noqa: SLF001
+    else:
+        return None
+    if not path:
+        return None
+    path = re.sub(r"^file:(//)?", "", path)
+    if "://" in path:  # remote store (s3a://...): keep the scheme
+        return path.rstrip("/")
+    return os.path.abspath(path)
+
+
+def _overlaps(a: str, b: str) -> bool:
+    """Equal locations, or one a directory prefix of the other."""
+    return a == b or a.startswith(os.path.join(b, "")) or b.startswith(os.path.join(a, ""))
 
 
 def _cw_final_exprs(out_plan: list) -> list:
@@ -247,11 +275,11 @@ class Engine:
                 # Flink's processing-time attribute → Spark's batch/
                 # micro-batch evaluation time (same semantics: "now" as of
                 # when the row is processed)
-                expr = __import__("re").sub(
+                expr = re.sub(
                     r"\bPROCTIME\s*\(\s*\)",
                     "CURRENT_TIMESTAMP",
                     c.computed_expr,
-                    flags=__import__("re").IGNORECASE,
+                    flags=re.IGNORECASE,
                 )
                 df = df.selectExpr("*", f"{expr} AS {c.name}")
         if streaming and table.watermark is not None and table.watermark.delay:
@@ -282,6 +310,20 @@ class Engine:
         mode (SET 'execution.runtime-mode' arrives mid-session — SURVEY §7.4)."""
         for t in self.tables.values():
             self._register_view(t)
+
+    def _refresh_readers(self, written: TableDef) -> None:
+        """Re-register the tables that may read data just written to
+        ``written``: a batch scan snapshots its file listing at plan time, so
+        every table whose location overlaps the target's (the target, a
+        second table over the same path or emulated topic, a table over a
+        parent directory) would keep serving the stale listing. Tables with
+        no known location are refreshed too, since the engine cannot tell
+        what they read (e.g. a CDC table over a JDBC sink)."""
+        wrote = _location(written)
+        for t in self.tables.values():
+            loc = _location(t)
+            if loc is None or (wrote is not None and _overlaps(loc, wrote)):
+                self._register_view(t)
 
     # -------------------------------------------------------------- execute
     def on_statement_executed(self, callback) -> None:
@@ -392,7 +434,7 @@ class Engine:
             )
         empty = self.spark.createDataFrame([], t.spark_schema())
         fs_sink.write_batch(empty, t, overwrite=True)
-        self._register_view(t)
+        self._refresh_readers(t)
         return ok_statement("OK")
 
     def _exec_analyze_table(self, p: Parsed) -> Statement:
@@ -692,10 +734,13 @@ class Engine:
         as a Spark temp view so it can reference logical tables (themselves
         temp views) — matching Flink's session views in the default
         in-memory catalog; works for batch AND streaming relations."""
-        df = self.spark.sql(
-            rewrite_flink_dialect(p.value)
+        # SQL-text form: Spark resolves the view again at each use, so it
+        # follows a re-registered table (an analyzed DataFrame would freeze
+        # the file listing of this moment)
+        self.spark.sql(
+            f"CREATE OR REPLACE TEMPORARY VIEW `{p.name}` AS "
+            f"{rewrite_flink_dialect(p.value)}"
         )
-        df.createOrReplaceTempView(p.name)
         return ok_statement("OK")
 
     def _exec_drop_view(self, p: Parsed) -> Statement:
@@ -965,12 +1010,12 @@ class Engine:
         return tree
 
     # ---- queries ----------------------------------------------------------
-    _OPT_HINT = __import__("re").compile(
+    _OPT_HINT = re.compile(
         r"([`\w.]+)\s*/\*\+\s*OPTIONS\s*\(([^)]*)\)\s*\*/"
         r"(?:\s+(?:AS\s+)?(?!WHERE\b|GROUP\b|ORDER\b|LIMIT\b|JOIN\b|LEFT\b|"
         r"RIGHT\b|FULL\b|INNER\b|CROSS\b|ON\b|UNION\b|HAVING\b|MATCH_RECOGNIZE\b)"
         r"(\w+))?",
-        __import__("re").IGNORECASE,
+        re.IGNORECASE,
     )
 
     def _apply_options_hints(self, sql: str) -> str:
@@ -1032,14 +1077,14 @@ class Engine:
             return self._start_streaming_select(df)
         return BatchStatement(df)
 
-    _TJOIN = __import__("re").compile(
+    _TJOIN = re.compile(
         r"^\s*SELECT\s+(?P<sel>.*?)\s+FROM\s+(?P<probe>[`\w.]+)"
         r"(?:\s+(?:AS\s+)?(?P<palias>(?!LEFT\b|JOIN\b)\w+))?\s+"
         r"(?P<jtype>LEFT\s+)?JOIN\s+(?P<dim>[`\w.]+)\s+"
         r"FOR\s+SYSTEM_TIME\s+AS\s+OF\s+(?P<tref>[`\w.]+)"
         r"(?:\s+(?:AS\s+)?(?P<dalias>(?!ON\b)\w+))?\s+ON\s+(?P<cond>.+?)"
         r"(?P<rest>\s+(?:WHERE|GROUP|ORDER|LIMIT)\b.*)?\s*;?\s*$",
-        __import__("re").IGNORECASE | __import__("re").DOTALL,
+        re.IGNORECASE | re.DOTALL,
     )
 
     def _try_versioned_temporal_join(self, sql: str) -> DataFrame | None:
@@ -1057,7 +1102,6 @@ class Engine:
         Returns None → caller falls back to snapshot semantics for dims
         without a version column, matching this engine's connector model.
         """
-        import re as _re
 
         from ..operators import asof_join
 
@@ -1077,7 +1121,7 @@ class Engine:
             return (parts[0], parts[-1]) if len(parts) > 1 else ("", parts[-1])
 
         probe_keys, dim_keys = [], []
-        for clause in _re.split(r"\bAND\b", m.group("cond"), flags=_re.IGNORECASE):
+        for clause in re.split(r"\bAND\b", m.group("cond"), flags=re.IGNORECASE):
             eq = clause.split("=")
             if len(eq) != 2:
                 return None  # non-equi temporal condition → fall back
@@ -1114,22 +1158,22 @@ class Engine:
         rest = _sub_code(strip, "", m.group("rest") or "")
         return self.spark.sql(f"SELECT {sel} FROM __tj_result {rest}")
 
-    _OVER_SPEC = __import__("re").compile(
+    _OVER_SPEC = re.compile(
         r"^\s*PARTITION\s+BY\s+(?P<part>.+?)\s+ORDER\s+BY\s+"
         r"(?P<ord>[\w.`]+)(?:\s+ASC)?\s+(?P<mode>RANGE|ROWS)\s+BETWEEN\s+"
         r"(?:(?P<unb>UNBOUNDED)|INTERVAL\s+'(?P<iv>\d+(?:\.\d+)?)'\s+"
         r"(?P<unit>MILLISECOND|SECOND|MINUTE|HOUR|DAY)S?|(?P<nrows>\d+))"
         r"\s+PRECEDING\s+AND\s+CURRENT\s+ROW\s*$",
-        __import__("re").IGNORECASE | __import__("re").DOTALL,
+        re.IGNORECASE | re.DOTALL,
     )
-    _OVER_AGG_ITEM = __import__("re").compile(
+    _OVER_AGG_ITEM = re.compile(
         r"^(?P<func>\w+)\s*\(\s*(?P<arg>\*|[\w.`]+)\s*\)\s*"
         r"\x00W(?P<w>\d+)\x00\s+AS\s+(?P<alias>\w+)$",
-        __import__("re").IGNORECASE,
+        re.IGNORECASE,
     )
-    _OVER_CARRY_ITEM = __import__("re").compile(
+    _OVER_CARRY_ITEM = re.compile(
         r"^(?P<col>[\w.`]+)(?:\s+AS\s+(?P<alias>\w+))?$",
-        __import__("re").IGNORECASE,
+        re.IGNORECASE,
     )
 
     def _state_ttl_s(self) -> int | None:
@@ -1171,20 +1215,19 @@ class Engine:
         batch tables (Spark's native OVER handles those) and for shapes
         outside the canonical form (joins, GROUP BY, subqueries — the
         fallback's error then names the real limitation)."""
-        import re as _re
 
         from pyspark.sql import functions as F
 
         from ..operators.over_window import OverAgg, streaming_over_window
 
-        if not _re.search(r"\bOVER\s*\(", sql, _re.IGNORECASE):
+        if not re.search(r"\bOVER\s*\(", sql, re.IGNORECASE):
             return None
         # mask balanced OVER (...) spans so top-level parsing can't trip on
         # the parens/commas/ORDER BY inside the window specs
         specs: list[str] = []
         masked = []
         i, n = 0, len(sql)
-        over_open = _re.compile(r"\bOVER\s*\(", _re.IGNORECASE)
+        over_open = re.compile(r"\bOVER\s*\(", re.IGNORECASE)
         while i < n:
             m = over_open.search(sql, i)
             if m is None:
@@ -1201,17 +1244,17 @@ class Engine:
             specs.append(sql[m.end() : j - 1].strip())
             i = j
         msql = "".join(masked)
-        q = _re.match(
+        q = re.match(
             r"^\s*SELECT\s+(?P<sel>.+?)\s+FROM\s+(?P<tbl>[\w.`]+)"
             r"(?:\s+(?:AS\s+)?(?P<alias>(?!WHERE\b)\w+))?"
             r"(?:\s+WHERE\s+(?P<where>.+?))?\s*;?\s*$",
             msql,
-            _re.IGNORECASE | _re.DOTALL,
+            re.IGNORECASE | re.DOTALL,
         )
-        if q is None or _re.search(
+        if q is None or re.search(
             r"\b(JOIN|GROUP\s+BY|UNION|HAVING|LIMIT|ORDER\s+BY|MATCH_RECOGNIZE)\b",
             msql,
-            _re.IGNORECASE,
+            re.IGNORECASE,
         ):
             return None  # outside the canonical single-table OVER form
         name = q.group("tbl").split(".")[-1].strip("`")
@@ -1224,7 +1267,7 @@ class Engine:
             return None
         if not base.isStreaming:
             return None  # Spark executes batch OVER natively
-        norm = {_re.sub(r"\s+", " ", s).strip().upper() for s in specs}
+        norm = {re.sub(r"\s+", " ", s).strip().upper() for s in specs}
         if len(norm) > 1:
             raise ValueError(
                 "streaming OVER: all OVER windows in one SELECT must be "
@@ -1242,7 +1285,7 @@ class Engine:
         if alias:
             from .window_sql import _in_string
 
-            _alias_re = _re.compile(rf"\b{_re.escape(alias)}\s*\.\s*")
+            _alias_re = re.compile(rf"\b{re.escape(alias)}\s*\.\s*")
 
             def strip_alias(s: str) -> str:
                 # identifier positions only — never rewrite inside a string
@@ -1291,7 +1334,7 @@ class Engine:
         part_cols = []
         for c in _split_top(sp.group("part"), angle=False):
             c = strip_alias(c).strip().strip("`")
-            if not _re.fullmatch(r"[\w.`]+", c):
+            if not re.fullmatch(r"[\w.`]+", c):
                 raise NotImplementedError(
                     "streaming OVER: PARTITION BY items must be plain "
                     f"columns (got expression {c!r}) — project the "
@@ -1386,15 +1429,14 @@ class Engine:
         - ``EXPLAIN CHANGELOG_MODE q``        → plan + the changelog mode the
           engine would run the statement under (append / update-or-complete /
           batch), derived the same way statement execution derives it."""
-        import re as _re
 
-        m = _re.match(
+        m = re.match(
             r"EXPLAIN\s+(PLAN\s+FOR|CHANGELOG_MODE|ESTIMATED_COST|JSON_EXECUTION_PLAN)\s+(.*)$",
             p.sql,
-            _re.IGNORECASE | _re.DOTALL,
+            re.IGNORECASE | re.DOTALL,
         )
         keyword = (m.group(1).upper().replace(" ", "_") if m else None)
-        body = m.group(2) if m else _re.sub(r"^\s*EXPLAIN\s+", "", p.sql, flags=_re.IGNORECASE)
+        body = m.group(2) if m else re.sub(r"^\s*EXPLAIN\s+", "", p.sql, flags=re.IGNORECASE)
         body = rewrite_flink_dialect(body)
         if keyword == "ESTIMATED_COST":
             return BatchStatement(self.spark.sql(f"EXPLAIN COST {body}"))
@@ -1486,11 +1528,10 @@ class Engine:
         windows flush — Flink's final MAX_WATERMARK.
         Returns None when ``sql`` is not this shape (callers fall through
         to the single-table path / the loud guard)."""
-        import re as _re
 
         from .window_sql import _in_string
 
-        m = _re.match(
+        m = re.match(
             r"^\s*SELECT\s+(?P<sel>.+?)\s+FROM\s+TABLE\s*\(\s*"
             r"(?P<fn>TUMBLE|HOP|CUMULATE|SESSION)\s*\(\s*"
             r"(?:TABLE\s+|DATA\s*=>\s*TABLE\s+)?(?P<tbl>[\w.`]+)"
@@ -1499,7 +1540,7 @@ class Engine:
             r"(?P<tail>[^()]+?)\s*\)\s*\)\s*"
             r"WHERE\s+(?P<where>.+?)\s+GROUP\s+BY\s+(?P<grp>[\w`\s,]+?)\s*;?\s*$",
             sql,
-            _re.IGNORECASE | _re.DOTALL,
+            re.IGNORECASE | re.DOTALL,
         )
         if m is None or len(calls) != len(raw_hits):
             return None  # not this shape / odd CW form → the loud guard
@@ -1524,7 +1565,7 @@ class Engine:
         key_cols = [g for g in grp if g not in ("window_start", "window_end")]
         sel, where, ivl = m.group("sel"), m.group("where"), m.group("tail")
         tc = m.group("tc").strip("`")
-        if _re.search(r"\bCURRENT_WATERMARK\b", sel, _re.IGNORECASE):
+        if re.search(r"\bCURRENT_WATERMARK\b", sel, re.IGNORECASE):
             raise NotImplementedError(
                 "CURRENT_WATERMARK inside the SELECT list of a windowed "
                 "aggregation is not emulated — use it in the WHERE (the "
@@ -1556,16 +1597,16 @@ class Engine:
 
         # classify the SELECT items: window keys pass through, algebraic
         # aggregates get per-batch partials + a driver merge rule
-        AGG = _re.compile(
+        AGG = re.compile(
             r"^(?P<fn>COUNT|SUM|MIN|MAX|AVG)\s*\((?P<arg>.+)\)\s+AS\s+(?P<alias>[`\w]+)$",
-            _re.IGNORECASE | _re.DOTALL,
+            re.IGNORECASE | re.DOTALL,
         )
-        KEY = _re.compile(
+        KEY = re.compile(
             r"^(?P<k>window_start|window_end)(?:\s+AS\s+(?P<alias>[`\w]+))?$",
-            _re.IGNORECASE,
+            re.IGNORECASE,
         )
-        GKEY = _re.compile(
-            r"^(?P<k>[`\w]+)(?:\s+AS\s+(?P<alias>[`\w]+))?$", _re.IGNORECASE
+        GKEY = re.compile(
+            r"^(?P<k>[`\w]+)(?:\s+AS\s+(?P<alias>[`\w]+))?$", re.IGNORECASE
         )
         # out_plan: ('key', 'window_start'|'window_end')
         #         | ('gkey', j)        — j-th extra GROUP BY key
@@ -1597,7 +1638,7 @@ class Engine:
                     "COUNT/SUM/MIN/MAX/AVG aggregates"
                 )
             fn, arg = am.group("fn").upper(), am.group("arg")
-            if _re.match(r"^\s*DISTINCT\b", arg, _re.IGNORECASE):
+            if re.match(r"^\s*DISTINCT\b", arg, re.IGNORECASE):
                 raise NotImplementedError(
                     "CURRENT_WATERMARK windowed aggregation: DISTINCT "
                     "aggregates do not merge across micro-batches — "
@@ -2154,16 +2195,15 @@ class Engine:
         lateness WHERE drops every first-batch row, like Flink). Batch
         queries raise, like Flink outside streaming; joins/aggregates with
         CURRENT_WATERMARK raise with guidance."""
-        import re as _re
 
         from .window_sql import _in_string
 
-        call_re = _re.compile(
-            r"\bCURRENT_WATERMARK\s*\(\s*(?P<col>[`\w.]+)\s*\)", _re.IGNORECASE
+        call_re = re.compile(
+            r"\bCURRENT_WATERMARK\s*\(\s*(?P<col>[`\w.]+)\s*\)", re.IGNORECASE
         )
         raw_hits = [
             m
-            for m in _re.finditer(r"\bCURRENT_WATERMARK\b", sql, _re.IGNORECASE)
+            for m in re.finditer(r"\bCURRENT_WATERMARK\b", sql, re.IGNORECASE)
             if not _in_string(sql, m.start())
         ]
         if not raw_hits:
@@ -2172,19 +2212,19 @@ class Engine:
         win = self._cw_window_agg(sql, call_re, calls, raw_hits)
         if win is not None:
             return win
-        q = _re.match(
+        q = re.match(
             r"^\s*SELECT\s+(?P<sel>.+?)\s+FROM\s+(?P<tbl>[\w.`]+)"
             r"(?:\s+WHERE\s+(?P<where>.+?))?\s*;?\s*$",
             sql,
-            _re.IGNORECASE | _re.DOTALL,
+            re.IGNORECASE | re.DOTALL,
         )
         unsupported_kw = any(
             not _in_string(sql, m.start())
-            for m in _re.finditer(
+            for m in re.finditer(
                 r"\b(JOIN|GROUP\s+BY|UNION|HAVING|LIMIT|ORDER\s+BY|"
                 r"MATCH_RECOGNIZE|OVER)\b",
                 sql,
-                _re.IGNORECASE,
+                re.IGNORECASE,
             )
         )
         if len(calls) != len(raw_hits) or q is None or unsupported_kw:
@@ -2404,11 +2444,7 @@ class Engine:
             kafka.write_batch(df, target, p.overwrite)
         else:
             raise ValueError(f"batch INSERT into connector {target.connector!r} unsupported")
-        # data landed — re-materialize ALL views, not just the target's: a
-        # batch scan snapshots its file listing at plan time, so any other
-        # table over the same path/topic (e.g. a second consumer of an
-        # emulated Kafka topic) would keep serving the stale listing
-        self._refresh_views()
+        self._refresh_readers(target)
         return ok_statement(f"INSERT {'OVERWRITE' if p.overwrite else 'INTO'} {p.name}: OK")
 
     def _exec_statement_set(self, p: Parsed) -> Statement:
@@ -2416,9 +2452,8 @@ class Engine:
         reference's multi-sink job (SURVEY.md D8, detected at
         jobMonitorProvider.ts:46-48). Each INSERT runs as its own Spark job
         (streaming inserts start their own queries and keep running)."""
-        import re as _re
 
-        m = _re.search(r"BEGIN\b(.*?)\bEND\s*$", p.sql, _re.IGNORECASE | _re.DOTALL)
+        m = re.search(r"BEGIN\b(.*?)\bEND\s*$", p.sql, re.IGNORECASE | re.DOTALL)
         if not m:
             raise ValueError("EXECUTE STATEMENT SET requires BEGIN ... END")
         inner = [s for s in split_statements(m.group(1)) if s]

@@ -912,6 +912,24 @@ def _embeddings_rowcount(spark, sf_dir) -> int:
         return load_table(spark, sf_dir, "embeddings").count()
 
 
+def _shard_pairs(pdf, bucket_pairs):
+    """One hash shard of LSH bucket rows → the concatenated (a, b) pairs of
+    its buckets. ``dropna=False`` keeps a bucket whose key holds a null,
+    as the Spark ``groupBy`` this loop replaced does."""
+    import pandas as pd
+
+    outs = [
+        bucket_pairs(key, grp)
+        for key, grp in pdf.groupby(
+            ["band", "sig", "i", "j"], sort=False, dropna=False
+        )
+    ]
+    outs = [o for o in outs if len(o)]
+    if not outs:
+        return pd.DataFrame({"a": [], "b": []}, dtype="int64")
+    return pd.concat(outs, ignore_index=True)
+
+
 def _lsh_signatures(spark, sf_dir, bits: int, bands: int):
     """Map-only signature stage: one n×d · d×planes BLAS product per Arrow
     batch, emitting a COMPACT row per vector — the int8-quantized vector
@@ -1193,16 +1211,6 @@ def cluster_pairs_lsh_df(
     # repartition produced, just without ~40 function dispatches per task.
     n_shards = 4 * spark.sparkContext.defaultParallelism
 
-    def shard_pairs(pdf):
-        outs = [
-            bucket_pairs(key, grp)
-            for key, grp in pdf.groupby(["band", "sig", "i", "j"], sort=False)
-        ]
-        outs = [o for o in outs if len(o)]
-        if not outs:
-            return pd.DataFrame({"a": [], "b": []}, dtype="int64")
-        return pd.concat(outs, ignore_index=True)
-
     cand = (
         buckets.withColumn(
             "bshard",
@@ -1212,7 +1220,9 @@ def cluster_pairs_lsh_df(
         )
         .repartition(n_shards, "bshard")
         .groupBy("bshard")
-        .applyInPandas(lambda key, pdf: shard_pairs(pdf), "a long, b long")
+        .applyInPandas(
+            lambda key, pdf: _shard_pairs(pdf, bucket_pairs), "a long, b long"
+        )
     )
     # exact fp64 verification on the candidate set only — candidates are
     # proportional to true near-duplicates, so this join-back moves orders
@@ -3384,9 +3394,14 @@ def _word_freq_joined(spark, sf_dir, broadcast_cap: int = TF_BROADCAST_CAP):
     tf_quality_features and unigram_logprob both consume this pass, and a
     real pipeline at scale would likewise share the scan across features
     rather than recompute the frequency join per metric."""
+    from pyspark import StorageLevel
+
     key = (spark.sparkContext.applicationId, sf_dir, broadcast_cap)
     hit_df = _WORD_FREQ_MEMO.get(key)
     if hit_df is not None:
+        # clearCache() or unpersist() drop the cache, not the memo entry
+        if hit_df.storageLevel == StorageLevel.NONE:
+            persist_for_self_join(hit_df)
         return hit_df
     t = tokenized_docs(spark, sf_dir)
     w = t.select("doc_id", F.explode("ws").alias("word"))

@@ -747,6 +747,138 @@ def test_insert_with_explicit_column_list(engine, tmp_path):
     assert rows[0]["fields"] == [None, "hello"]
 
 
+def _fs_table(engine, name, path, cols="id INT, s STRING"):
+    engine.execute_sql(
+        f"CREATE TABLE {name} ({cols}) WITH ('connector'='filesystem',"
+        f"'path'='{path}','format'='parquet')"
+    )
+
+
+def _ids(engine, table):
+    rows = drain(engine.execute_sql(f"SELECT id FROM {table} ORDER BY id"))
+    return [r["fields"][0] for r in rows]
+
+
+def test_view_sees_rows_a_later_insert_added(engine, tmp_path):
+    """A session view is resolved again at each use, so it follows the
+    re-registered table after an INSERT instead of the file listing of
+    the moment it was created."""
+    engine.execute_sql("SET 'execution.runtime-mode' = 'batch'")
+    _fs_table(engine, "vs", tmp_path / "vs")
+    engine.execute_sql("INSERT INTO vs VALUES (1, 'x')")
+    engine.execute_sql("CREATE VIEW vs_all AS SELECT * FROM vs")
+    assert _ids(engine, "vs_all") == [1]
+    engine.execute_sql("INSERT INTO vs VALUES (2, 'y')")
+    assert _ids(engine, "vs") == [1, 2]
+    assert _ids(engine, "vs_all") == [1, 2]
+
+
+def test_location_normalizes_paths_and_topics():
+    from flink_notebooks_spark.engine.engine import _location, _overlaps
+
+    def table(connector, **options):
+        opts = {"connector": connector, **options}
+        with_ = ",".join(f"'{k}'='{v}'" for k, v in opts.items())
+        return parse_statement(f"CREATE TABLE t (id INT) WITH ({with_})").table
+
+    assert _location(table("filesystem", path="file:///d/x/")) == "/d/x"
+    assert _location(table("filesystem", path="file:/d/./x")) == "/d/x"
+    assert _location(table("filesystem", path="s3a://b/x/")) == "s3a://b/x"
+    emulated = table(
+        "kafka", topic="tp", **{"properties.bootstrap.servers": "file:///brk"}
+    )
+    assert _location(emulated) == "/brk/tp"
+    broker = table("kafka", topic="tp", **{"properties.bootstrap.servers": "h:9092"})
+    assert _location(broker) is None
+    assert _location(table("datagen")) is None
+    assert _overlaps("/d/x", "/d/x") and _overlaps("/d", "/d/x") and _overlaps("/d/x/y", "/d/x")
+    assert not _overlaps("/d/x", "/d/xy") and not _overlaps("/d/x", "/d/y")
+
+
+def test_insert_refreshes_only_tables_over_the_written_location(
+    engine, tmp_path, monkeypatch
+):
+    """An INSERT re-registers the target, a second table over the same path
+    and a table over its parent directory; tables elsewhere keep their
+    registration. The two readers see the new rows."""
+    engine.execute_sql("SET 'execution.runtime-mode' = 'batch'")
+    lake = tmp_path / "lake"
+    _fs_table(engine, "rt_sink", lake / "dt=1")
+    _fs_table(engine, "rt_twin", f"file://{lake}/dt=1/")
+    _fs_table(engine, "rt_lake", lake)
+    _fs_table(engine, "rt_sibling", tmp_path / "lake_other")
+    _fs_table(engine, "rt_prefix", f"{lake}/dt=10")
+    engine.execute_sql("INSERT INTO rt_sink VALUES (1, 'a')")
+    assert _ids(engine, "rt_lake") == [1]
+
+    registered = []
+    register = engine._register_view
+    monkeypatch.setattr(
+        engine, "_register_view", lambda t: (registered.append(t.name), register(t))
+    )
+    engine.execute_sql("INSERT INTO rt_sink VALUES (2, 'b')")
+    assert sorted(registered) == ["rt_lake", "rt_sink", "rt_twin"]
+    assert _ids(engine, "rt_twin") == [1, 2]
+    assert _ids(engine, "rt_lake") == [1, 2]
+
+
+def test_insert_still_refreshes_tables_with_no_known_location(
+    engine, tmp_path, monkeypatch
+):
+    engine.execute_sql("SET 'execution.runtime-mode' = 'batch'")
+    _fs_table(engine, "nl_sink", tmp_path / "nl")
+    _fs_table(engine, "nl_other", tmp_path / "elsewhere")
+    engine.execute_sql(
+        """CREATE TABLE nl_gen (id INT) WITH ('connector'='datagen',
+           'number-of-rows'='3','fields.id.kind'='sequence',
+           'fields.id.start'='1','fields.id.end'='3')"""
+    )
+    registered = []
+    register = engine._register_view
+    monkeypatch.setattr(
+        engine, "_register_view", lambda t: (registered.append(t.name), register(t))
+    )
+    engine.execute_sql("INSERT INTO nl_sink SELECT id, 'g' FROM nl_gen")
+    assert sorted(registered) == ["nl_gen", "nl_sink"]
+    assert _ids(engine, "nl_sink") == [1, 2, 3]
+
+
+def test_benchmark_shaped_insert_runs_at_most_three_jobs(engine, spark, sf_dir, tmp_path):
+    """INSERT ... SELECT ... GROUP BY into a sink in a session of nine file
+    tables: the query, the write and the sink's re-registration (Parquet
+    schema inference). Re-registering every table ran one inference job
+    per table on top."""
+    engine.execute_sql("SET 'execution.runtime-mode' = 'batch'")
+    tables = {
+        "region": "r_regionkey INT",
+        "nation": "n_nationkey INT",
+        "customer": "c_custkey BIGINT",
+        "supplier": "s_suppkey BIGINT",
+        "part": "p_partkey BIGINT",
+        "orders": "o_orderkey BIGINT, o_totalprice DOUBLE, o_orderpriority STRING",
+        "lineitem": "l_orderkey BIGINT",
+        "events": "event_id BIGINT",
+        "documents": "doc_id BIGINT",
+    }
+    for name, cols in tables.items():
+        _fs_table(engine, f"bs_{name}", f"{sf_dir}/{name}.parquet", cols)
+    _fs_table(engine, "bs_sink", tmp_path / "sink", "p STRING, n BIGINT, total DOUBLE")
+    insert = (
+        "INSERT INTO bs_sink SELECT o_orderpriority, COUNT(*), SUM(o_totalprice) "
+        "FROM bs_orders GROUP BY o_orderpriority"
+    )
+    engine.execute_sql(insert)  # the sink's files exist from here on
+    sc = spark.sparkContext
+    sc.setJobGroup("bs_insert", "benchmark-shaped INSERT")
+    try:
+        engine.execute_sql(insert)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert 1 <= len(sc.statusTracker().getJobIdsForGroup("bs_insert")) <= 3
+    rows = drain(engine.execute_sql("SELECT SUM(n) FROM bs_sink"))
+    assert rows[0]["fields"][0] == 2 * 1500
+
+
 def test_create_table_duplicate_raises(engine):
     engine.execute_sql("SET 'execution.runtime-mode' = 'batch'")
     ddl = (

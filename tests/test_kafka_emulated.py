@@ -57,6 +57,26 @@ def test_kafka_roundtrip_insert_then_read(engine, tmp_path):
     assert [r["fields"][0] for r in rows] == list(range(1, 8))
 
 
+def test_kafka_second_table_sees_each_insert_without_set(engine, tmp_path):
+    """Two tables over one emulated topic: every INSERT into one re-registers
+    the other (same topic directory), so a SELECT from it sees the new
+    records with no SET in between."""
+    engine.execute_sql("SET 'execution.runtime-mode' = 'batch'")
+    servers = f"file://{tmp_path}/broker"
+    for t in ("kt_writer", "kt_reader"):
+        engine.execute_sql(
+            f"""CREATE TABLE {t} (id INT) WITH ('connector'='kafka',
+                'topic'='t_two', 'properties.bootstrap.servers'='{servers}',
+                'format'='json', 'scan.startup.mode'='earliest-offset')"""
+        )
+    seen = []
+    for i in (1, 2):
+        engine.execute_sql(f"INSERT INTO kt_writer VALUES ({i})")
+        rows = drain(engine.execute_sql("SELECT id FROM kt_reader ORDER BY id"))
+        seen.append([r["fields"][0] for r in rows])
+    assert seen == [[1], [1, 2]]
+
+
 def test_kafka_streaming_read(engine, tmp_path):
     """Produce to the topic, then consume it as an unbounded streaming
     SELECT — the reference's primary streaming-source shape."""

@@ -348,6 +348,34 @@ def test_lsh_bits_scale_with_corpus():
     assert lsh_bits_for(10**12) == 16  # sigpack lane cap
 
 
+def test_lsh_shard_kernel_keeps_null_keyed_buckets():
+    """The per-shard bucket loop groups like Spark's groupBy: a bucket
+    whose key holds a null still reaches the bucket kernel."""
+    import pandas as pd
+
+    from flink_notebooks_spark.queries.llm import _shard_pairs
+
+    pdf = pd.DataFrame(
+        {
+            "band": [0, 0, 1, 1],
+            "sig": [5, 5, None, None],
+            "i": [0, 0, 0, 0],
+            "j": [0, 0, 0, 0],
+            "vec_id": [1, 2, 3, 4],
+        }
+    )
+    seen = []
+
+    def kernel(key, grp):
+        seen.append(key)
+        ids = sorted(grp["vec_id"])
+        return pd.DataFrame({"a": [ids[0]], "b": [ids[-1]]})
+
+    out = _shard_pairs(pdf, kernel)
+    assert len(seen) == 2 and any(pd.isna(k[1]) for k in seen)
+    assert sorted(zip(out["a"], out["b"])) == [(1, 2), (3, 4)]
+
+
 @pytest.mark.slow
 def test_embedding_clusters_lsh_matches_exact_labels(spark, sf_dir):
     """The banded-LSH default geometry (6 bits × 80 bands, seed 0) has

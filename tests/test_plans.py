@@ -530,6 +530,18 @@ def test_source_overlap_shares_vocab_cache(spark, sf_dir):
     assert "CartesianProduct" not in p
 
 
+def test_word_freq_cache_is_disk_only_again_after_clear_cache(spark, sf_dir):
+    """clearCache() drops the memoized word-frequency join's blocks; the next
+    query re-persists it at DISK_ONLY instead of serving it uncached."""
+    from pyspark import StorageLevel
+
+    from flink_notebooks_spark.queries.llm import _word_freq_joined
+
+    _word_freq_joined(spark, sf_dir)
+    spark.catalog.clearCache()
+    assert _word_freq_joined(spark, sf_dir).storageLevel == StorageLevel.DISK_ONLY
+
+
 def test_corpus_sized_caches_are_disk_only(spark, sf_dir):
     """Caches holding MULTIPLE rows per corpus document (LSH bands 32×,
     SimHash blocks 4×, winnowing fingerprints, the per-token-occurrence
