@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import os
 import re
+import shutil
 import tempfile
 import uuid
 
@@ -2483,6 +2484,8 @@ class Engine:
                     s.cancel()
                 except Exception:  # noqa: BLE001
                     pass
+        # the session's streaming checkpoints and state die with it
+        shutil.rmtree(self._checkpoint_root, ignore_errors=True)
         try:
             from ..io import STATE_TTL_CONF
 

@@ -16,11 +16,48 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLE: dict[str, str] = {}
+
+# name -> (application id, key, value): one slot per shared cache
+_SESSION_CACHES: dict[str, tuple] = {}
+
+
+def session_cache(spark, name: str, key, build, level: StorageLevel | None = None):
+    """The value ``build()`` made for ``key`` in this Spark application,
+    shared by every query that reads the cache ``name``.
+
+    Each name keeps one slot: the latest key of the live session. A miss
+    (another key, or an entry left by a stopped session) unpersists the
+    value it replaces and stores ``build()``'s result, persisted at
+    ``level`` when one is declared. A hit whose blocks ``clearCache()`` or
+    ``unpersist()`` dropped (``storageLevel`` NONE) is persisted again at
+    ``level`` instead of being served uncached. Values built without a
+    level (``localCheckpoint`` tuples) are stored as they are.
+
+    There is no lock: concurrent callers (``warm_shared_caches``) each use
+    a different name."""
+    app = spark.sparkContext.applicationId
+    slot = _SESSION_CACHES.get(name)
+    if slot is not None and slot[:2] == (app, key):
+        value = slot[2]
+        if level is not None and value.storageLevel == StorageLevel.NONE:
+            value.persist(level)
+        return value
+    if slot is not None and level is not None:
+        try:
+            slot[2].unpersist()
+        except Exception:  # noqa: BLE001
+            pass  # session already stopped; blocks are gone with it
+    value = build()
+    if level is not None:
+        value = value.persist(level)
+    _SESSION_CACHES[name] = (app, key, value)
+    return value
 
 
 def query(name: str, oracle: str | None = None):

@@ -37,7 +37,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..io import load_table
-from ._registry import query
+from ._registry import query, session_cache
 from .llm import (
     _SQL_G8_CTES,
     _SW,
@@ -45,7 +45,6 @@ from .llm import (
     NGRAMS,
     SQL_WORDS,
     WORDS,
-    _memo_put,
     hashed_g8,
     tokenized_docs,
 )
@@ -67,32 +66,30 @@ BM25_QUERY_TERMS = [
 ]
 _SQL_QT_VALUES = ", ".join(f"({q},'{t}')" for q, t in BM25_QUERY_TERMS)
 
-_BM25_POST_MEMO: dict = {}
-
 
 def _bm25_postings(spark, sf_dir):
     """(doc_id, term, dl, tf) for query-matched terms only, PERSISTED +
-    memoized per (session, dataset): the df branch and the scoring branch
-    both read it, so the corpus-side explode runs ONCE — without the memo
+    session-cached per dataset: the df branch and the scoring branch
+    both read it, so the corpus-side explode runs ONCE — without the cache
     the plan re-scans the token cache and re-aggregates postings per branch
     (two full corpus passes at 100 TB)."""
     from pyspark import StorageLevel
 
-    key = (spark.sparkContext.applicationId, sf_dir, "bm25post")
-    post = _BM25_POST_MEMO.get(key)
-    if post is None:
+    def build():
         t = tokenized_docs(spark, sf_dir)
         qt = spark.createDataFrame(BM25_QUERY_TERMS, "query_id int, term string")
-        post = (
+        return (
             t.select(
                 "doc_id", F.size("ws").alias("dl"), F.explode("ws").alias("term")
             )
             .join(F.broadcast(qt.select("term").distinct()), "term")
             .groupBy("doc_id", "term", "dl")
             .agg(F.count("*").alias("tf"))
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        _memo_put(_BM25_POST_MEMO, key, post)
-    return post
+        )
+
+    return session_cache(
+        spark, "bm25_postings", sf_dir, build, StorageLevel.MEMORY_AND_DISK
+    )
 
 
 # shared CTE chain ending in ranked(query_id, doc_id, score, brnk) —
@@ -335,8 +332,8 @@ def rrf_fusion(spark, sf_dir):
 
     Scale plan: everything downstream of the shared shortlist is
     queries × {HYBRID_SHORTLIST} rows — the whole fusion is a constant-size
-    epilogue riding `_hybrid_fin` (which itself rides the memoized postings
-    cache; no new corpus pass). Determinism: ranks are integers, each
+    epilogue riding `_hybrid_fin` (which itself rides the session-cached
+    postings; no new corpus pass). Determinism: ranks are integers, each
     reciprocal is one IEEE division, their sum is a single fixed-order
     addition, rounded to 9 dp; ties order by doc_id."""
     fin = _hybrid_fin(spark, sf_dir)
@@ -1180,27 +1177,24 @@ def token_ngram_novelty(spark, sf_dir):
 # source's word DISTRIBUTION diverges from the corpus; this measures how
 # much raw VOCABULARY source pairs share — near-identical vocabularies mark
 # redundant sources (mirror feeds, re-crawls) before any per-doc dedup runs.
-_SOURCE_VOCAB_MEMO: dict = {}
-
-
 def _source_vocab(spark, sf_dir):
-    """(source, word) distinct vocabulary table, persisted + memoized —
+    """(source, word) distinct vocabulary table, persisted + session-cached —
     referenced THREE times by `source_overlap_jaccard` (both join sides +
     the size table); without the persist the distinct-aggregate subtree is
     recomputed per reference (three corpus scans at 100 TB)."""
     from pyspark import StorageLevel
 
-    key = (spark.sparkContext.applicationId, sf_dir, "srcvocab")
-    v = _SOURCE_VOCAB_MEMO.get(key)
-    if v is None:
-        d = load_table(spark, sf_dir, "documents")
-        v = (
-            d.select("source", F.explode(F.expr(WORDS)).alias("word"))
+    return session_cache(
+        spark,
+        "source_vocab",
+        sf_dir,
+        lambda: (
+            load_table(spark, sf_dir, "documents")
+            .select("source", F.explode(F.expr(WORDS)).alias("word"))
             .distinct()
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        _memo_put(_SOURCE_VOCAB_MEMO, key, v)
-    return v
+        ),
+        StorageLevel.MEMORY_AND_DISK,
+    )
 
 
 @query(

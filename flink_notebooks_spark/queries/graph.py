@@ -39,7 +39,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ._registry import query
+from ._registry import query, session_cache
 from .llm import (
     SQL_JACCARD_CAND_CTES,
     SQL_SHINGLE_CTES,
@@ -98,19 +98,15 @@ def _pagerank_oracle() -> str:
     """
 
 
-_GRAPH_MEMO: dict = {}
-
-
 def _dedup_graph(spark, sf_dir):
     """(und, deg): the undirected edge list and its degree table,
     localCheckpoint()ed (lazily — the first consumer action materializes
-    each) and memoized per (session, dataset) — PageRank and triangles
+    each) and session-cached per dataset — PageRank and triangles
     consume the same two tables, so they are built exactly once per
-    session (checkpointed RDD storage is reclaimed by GC on eviction,
-    so the memo only keeps the latest dataset per live session)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _GRAPH_MEMO.get(key)
-    if hit is None:
+    session (checkpointed RDD storage is reclaimed by GC once the session
+    cache drops the entry; ``clearCache()`` does not touch it)."""
+
+    def build():
         pairs = jaccard_pairs_df(spark, sf_dir).select("a", "b")
         # (a,b) pairs are unique with a<b, so the two directions are
         # disjoint — union needs no distinct
@@ -127,11 +123,9 @@ def _dedup_graph(spark, sf_dir):
             .agg(F.count("*").alias("deg"))
             .localCheckpoint(eager=False)
         )
-        for stale in [k for k in _GRAPH_MEMO if k[0] == key[0] and k != key]:
-            _GRAPH_MEMO.pop(stale)
-        hit = (und, deg)
-        _GRAPH_MEMO[key] = hit
-    return hit
+        return und, deg
+
+    return session_cache(spark, "dedup_graph", sf_dir, build)
 
 
 @query("dedup_graph_pagerank", oracle=_pagerank_oracle())

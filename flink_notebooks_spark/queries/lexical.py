@@ -40,7 +40,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from ._registry import query
+from ._registry import query, session_cache
 from .corpus import _CMS_HASH, _SQL_CMS_PROBES, CMS_D, CMS_PROBES, CMS_W
 from .llm import SQL_WORDS, TOPK_K, tokenized_docs
 
@@ -258,8 +258,6 @@ def _bpe_merge_expr(left: str, right: str, src: str = "syms") -> str:
     )
 
 
-_BPE_MEMO: dict = {}
-
 # Ranked candidates fetched per round — the ceiling on one round's batch.
 _BPE_CAND_K = 64
 # Rounds the last _bpe_merges run took (set for the job-count pin in
@@ -384,30 +382,25 @@ def _bpe_init_syms():
 def _bpe_merges(spark, sf_dir) -> tuple:
     """(merges, vocab_syms): the trained merge list [(rank, left, right,
     merged, pair_count)] AND the fully-merged vocabulary symbol table
-    (word, n, syms), memoized per (session, dataset) — bpe_train renders
+    (word, n, syms), session-cached per dataset — bpe_train renders
     the list, bpe_apply joins the table; neither replays the fold."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _BPE_MEMO.get(key)
-    if hit is not None:
-        return hit
-    t = tokenized_docs(spark, sf_dir)
-    wc = (
-        t.select(F.explode("ws").alias("word"))
-        .groupBy("word")
-        .agg(F.count("*").alias("n"))
-    )
-    init = wc.select("word", "n", _bpe_init_syms().alias("syms"))
-    # localCheckpoint = REPLACE the logical plan with a (checkpointed) RDD:
-    # cuts both recompute lineage and the exponential projection-collapsed
-    # fold expression (see bpe_train docstring). LAZY on purpose — the next
-    # iteration's pair-count action materializes it, so each merge costs
-    # one Spark job instead of two (measured 14.0 s -> 6.6 s at sf0.1).
-    merges, cur = _bpe_train_loop(init, BPE_MERGES)
-    for stale in [k for k in _BPE_MEMO if k[0] == key[0] and k != key]:
-        _BPE_MEMO.pop(stale)
-    hit = (merges, cur)
-    _BPE_MEMO[key] = hit
-    return hit
+
+    def build():
+        t = tokenized_docs(spark, sf_dir)
+        wc = (
+            t.select(F.explode("ws").alias("word"))
+            .groupBy("word")
+            .agg(F.count("*").alias("n"))
+        )
+        init = wc.select("word", "n", _bpe_init_syms().alias("syms"))
+        # localCheckpoint = REPLACE the logical plan with a (checkpointed) RDD:
+        # cuts both recompute lineage and the exponential projection-collapsed
+        # fold expression (see bpe_train docstring). LAZY on purpose — the next
+        # iteration's pair-count action materializes it, so each merge costs
+        # one Spark job instead of two (measured 14.0 s -> 6.6 s at sf0.1).
+        return _bpe_train_loop(init, BPE_MERGES)
+
+    return session_cache(spark, "bpe_merges", sf_dir, build)
 
 
 def _bpe_train_loop(init, n_merges: int) -> tuple:
@@ -924,8 +917,8 @@ def bpe_apply(spark, sf_dir):
     pure-Python application of the same merge table.
 
     Scale: training already folded the merges over the vocabulary table
-    and the memo keeps the RESULT (word → final symbol array) — apply is
-    ONE word-keyed join carrying each word's subword count onto the
+    and the session cache keeps the RESULT (word → final symbol array) —
+    apply is ONE word-keyed join carrying each word's subword count onto the
     corpus explode plus a doc-keyed aggregate; zero merge stages replay,
     and the corpus is touched once here regardless of the merge count.""".format(
         m=BPE_MERGES

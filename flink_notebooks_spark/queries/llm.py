@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..io import load_table
-from ._registry import dsum, query, sql_dsum
+from ._registry import dsum, query, session_cache, sql_dsum
 
 # ---------------------------------------------------------------------------
 # shared text expressions (identical semantics mirrored in each oracle)
@@ -164,25 +164,24 @@ def shingled_docs(spark, sf_dir) -> DataFrame:
 JACCARD_DF_CAP = 64
 
 
-_JACCARD_CAND_MEMO: dict = {}
-
-
 def _shingle_candidates(spark, sf_dir):
     """(docs, candidates): the shingled corpus plus the capped inverted-index
-    candidate pair set, PERSISTED + memoized per (session, dataset) — the
+    candidate pair set, PERSISTED + session-cached per dataset — the
     jaccard and containment operators score the same candidates, so the
     self-join runs once, not once per operator."""
     from pyspark import StorageLevel
 
     docs = shingled_docs(spark, sf_dir).filter(F.size("shingles") > 0)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cand = _JACCARD_CAND_MEMO.get(key)
-    if cand is None:
+
+    def build():
         sh = docs.select("doc_id", F.explode("shingles").alias("s")).select(
             "doc_id", F.xxhash64("s").alias("h")
         )
-        cand = _jaccard_candidates(sh).persist(StorageLevel.MEMORY_AND_DISK)
-        _memo_put(_JACCARD_CAND_MEMO, key, cand)
+        return _jaccard_candidates(sh)
+
+    cand = session_cache(
+        spark, "jaccard_candidates", sf_dir, build, StorageLevel.MEMORY_AND_DISK
+    )
     return docs, cand
 
 
@@ -684,25 +683,6 @@ def embedding_cosine_pairs(spark, sf_dir):
     ).orderBy("a", "b")
 
 
-_COSINE_PAIRS_MEMO: dict = {}
-
-
-def _memo_put(memo: dict, key: tuple, df: DataFrame) -> None:
-    """Bound a per-session DataFrame memo: keep only the latest dataset per
-    live session.
-
-    Long-lived sessions touching many datasets would otherwise accumulate
-    persisted blocks and dead DataFrame references indefinitely; evicting the
-    displaced entry unpersists its cached blocks eagerly."""
-    app = key[0]
-    for stale in [k for k in memo if k[0] == app and k != key]:
-        try:
-            memo.pop(stale).unpersist()
-        except Exception:
-            pass  # session already stopped; blocks are gone with it
-    memo[key] = df
-
-
 def cosine_pairs_df(spark, sf_dir) -> DataFrame:
     """Exact all-pairs cosine ≥ 0.4 via *block* matrix multiplication.
 
@@ -717,14 +697,28 @@ def cosine_pairs_df(spark, sf_dir) -> DataFrame:
 
     Returns unordered (a < b) pairs with ``sim``; shared by
     ``embedding_cosine_pairs`` and ``dedup_embedding_clusters``.
+
+    Persisted + session-cached (the cache manager can't plan-match two
+    applyInPandas calls — each builds a fresh Python closure — so the
+    session cache hands both consumers the SAME DataFrame): the GEMM runs
+    once per (session, dataset). The pair set is a vanishing fraction of
+    the corpus — MEMORY_AND_DISK spills rather than OOMs.
     """
+    from pyspark import StorageLevel
+
+    return session_cache(
+        spark,
+        "cosine_pairs",
+        sf_dir,
+        lambda: _cosine_gemm(spark, sf_dir),
+        StorageLevel.MEMORY_AND_DISK,
+    )
+
+
+def _cosine_gemm(spark, sf_dir) -> DataFrame:
+    """The uncached block-GEMM plan behind ``cosine_pairs_df``."""
     import numpy as np
     import pandas as pd
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _COSINE_PAIRS_MEMO.get(key)
-    if hit is not None:
-        return hit
 
     nb = _gemm_blocks(spark)
     emb = load_table(spark, sf_dir, "embeddings")
@@ -775,23 +769,12 @@ def cosine_pairs_df(spark, sf_dir) -> DataFrame:
     # ClusteredDistribution is already satisfied, so no AQE-coalescible
     # exchange is inserted and every GEMM task can run in parallel (the
     # shuffle is tiny in bytes but each task is a dense matmul)
-    from pyspark import StorageLevel
-
-    # persisted + memoized (the cache manager can't plan-match two
-    # applyInPandas calls — each builds a fresh Python closure — so the
-    # memo hands both consumers the SAME DataFrame): the GEMM runs once
-    # per (session, dataset) across embedding_cosine_pairs and
-    # dedup_embedding_clusters. The pair set is a vanishing fraction of
-    # the corpus — MEMORY_AND_DISK spills rather than OOMs.
-    out = (
+    return (
         tasks_a.unionByName(tasks_b)
         .repartition(nb * (nb + 1) // 2, "bi", "bj")
         .groupBy("bi", "bj")
         .applyInPandas(gemm, "a long, b long, sim double")
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    _memo_put(_COSINE_PAIRS_MEMO, key, out)
-    return out
 
 
 @query(
@@ -3378,9 +3361,6 @@ def tf_quality_features(spark, sf_dir):
 TF_BROADCAST_CAP = 2_000_000
 
 
-_WORD_FREQ_MEMO: dict = {}
-
-
 def _word_freq_joined(spark, sf_dir, broadcast_cap: int = TF_BROADCAST_CAP):
     """(doc_id, word, n_occ): every word occurrence joined to its corpus
     frequency — the shared first pass of the corpus-frequency features.
@@ -3390,34 +3370,31 @@ def _word_freq_joined(spark, sf_dir, broadcast_cap: int = TF_BROADCAST_CAP):
     the residual tail resolves through an ordinary shuffle join carrying
     only the tail occurrences. Exact at any cap; tests pin cap-invariance.
 
-    Memoized + persisted per (session, dataset, cap) like the cosine GEMM:
+    Session-cached + persisted per (dataset, cap) like the cosine GEMM:
     tf_quality_features and unigram_logprob both consume this pass, and a
     real pipeline at scale would likewise share the scan across features
-    rather than recompute the frequency join per metric."""
+    rather than recompute the frequency join per metric.
+
+    One row per token OCCURRENCE — larger than the corpus itself; each
+    consumer aggregates it in a single streaming pass → DISK_ONLY, never
+    resident (persist_for_self_join rationale; the cache saves the
+    recompute, disk saves the memory)."""
     from pyspark import StorageLevel
 
-    key = (spark.sparkContext.applicationId, sf_dir, broadcast_cap)
-    hit_df = _WORD_FREQ_MEMO.get(key)
-    if hit_df is not None:
-        # clearCache() or unpersist() drop the cache, not the memo entry
-        if hit_df.storageLevel == StorageLevel.NONE:
-            persist_for_self_join(hit_df)
-        return hit_df
-    t = tokenized_docs(spark, sf_dir)
-    w = t.select("doc_id", F.explode("ws").alias("word"))
-    freq = w.groupBy("word").agg(F.count("*").alias("n_occ"))
-    # deterministic top-K head; above the TakeOrdered threshold this compiles
-    # to a parallel range sort + global limit, never a driver collect
-    head = freq.orderBy(F.desc("n_occ"), "word").limit(broadcast_cap)
-    hit = w.join(F.broadcast(head), "word")
-    miss = w.join(F.broadcast(head.select("word")), "word", "left_anti").join(freq, "word")
-    # one row per token OCCURRENCE — larger than the corpus itself; each
-    # consumer (tf_quality_features, unigram_logprob) aggregates it in a
-    # single streaming pass → DISK_ONLY, never resident (persist_for_self_join
-    # rationale; the memo saves the recompute, disk saves the memory)
-    out = persist_for_self_join(hit.unionByName(miss))
-    _memo_put(_WORD_FREQ_MEMO, key, out)
-    return out
+    def build():
+        t = tokenized_docs(spark, sf_dir)
+        w = t.select("doc_id", F.explode("ws").alias("word"))
+        freq = w.groupBy("word").agg(F.count("*").alias("n_occ"))
+        # deterministic top-K head; above the TakeOrdered threshold this compiles
+        # to a parallel range sort + global limit, never a driver collect
+        head = freq.orderBy(F.desc("n_occ"), "word").limit(broadcast_cap)
+        hit = w.join(F.broadcast(head), "word")
+        miss = w.join(F.broadcast(head.select("word")), "word", "left_anti")
+        return hit.unionByName(miss.join(freq, "word"))
+
+    return session_cache(
+        spark, "word_freq", (sf_dir, broadcast_cap), build, StorageLevel.DISK_ONLY
+    )
 
 
 def _tf_quality_features(spark, sf_dir, broadcast_cap: int = TF_BROADCAST_CAP):
@@ -3965,29 +3942,26 @@ def events_retention(spark, sf_dir):
 #      (delta×base candidates only, never delta×delta re-verification of
 #      the base). Here the delta is doc_id%10==9, the base everything else.
 # ---------------------------------------------------------------------------
-_BASE_HASH_MEMO: dict = {}
-
-
 def _base_exact_index(spark, sf_dir) -> DataFrame:
     """(doc_id, h): md5 content index of the EXISTING corpus, persisted +
-    memoized per (session, dataset) — built ONCE and probed by every
+    session-cached per dataset — built ONCE and probed by every
     arriving shard (tests/test_llm_ops.py pins the one-build property).
     At 100 TB this is the production shape: a ~48-byte-row index table
     maintained incrementally as shards commit, so each shard's exact
     probe scans the index, never the base corpus text."""
     from pyspark import StorageLevel
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _BASE_HASH_MEMO.get(key)
-    if hit is None:
-        base = (
+    return session_cache(
+        spark,
+        "base_exact_index",
+        sf_dir,
+        lambda: (
             load_table(spark, sf_dir, "documents")
             .filter(F.col("doc_id") % 10 != 9)
             .select("doc_id", F.md5("text").alias("h"))
-        )
-        hit = base.persist(StorageLevel.MEMORY_AND_DISK)
-        _memo_put(_BASE_HASH_MEMO, key, hit)
-    return hit
+        ),
+        StorageLevel.MEMORY_AND_DISK,
+    )
 
 
 def _dedup_incremental_df(spark, sf_dir, is_delta=None) -> DataFrame:

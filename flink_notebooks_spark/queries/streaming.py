@@ -285,7 +285,8 @@ def streaming_stateful_sessionize(spark, sf_dir):
 ARRIVAL_T0_S = 1_000_000
 
 # staged-replay input files, memoized per (sf_dir, table, shape): see
-# _staged_table_stream — the files are deterministic, only inputs are shared
+# _staged_table_stream and streaming_cdc_apply — immutable directories, not
+# Spark caches (clearCache() cannot drop them), so not a session_cache
 _STAGING_MEMO: dict = {}
 
 
@@ -1557,10 +1558,9 @@ def _incremental_topn(
     return rows, batch_sizes
 
 
-_CDC_STAGE_MEMO: dict = {}
 # previous invocations' state/checkpoint dirs, deleted when a NEWER
-# invocation supersedes them (same eviction contract as llm._memo_put:
-# only the latest returned DataFrame per session stays readable)
+# invocation supersedes them (the session cache's one-slot contract: only
+# the latest returned DataFrame per session stays readable)
 _CDC_RUN_DIRS: dict = {}
 
 
@@ -1627,17 +1627,17 @@ def streaming_cdc_apply(spark, sf_dir):
     # the streaming run itself always starts fresh (new state + checkpoint)
     from ..io import ephemeral_dir
 
-    memo_key = (spark.sparkContext.applicationId, sf_dir)
+    run_key = (spark.sparkContext.applicationId, sf_dir)
     workdir = ephemeral_dir("cdc_stream_")
     # the PREVIOUS invocation's state/checkpoint are superseded — delete
     # them so bench reps don't accumulate full state-table copies in /tmp
     import shutil
 
-    prev_run = _CDC_RUN_DIRS.pop(memo_key, None)
+    prev_run = _CDC_RUN_DIRS.pop(run_key, None)
     if prev_run is not None:
         shutil.rmtree(prev_run, ignore_errors=True)
-    _CDC_RUN_DIRS[memo_key] = workdir
-    src = _CDC_STAGE_MEMO.get(memo_key)
+    _CDC_RUN_DIRS[run_key] = workdir
+    src = _STAGING_MEMO.get((sf_dir, "cdc"))
     if src is None or not os.path.isdir(src):
         # staged OUTSIDE the per-run workdir: the workdir (state + ckpt) is
         # deleted on the next invocation, but the change files are immutable
@@ -1654,7 +1654,7 @@ def streaming_cdc_apply(spark, sf_dir):
             dst = os.path.join(src, f"b{i}.parquet")
             os.rename(os.path.join(stage, part), dst)
             os.utime(dst, (1_600_000_000 + i, 1_600_000_000 + i))
-        _CDC_STAGE_MEMO[memo_key] = src
+        _STAGING_MEMO[(sf_dir, "cdc")] = src
 
     raw = (
         spark.readStream.schema("value string")

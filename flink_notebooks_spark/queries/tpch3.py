@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..io import load_table
-from ._registry import query
+from ._registry import query, session_cache
 
 _REV = "CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))"
 
@@ -248,9 +248,9 @@ def q52_tpch_q11(spark, sf_dir):
     shape nothing else in the registry exercises (q40's scalar is a MAX of
     the groups; this one re-aggregates the groups).
 
-    Scale plan: the per-part value view computes ONCE (persisted + memoized
-    per session, q15's contract) and both consumers — the scalar SUM and the
-    threshold filter — read the persisted blocks; the nation filter prunes
+    Scale plan: the per-part value view computes ONCE (persisted and
+    session-cached, q15's contract) and both consumers — the scalar SUM and
+    the threshold filter — read the persisted blocks; the nation filter prunes
     suppliers before the lineitem join via broadcast. Threshold semantics:
     both engines compare double-cast exact-decimal sums against
     (double total) × 0.001, so the boundary cannot flip with partitioning
@@ -266,20 +266,13 @@ def q52_tpch_q11(spark, sf_dir):
     )
 
 
-_Q11_MEMO: dict = {}
-
-
 def _q11_value(spark, sf_dir):
-    """NATION_7's per-part stock value, persisted + memoized per (session,
-    dataset) — the scalar-total branch and the threshold filter both read it
+    """NATION_7's per-part stock value, persisted + session-cached per
+    dataset — the scalar-total branch and the threshold filter both read it
     (same lifecycle contract as tpch2._q15_revenue)."""
     from pyspark import StorageLevel
 
-    from .llm import _memo_put
-
-    key = (spark.sparkContext.applicationId, sf_dir, "q11val")
-    pv = _Q11_MEMO.get(key)
-    if pv is None:
+    def build():
         sup = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
         nat = (
             load_table(spark, sf_dir, "nation")
@@ -290,7 +283,7 @@ def _q11_value(spark, sf_dir):
             "l_partkey", "l_suppkey", "l_extendedprice", "l_quantity"
         )
         val = (F.col("l_extendedprice") * F.col("l_quantity")).cast("decimal(18,6)")
-        pv = (
+        return (
             li.join(
                 F.broadcast(
                     sup.join(F.broadcast(nat), sup["s_nationkey"] == nat["n_nationkey"])
@@ -299,10 +292,9 @@ def _q11_value(spark, sf_dir):
             )
             .groupBy(F.col("l_partkey").alias("ps_partkey"))
             .agg(F.sum(val).alias("value_c"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        _memo_put(_Q11_MEMO, key, pv)
-    return pv
+
+    return session_cache(spark, "q11_value", sf_dir, build, StorageLevel.MEMORY_AND_DISK)
 
 
 # --- Q53: TPC-H Q12 (shipping-mode priority buckets) ---------------------------

@@ -8,6 +8,8 @@ from SETUP.md:76.
 
 from __future__ import annotations
 
+import time
+
 import pytest
 
 from flink_notebooks_spark.engine import Engine, SessionManager, parse_statement
@@ -370,6 +372,30 @@ def test_session_isolation(spark):
     assert s1.properties is not s2.properties
     mgr.close_session(s1.session_handle)
     mgr.close_session(s2.session_handle)
+
+
+def test_close_session_removes_its_checkpoint_root(spark):
+    """A closed session's streaming checkpoints do not outlive it."""
+    import os
+
+    mgr = SessionManager(spark)
+    eng = mgr.open_session()  # default runtime mode: streaming
+    eng.execute_sql("""
+        CREATE TABLE ckpt_src (id INT) WITH (
+            'connector' = 'datagen', 'rows-per-second' = '50',
+            'fields.id.min' = '1', 'fields.id.max' = '9')
+    """)
+    stmt = eng.execute_sql("SELECT id, COUNT(*) AS c FROM ckpt_src GROUP BY id")
+    assert stmt.is_streaming
+    root = eng._checkpoint_root
+    for _ in range(120):
+        if stmt.fetch(0).result_type == "PAYLOAD":
+            break
+        time.sleep(0.25)
+    assert os.listdir(root), "the streaming statement wrote no checkpoint"
+    mgr.close_session(eng.session_handle)
+    assert stmt.status() == "CANCELED"
+    assert not os.path.exists(root)
 
 
 def test_show_and_describe(engine):

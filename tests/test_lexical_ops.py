@@ -275,9 +275,9 @@ def test_bpe_batching_reduces_rounds(spark, sf_dir):
     must cover the fixture's merges in strictly fewer rounds (observed:
     24 merges in ≤ half the rounds) while test_bpe_train_matches_reference
     separately pins that the merge table is bit-identical."""
-    from flink_notebooks_spark.queries import QUERIES, lexical
+    from flink_notebooks_spark.queries import QUERIES, _registry, lexical
 
-    lexical._BPE_MEMO.clear()
+    _registry._SESSION_CACHES.pop("bpe_merges", None)
     QUERIES["bpe_train"](spark, sf_dir).collect()
     assert 0 < lexical._BPE_LAST_ROUNDS <= BPE_MERGES // 2, (
         lexical._BPE_LAST_ROUNDS

@@ -1118,20 +1118,22 @@ def test_dedup_incremental_shards_share_one_base_index(spark, sf_dir):
     import contextlib
     import io
 
-    from flink_notebooks_spark.queries import llm
+    from flink_notebooks_spark.queries import _registry, llm
 
-    llm._BASE_HASH_MEMO.clear()
+    _registry._SESSION_CACHES.pop("base_exact_index", None)
     s1 = llm._dedup_incremental_df(
         spark, sf_dir, lambda c: (c % 10 == 9) & (c % 20 == 9)
     )
     r1 = s1.collect()
-    assert llm._BASE_HASH_MEMO, "base index memo not populated"
-    idx_entry = next(iter(llm._BASE_HASH_MEMO.values()))
+    assert "base_exact_index" in _registry._SESSION_CACHES, (
+        "base index session cache not populated"
+    )
+    idx_entry = _registry._SESSION_CACHES["base_exact_index"]
     s2 = llm._dedup_incremental_df(
         spark, sf_dir, lambda c: (c % 10 == 9) & (c % 20 == 19)
     )
-    # second shard: same memo entry (identity — no rebuild)
-    assert next(iter(llm._BASE_HASH_MEMO.values())) is idx_entry
+    # second shard: same session cache entry (identity — no rebuild)
+    assert _registry._SESSION_CACHES["base_exact_index"] is idx_entry
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         s2.explain("formatted")

@@ -530,16 +530,66 @@ def test_source_overlap_shares_vocab_cache(spark, sf_dir):
     assert "CartesianProduct" not in p
 
 
-def test_word_freq_cache_is_disk_only_again_after_clear_cache(spark, sf_dir):
-    """clearCache() drops the memoized word-frequency join's blocks; the next
-    query re-persists it at DISK_ONLY instead of serving it uncached."""
+@pytest.mark.parametrize(
+    "module, fn_name, level",
+    [
+        ("llm", "_shingle_candidates", "MEMORY_AND_DISK"),
+        ("llm", "cosine_pairs_df", "MEMORY_AND_DISK"),
+        ("llm", "_word_freq_joined", "DISK_ONLY"),
+        ("llm", "_base_exact_index", "MEMORY_AND_DISK"),
+        ("corpus", "_bm25_postings", "MEMORY_AND_DISK"),
+        ("corpus", "_source_vocab", "MEMORY_AND_DISK"),
+        ("tpch2", "_q15_revenue", "MEMORY_AND_DISK"),
+        ("tpch3", "_q11_value", "MEMORY_AND_DISK"),
+    ],
+)
+def test_session_cache_is_persisted_again_after_clear_cache(
+    spark, sf_dir, module, fn_name, level
+):
+    """clearCache() drops a session cache's blocks; the next query
+    re-persists the cached DataFrame at its declared level instead of
+    serving it uncached."""
+    import importlib
+
     from pyspark import StorageLevel
 
-    from flink_notebooks_spark.queries.llm import _word_freq_joined
+    fn = getattr(
+        importlib.import_module(f"flink_notebooks_spark.queries.{module}"), fn_name
+    )
 
-    _word_freq_joined(spark, sf_dir)
+    def cached():
+        out = fn(spark, sf_dir)
+        return out[1] if isinstance(out, tuple) else out  # (docs, candidates)
+
+    first = cached()
     spark.catalog.clearCache()
-    assert _word_freq_joined(spark, sf_dir).storageLevel == StorageLevel.DISK_ONLY
+    again = cached()
+    assert again is first
+    assert again.storageLevel == getattr(StorageLevel, level)
+
+
+def test_session_cache_keeps_one_slot_per_name_and_session(spark):
+    """A second key for the same name unpersists the first value; an entry
+    stored under another application id is a miss."""
+    from pyspark import StorageLevel
+
+    from flink_notebooks_spark.queries import _registry
+
+    level = StorageLevel.MEMORY_AND_DISK
+    name = "test_one_slot"
+    try:
+        a = _registry.session_cache(spark, name, 1, lambda: spark.range(1), level)
+        assert a.storageLevel == level
+        assert _registry.session_cache(spark, name, 1, lambda: spark.range(9)) is a
+        b = _registry.session_cache(spark, name, 2, lambda: spark.range(2), level)
+        assert b is not a and b.storageLevel == level
+        assert a.storageLevel == StorageLevel.NONE
+        _registry._SESSION_CACHES[name] = ("app-stopped", 2, b)
+        c = _registry.session_cache(spark, name, 2, lambda: spark.range(3), level)
+        assert c is not b and c.count() == 3
+        assert b.storageLevel == StorageLevel.NONE
+    finally:
+        _registry._SESSION_CACHES.pop(name)[2].unpersist()
 
 
 def test_corpus_sized_caches_are_disk_only(spark, sf_dir):
