@@ -17,7 +17,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from flink_notebooks_spark.queries import QUERIES  # noqa: E402
-from flink_notebooks_spark.session import get_spark  # noqa: E402
+from flink_notebooks_spark.session import get_spark, scoped_shuffle_partitions  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -95,9 +95,7 @@ def _calib_stream_state(spark, _sf):
     ckpt = tempfile.mkdtemp(prefix="fns-calib-ckpt-")
     # pin the state partition count (captured at query start) so the fixed
     # job is identical at every $SPARK_GRAFT_CPUS
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with scoped_shuffle_partitions(spark, 8):
         q = (
             spark.readStream.schema("k bigint")
             .option("maxFilesPerTrigger", "1")
@@ -110,8 +108,6 @@ def _calib_stream_state(spark, _sf):
             .trigger(availableNow=True)
             .start()
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     q.awaitTermination()
     out = spark.table(name).groupBy().count()
     spark.catalog.dropTempView(name)

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..session import get_spark, tune
+from ..session import get_spark, scoped_shuffle_partitions, tune
 from ..sources import build_source, connectors
 from ..sources import filesystem as fs_sink
 from .ddl import Parsed, TableDef, parse_statement, split_statements
@@ -2314,6 +2314,16 @@ class Engine:
 
         return self._start_streaming_select(base, batch_fix=fix, display_df=display_df)
 
+    def _stream_partitions(self):
+        """Scope around every stream start: one state partition per core,
+        so each trigger's stateful stage runs as a single task wave (the
+        session default of 2× cores ran it as two). Sharded keyed state
+        never has fewer shards than this (``shards_for_keys``), so no
+        state partition is left without a shard."""
+        return scoped_shuffle_partitions(
+            self.spark, self.spark.sparkContext.defaultParallelism
+        )
+
     def _start_streaming_select(
         self,
         df: DataFrame,
@@ -2348,12 +2358,13 @@ class Engine:
                 mode_holder["mode"] = mode  # set BEFORE start: first micro-
                 # batch can fire as soon as start() returns
                 try:
-                    q = (
-                        df.writeStream.outputMode(mode)
-                        .option("checkpointLocation", f"{ckpt}-{mode}")
-                        .foreachBatch(cb)
-                        .start()
-                    )
+                    with self._stream_partitions():
+                        q = (
+                            df.writeStream.outputMode(mode)
+                            .option("checkpointLocation", f"{ckpt}-{mode}")
+                            .foreachBatch(cb)
+                            .start()
+                        )
                     qh["q"] = q
                     return q
                 except Exception as e:  # noqa: BLE001
@@ -2422,11 +2433,13 @@ class Engine:
         if df.isStreaming:
             ckpt = f"{self._checkpoint_root}/{uuid.uuid4().hex}"
             if target.connector == "filesystem":
-                query = fs_sink.write_stream(df, target, ckpt)
+                with self._stream_partitions():
+                    query = fs_sink.write_stream(df, target, ckpt)
             elif target.connector in ("kafka", "upsert-kafka"):
                 from ..sources import kafka
 
-                query = kafka.write_stream(df, target, ckpt)
+                with self._stream_partitions():
+                    query = kafka.write_stream(df, target, ckpt)
             else:
                 raise ValueError(
                     f"streaming INSERT into connector {target.connector!r} unsupported"

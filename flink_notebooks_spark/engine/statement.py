@@ -692,6 +692,23 @@ class BatchStatement(Statement):
             self._last = None
 
 
+def _one_job(batch_df: DataFrame, n: int) -> DataFrame:
+    """At most ``n`` rows of a micro-batch, read in ONE job that runs every
+    partition to its end. Under foreachBatch a stateful operator may commit
+    a state partition only once that partition's rows are drained (per-key
+    Python state does), and a batch with an uncommitted partition fails
+    the query ("Not all StateStores committed"). A bare ``limit(n).collect()`` (or
+    ``isEmpty()``) is Spark's incremental take: it runs one partition, then
+    ×4 more, in serial jobs, and stops once it has ``n`` rows; a
+    ``limit(n)`` inside a partition stops pulling rows early too. Here each
+    partition is read to its end but keeps only its first ``n`` rows (the
+    low 33 bits of ``monotonically_increasing_id`` number the rows of a
+    partition), and the shuffle to one partition runs all of them in one
+    parallel wave."""
+    first_n = f"monotonically_increasing_id() & {(1 << 33) - 1} < {int(n)}"
+    return batch_df.filter(first_n).repartition(1).limit(n)
+
+
 class StreamingStatement(Statement):
     """A streaming query: foreachBatch appends to a bounded buffer; the
     client drains it with the same token protocol (NOT_READY while the
@@ -760,9 +777,9 @@ class StreamingStatement(Statement):
                 #  - append/update: a non-empty batch IS dropped output
                 #    (update mode only emits changed keys, each of which
                 #    would have produced changelog entries) — probed with
-                #    isEmpty() (a limit-1 job, bounded) until the first such
-                #    row; from then on the flag is set and post-cap triggers
-                #    do nothing.
+                #    isEmpty() (one job, at most one row shipped) until the
+                #    first such row; from then on the flag is set and
+                #    post-cap triggers ship nothing.
                 #  - complete: the sink re-emits the FULL result every
                 #    trigger, so a non-empty batch says nothing about whether
                 #    the diff vs _seen would be empty; deciding exactly would
@@ -770,9 +787,17 @@ class StreamingStatement(Statement):
                 #    to avoid. Set the flag unconditionally — CONSERVATIVE
                 #    (may over-report truncation when the post-cap diff would
                 #    have been empty), never under-reports.
-                if not self.truncated:
-                    if mode == "complete" or not batch_df.isEmpty():
-                        self.truncated = True
+                # Once the flag is set, a stateful query's batch (its
+                # progress lists state operators; none reported yet counts
+                # as stateful) still runs in the JVM, into the noop sink:
+                # its state partitions commit only when drained (_one_job).
+                if not self.truncated and mode != "complete":
+                    self.truncated = not _one_job(batch_df, 1).isEmpty()
+                else:
+                    self.truncated = True
+                    progress = self.query.lastProgress
+                    if progress is None or progress["stateOperators"]:
+                        batch_df.write.format("noop").mode("overwrite").save()
                 return
             delete_keys: list[tuple] = []
             if changelog:
@@ -790,7 +815,7 @@ class StreamingStatement(Statement):
                 # EXACT under the cap: absence of a served key from the
                 # whole snapshot is decided distributedly (anti-join; ships
                 # ≤ |served keys| rows, never the batch).
-                rows = batch_df.limit(MAX_STREAM_ROWS + 1).collect()
+                rows = _one_job(batch_df, MAX_STREAM_ROWS + 1).collect()
                 capped = len(rows) > MAX_STREAM_ROWS
                 if capped:
                     rows = rows[:MAX_STREAM_ROWS]
@@ -814,7 +839,7 @@ class StreamingStatement(Statement):
                 # append mode: rows are independent — fetch just enough to
                 # fill the buffer, +1 so the truncation flag still trips on
                 # the exact boundary batch
-                rows = batch_df.limit(room + 1).collect()
+                rows = _one_job(batch_df, room + 1).collect()
                 entries = _rows(rows)
             with self._lock:
                 room = MAX_STREAM_ROWS - len(self._buffer)

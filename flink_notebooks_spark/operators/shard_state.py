@@ -110,16 +110,20 @@ class _KeyState:
     hasTimedOut, setTimeoutTimestamp, getCurrentWatermarkMs). The
     watermark is fetched LAZILY through ``wm`` (a callable) — a NoTimeout
     operator over an un-watermarked stream must be able to run without
-    ever touching it (Spark raises on the access, not at plan time)."""
+    ever touching it (Spark raises on the access, not at plan time).
+    ``event_timeout``: whether the operator was dispatched with
+    ``timeout='event'``; setting a timer without it raises, as Spark's
+    GroupState does under NoTimeout."""
 
-    __slots__ = ("_val", "_dl", "_timed_out", "_wm", "_touched")
+    __slots__ = ("_val", "_dl", "_timed_out", "_wm", "_touched", "_event_timeout")
 
-    def __init__(self, val, timed_out: bool, wm):
+    def __init__(self, val, timed_out: bool, wm, event_timeout: bool = True):
         self._val = val  # unpickled tuple or None
         self._dl = _NO_TIMER  # cleared on invocation, like Spark
         self._timed_out = timed_out
         self._wm = wm
         self._touched = False
+        self._event_timeout = event_timeout
 
     @property
     def exists(self) -> bool:
@@ -147,6 +151,16 @@ class _KeyState:
         self._touched = True
 
     def setTimeoutTimestamp(self, ts_ms: int) -> None:  # noqa: N802
+        if not self._event_timeout:
+            from pyspark.errors import PySparkRuntimeError
+
+            raise PySparkRuntimeError(
+                errorClass="CANNOT_WITHOUT",
+                messageParameters={
+                    "condition1": "set timeout timestamp",
+                    "condition2": "enabling event time timeout in applyInPandasWithState",
+                },
+            )
         ts_ms = int(ts_ms)
         wm_ms = self._wm()
         if ts_ms <= wm_ms:
@@ -210,7 +224,7 @@ def shard_keyed_state(
         def invoke(key, chunks, timed_out):
             ent = entries.get(key)
             val = pickle.loads(ent[0]) if ent is not None else None
-            ks = _KeyState(val, timed_out, wm)
+            ks = _KeyState(val, timed_out, wm, timeout == "event")
             for out in fn(key, chunks, ks):
                 if out is not None and len(out):
                     out_parts.append(out)

@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io import events_stream_schema, load_table, stream_ts_cols
-from ..session import tune
+from ..session import scoped_shuffle_partitions, tune
 from ._registry import query, sql_dsum
 from .relational import SEQ_GROUP_ORACLE
 
@@ -66,9 +66,7 @@ def _run_to_memory(df: DataFrame, mode: str, partitions: int = 8) -> DataFrame:
 
     spark = df.sparkSession
     name = "strm_" + uuid.uuid4().hex[:12]
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(partitions))
-    try:
+    with scoped_shuffle_partitions(spark, partitions):
         q = (
             df.writeStream.format("memory")
             .queryName(name)
@@ -77,8 +75,6 @@ def _run_to_memory(df: DataFrame, mode: str, partitions: int = 8) -> DataFrame:
             .trigger(availableNow=True)
             .start()
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     q.awaitTermination()
     return spark.table(name)
 
@@ -1507,11 +1503,9 @@ def _incremental_topn(
         if debug is not None:
             debug.setdefault("tracked_sizes", []).append(len(tracked))
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(partitions))
-    try:
-        from ..io import ephemeral_dir
+    from ..io import ephemeral_dir
 
+    with scoped_shuffle_partitions(spark, partitions):
         q = (
             agg_df.writeStream.foreachBatch(merge)
             .outputMode("update")
@@ -1519,8 +1513,6 @@ def _incremental_topn(
             .trigger(availableNow=True)
             .start()
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     q.awaitTermination()
     if exact_retractions:
         from pyspark.errors import AnalysisException
@@ -1662,9 +1654,7 @@ def streaming_cdc_apply(spark, sf_dir):
         .parquet(src)
     )
     changes = cdc.parse_debezium(raw, "value", row_type)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with scoped_shuffle_partitions(spark, 8):
         q = cdc.apply_changelog_stream(
             changes,
             keys=["o_orderkey"],
@@ -1672,8 +1662,6 @@ def streaming_cdc_apply(spark, sf_dir):
             checkpoint_path=os.path.join(workdir, "ckpt"),
             n_buckets=16,
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     q.awaitTermination()
     snap = cdc.changelog_state_snapshot(spark, os.path.join(workdir, "state"))
     return snap.select("o_orderkey", "price", "o_orderstatus").orderBy("o_orderkey")

@@ -11,6 +11,8 @@ scale with the cluster, not with these local defaults.
 from __future__ import annotations
 
 import os
+import threading
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -233,6 +235,29 @@ def tune(spark: SparkSession) -> SparkSession:
                     stacklevel=2,
                 )
     return spark
+
+
+# serializes scoped_shuffle_partitions: two interleaved set/restore pairs
+# would otherwise leave a session at the other scope's count
+_SHUFFLE_SCOPE_LOCK = threading.RLock()
+
+
+@contextmanager
+def scoped_shuffle_partitions(spark: SparkSession, partitions: int):
+    """Set ``spark.sql.shuffle.partitions`` for the body, then restore it.
+
+    A streaming query records the count in its checkpoint when the
+    checkpoint is created (one state store per partition, fixed for the
+    query's life; an existing checkpoint keeps its recorded count), and
+    ``start()`` captures the session conf, so scoping the conf around
+    ``start()`` sizes the query's state without touching the session."""
+    with _SHUFFLE_SCOPE_LOCK:
+        prev = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set("spark.sql.shuffle.partitions", str(int(partitions)))
+        try:
+            yield
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 def get_spark(app_name: str = "flink-notebooks-spark", cpus: int | None = None) -> SparkSession:

@@ -203,3 +203,48 @@ def test_sharded_single_shard_equals_per_key(spark, waves_dir):
         ),
     )
     assert sharded == per_key
+
+
+def test_timer_needs_event_timeout(spark):
+    """Setting a timer in a shim dispatched with ``timeout='none'`` raises,
+    as Spark's GroupState does under NoTimeout; under ``'event'`` the
+    timer arms the shard's own."""
+    from pyspark.errors import PySparkRuntimeError
+
+    captured = {}
+
+    class FakeDF:
+        def withColumn(self, *_):
+            return self
+
+        def groupBy(self, *_):
+            return self
+
+        def applyInPandasWithState(self, fn, *_):
+            captured["shard_fn"] = fn
+
+    class FakeState:
+        exists = False
+        armed = None
+
+        def getCurrentWatermarkMs(self):
+            return 0
+
+        def update(self, _):
+            pass
+
+        def setTimeoutTimestamp(self, ts):
+            self.armed = ts
+
+    def fn(key, pdfs, state):
+        state.setTimeoutTimestamp(1000)
+        yield from ()
+
+    batch = pd.DataFrame({"k": [1], "__fns_shard": [0]})
+    shard_keyed_state(FakeDF(), ["k"], fn, "k int", "append", "none", 2)
+    with pytest.raises(PySparkRuntimeError):
+        list(captured["shard_fn"]((0,), iter([batch]), FakeState()))
+    shard_keyed_state(FakeDF(), ["k"], fn, "k int", "append", "event", 2)
+    state = FakeState()
+    list(captured["shard_fn"]((0,), iter([batch]), state))
+    assert state.armed == 1000

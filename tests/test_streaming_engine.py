@@ -289,6 +289,7 @@ def test_partial_pages_do_not_strand_rows():
 
     class FakeQuery:
         isActive = True
+        lastProgress = {"stateOperators": []}
 
         def exception(self):
             return None
@@ -344,6 +345,7 @@ def test_changelog_transfer_bounded_on_oversized_trigger(spark, monkeypatch):
 
     class FakeQuery:
         isActive = True
+        lastProgress = {"stateOperators": []}
 
         def exception(self):
             return None
@@ -354,17 +356,24 @@ def test_changelog_transfer_bounded_on_oversized_trigger(spark, monkeypatch):
     class SpyDF:
         """Counts driver transfers; delegates everything else."""
 
-        def __init__(self, df):
+        def __init__(self, df, root=None):
             self._df = df
+            self._root = root or self  # derived frames count on the root
             self.limits: list[int] = []
             self.full_collects = 0
 
+        def filter(self, cond):
+            return SpyDF(self._df.filter(cond), self._root)
+
+        def repartition(self, n):
+            return SpyDF(self._df.repartition(n), self._root)
+
         def limit(self, n):
-            self.limits.append(n)
+            self._root.limits.append(n)
             return self._df.limit(n)
 
         def collect(self):
-            self.full_collects += 1
+            self._root.full_collects += 1
             return self._df.collect()
 
         def __getattr__(self, a):
@@ -408,6 +417,7 @@ def test_complete_mode_deletes_exact_under_transfer_cap(spark, monkeypatch):
 
     class FakeQuery:
         isActive = True
+        lastProgress = {"stateOperators": []}
 
         def exception(self):
             return None
@@ -416,17 +426,24 @@ def test_complete_mode_deletes_exact_under_transfer_cap(spark, monkeypatch):
             self.isActive = False
 
     class SpyDF:
-        def __init__(self, df):
+        def __init__(self, df, root=None):
             self._df = df
+            self._root = root or self  # derived frames count on the root
             self.limits: list[int] = []
             self.full_collects = 0
 
+        def filter(self, cond):
+            return SpyDF(self._df.filter(cond), self._root)
+
+        def repartition(self, n):
+            return SpyDF(self._df.repartition(n), self._root)
+
         def limit(self, n):
-            self.limits.append(n)
+            self._root.limits.append(n)
             return self._df.limit(n)
 
         def collect(self):
-            self.full_collects += 1
+            self._root.full_collects += 1
             return self._df.collect()
 
         def __getattr__(self, a):
@@ -474,6 +491,7 @@ def test_sliced_off_deletes_are_requeued_not_lost(spark, monkeypatch):
 
     class FakeQuery:
         isActive = True
+        lastProgress = {"stateOperators": []}
 
         def exception(self):
             return None
@@ -1161,6 +1179,7 @@ def test_saturated_append_buffer_skips_driver_transfer():
 
     class FakeQuery:
         isActive = True
+        lastProgress = {"stateOperators": []}
 
         def exception(self):
             return None
@@ -1182,6 +1201,12 @@ def test_saturated_append_buffer_skips_driver_transfer():
         def limit(self, n):
             self.counter["limits"].append(n)
             return FakeDF(min(self.n_rows, n), self.counter)
+
+        def filter(self, cond):
+            return self
+
+        def repartition(self, n):
+            return self
 
         def collect(self):
             self.counter["collects"] += 1
@@ -1236,6 +1261,7 @@ def test_exactly_full_buffer_truncates_only_on_a_real_row():
 
     class FakeQuery:
         isActive = True
+        lastProgress = {"stateOperators": []}
 
         def exception(self):
             return None
@@ -1256,6 +1282,12 @@ def test_exactly_full_buffer_truncates_only_on_a_real_row():
             out.counter = self.counter
             self.counter["limits"].append(n)
             return out
+
+        def filter(self, cond):
+            return self
+
+        def repartition(self, n):
+            return self
 
         def collect(self):
             self.counter["collects"] += 1
@@ -1287,6 +1319,131 @@ def test_exactly_full_buffer_truncates_only_on_a_real_row():
     on_batch(late, 3)  # flag already set: zero probes, zero transfer
     assert late.counter["empties"] == 0 and late.counter["collects"] == 0
     assert len(stmt._buffer) == MAX_STREAM_ROWS
+
+
+def _write_keys(src, i, keys):
+    """Micro-batch ``i`` of a file stream: one parquet file of ``keys``,
+    renamed into ``src`` so the source never lists a half-written file."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    tmp = f"{src}.staging-{i:02d}.parquet"
+    pq.write_table(pa.table({"k": pa.array(keys, pa.int32())}), tmp)
+    os.rename(tmp, f"{src}/{i:02d}.parquet")
+
+
+def _wait_batch(query, batch_id, timeout=60.0):
+    """Wait until micro-batch ``batch_id`` has committed (or the query
+    died, which the caller's assertions then report)."""
+    t0 = time.time()
+    while time.time() - t0 < timeout and query.isActive:
+        p = query.lastProgress
+        if p and p["batchId"] >= batch_id and "addBatch" in p["durationMs"]:
+            return
+        time.sleep(0.2)
+
+
+def _key_stream(spark, src):
+    return spark.readStream.schema("k int").option("maxFilesPerTrigger", "1").parquet(src)
+
+
+def _make_count_fn():
+    """Per-key running count for the keyed-state shim (a nested function,
+    so the Python workers get it by value)."""
+
+    def count_fn(key, pdfs, state):
+        import pandas as pd
+
+        n = (state.get[0] if state.exists else 0) + sum(len(p) for p in pdfs)
+        state.update((n,))
+        yield pd.DataFrame({"k": [key[0]], "n": [n]})
+
+    return count_fn
+
+
+def _keyed_counts(df, shards=None):
+    from flink_notebooks_spark.operators.shard_state import apply_keyed_state
+
+    return apply_keyed_state(
+        df, ["k"], _make_count_fn(), "k int, n long", "n long", "update",
+        "none", shards=shards,
+    )
+
+
+@pytest.mark.parametrize(
+    "first_keys, keyed",
+    [(100, False), (40, False), (400, True)],
+    ids=["overflow", "exact-fill", "keyed-overflow"],
+)
+def test_truncating_stateful_trigger_keeps_committing(
+    engine, tmp_path, monkeypatch, first_keys, keyed
+):
+    """A stateful stream whose result outgrows MAX_STREAM_ROWS must keep
+    running. ``overflow``: the first micro-batch of a GROUP BY holds more
+    keys than the cap, so its bounded collect stops short of the whole
+    batch. ``exact-fill``: the first batch fills the buffer exactly and the
+    next one reaches the post-saturation emptiness probe. ``keyed-overflow``:
+    per-key Python state whose partitions each emit more rows than the cap
+    (a GROUP BY's state stage commits even when its output is read only in
+    part; per-key Python state commits only once its output is drained).
+    Every read must still drain every state partition,
+    and later triggers run while shipping nothing — a batch with an
+    undrained partition failed the query ("Not all StateStores
+    committed")."""
+    from flink_notebooks_spark.engine import statement as st
+
+    monkeypatch.setattr(st, "MAX_STREAM_ROWS", 40)
+    src = str(tmp_path / "src")
+    os.makedirs(src)
+    _write_keys(src, 0, list(range(first_keys)))
+    events = _key_stream(engine.spark, src)
+    stmt = engine.execute_stream_df(
+        _keyed_counts(events) if keyed else events.groupBy("k").count()
+    )
+    q = stmt.query
+    try:
+        _wait_batch(q, 0)
+        for i in (1, 2):
+            _write_keys(src, i, list(range(1000 * i, 1000 * i + 40)))
+            _wait_batch(q, i)
+        assert q.exception() is None
+        assert q.lastProgress["batchId"] == 2
+        stmt.fetch(0)
+        assert stmt.status() == "RUNNING" and stmt.truncated
+        assert len(stmt._buffer) == 40
+    finally:
+        q.stop()
+
+
+def test_keyed_stream_runs_one_task_wave_per_trigger(engine, tmp_path):
+    """A keyed-shim stream started by the engine has one state partition
+    per core (the session's own shuffle-partition count is left as it
+    was), and each trigger's result collection is a single Spark job."""
+    from flink_notebooks_spark.operators.shard_state import shards_for_keys
+
+    spark = engine.spark
+    cores = spark.sparkContext.defaultParallelism
+    src = str(tmp_path / "src")
+    os.makedirs(src)
+    _write_keys(src, 0, list(range(40)) * 3)
+    df = _keyed_counts(_key_stream(spark, src), shards=shards_for_keys(40, cores))
+    session_partitions = spark.conf.get("spark.sql.shuffle.partitions")
+    stmt = engine.execute_stream_df(df)
+    q = stmt.query
+    try:
+        assert spark.conf.get("spark.sql.shuffle.partitions") == session_partitions
+        _wait_batch(q, 0)
+        _write_keys(src, 1, list(range(20)))
+        _wait_batch(q, 1)
+        wait_stream_idle(stmt)
+    finally:
+        q.stop()
+    assert q.exception() is None
+    assert q.lastProgress["stateOperators"][0]["numShufflePartitions"] == cores
+    assert len(poll_rows(stmt, 60, timeout=10)) == 60  # 40 + 20 revisions
+    triggers = [p for p in q.recentProgress if "addBatch" in p["durationMs"]]
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
+    assert len(triggers) == 2 and len(jobs) == len(triggers)
 
 
 def test_cancel_is_terminal_before_stop_completes():
