@@ -5,12 +5,20 @@ JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 
 Each query is materialized with the no-op sink (full plan execution, no
 driver transfer) — the number measures engine execution, not collect().
+
+    python bench.py [--only name,name,...]
+
+``--only`` runs just the named registry entries and calibration jobs under
+the same protocol (warm-up, shared corpus prep, grouped reps, shuffled
+order); an unknown name exits 2 before any Spark session starts.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
+import statistics
 import sys
 import time
 
@@ -118,16 +126,15 @@ def _calib_stream_state(spark, _sf):
 
 
 # Fixed calibration jobs (VERDICT r12 #2): their code NEVER changes across
-# rounds, so cross-archive movement on them measures the HOST (CPU steal,
-# page cache, JVM/JIT variance), not the engine. bench_compare.py uses them
-# to separate "host moved X%" from residual per-entry deltas. Measured with
-# the same grouped-reps/median protocol as queries, once at the start and
-# once at the end of the run (drift WITHIN a run shows up as start/end
-# disagreement). DO NOT edit these bodies — that would break the baseline.
-# r15 adds two members for the dimensions the original three are blind to
-# (small-file metadata latency, the streaming trigger floor); they are
-# fixed from r15 on, and bench_compare keys drift on the INTERSECTION of
-# calibration names so archives without them still compare.
+# rounds, so cross-archive movement on them describes the HOST (CPU steal,
+# page cache, JVM/JIT variance), not the engine. bench_compare.py prints
+# their ratios as notes next to a comparison; its gate decides from paired
+# reruns instead. Measured with the same grouped-reps/median protocol as
+# queries, once at the start and once at the end of the run (drift WITHIN a
+# run shows up as start/end disagreement). DO NOT edit these bodies — that
+# would break the baseline. r15 adds two members for the dimensions the
+# original three are blind to (small-file metadata latency, the streaming
+# trigger floor); they are fixed from r15 on.
 CALIBRATION = {
     "calib_jvm_sum": _calib_jvm_sum,  # pure whole-stage-codegen compute
     "calib_parquet_scan": _calib_parquet_scan,  # scan + column decode
@@ -145,7 +152,29 @@ def sf_of(path: str) -> float:
         return -1.0
 
 
-def main() -> None:
+def _parse_only(argv: list[str] | None) -> set[str] | None:
+    """The ``--only`` selection (None = every entry). Unknown names exit 2
+    here, before any Spark session starts."""
+    ap = argparse.ArgumentParser(description="Run the declared bench entries.")
+    ap.add_argument(
+        "--only",
+        metavar="NAME,...",
+        help="registry entries and calibration names to run (default: all)",
+    )
+    only = ap.parse_args(argv).only
+    if only is None:
+        return None
+    names = {n.strip() for n in only.split(",") if n.strip()}
+    unknown = names - set(QUERIES) - set(CALIBRATION) - {"shared_corpus_prep"}
+    if unknown or not names:
+        ap.error(f"unknown bench entries: {', '.join(sorted(unknown)) or '(none given)'}")
+    return names
+
+
+def main(argv: list[str] | None = None) -> None:
+    only = _parse_only(argv)
+    queries = {k: v for k, v in QUERIES.items() if only is None or k in only}
+    calibration = {k: v for k, v in CALIBRATION.items() if only is None or k in only}
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     spark = get_spark("bench", cpus=cpus)
 
@@ -239,21 +268,33 @@ def main() -> None:
     # data-dependent part — so a wall-time delta on a streaming entry is
     # only interpretable next to its trigger count (an extra eviction
     # micro-batch reads as "1.5-2× slower" while the per-row cost is flat).
-    # Counting is via the listener bus; delivery is async, so counts are
-    # accurate to the rep boundary within listener-thread latency (ms) —
-    # exact for terminated availableNow replays, approximate never by more
-    # than the final event. Batch entries count 0.
+    # The same progress events also carry where each trigger's time went
+    # (durationMs: addBatch, walCommit, commitOffsets, queryPlanning, ...)
+    # and the state it holds (stateOperators: numRowsTotal, commitTimeMs),
+    # summed per rep here. Delivery is via the listener bus and async, so
+    # the figures are accurate to the rep boundary within listener-thread
+    # latency (ms) — exact for terminated availableNow replays, approximate
+    # never by more than the final event. Batch entries count 0.
     from pyspark.sql.streaming import StreamingQueryListener
+
+    def _new_rep() -> dict:
+        return {"triggers": 0, "duration_ms": {}, "peak_rows": 0, "commit_ms": 0}
 
     class _TriggerCounter(StreamingQueryListener):
         def __init__(self):
-            self.n = 0
+            self.rep = _new_rep()
 
         def onQueryStarted(self, event):
             pass
 
         def onQueryProgress(self, event):
-            self.n += 1
+            p, rep = event.progress, self.rep
+            rep["triggers"] += 1
+            for k, v in (p.durationMs or {}).items():
+                rep["duration_ms"][k] = rep["duration_ms"].get(k, 0) + v
+            for op in p.stateOperators or []:
+                rep["peak_rows"] = max(rep["peak_rows"], op.numRowsTotal)
+                rep["commit_ms"] += op.commitTimeMs
 
         def onQueryIdle(self, event):
             pass
@@ -304,7 +345,7 @@ def main() -> None:
         return out
 
     calib_runs: dict[str, list[float]] = {
-        name: measure(fn) for name, fn in CALIBRATION.items()
+        name: measure(fn) for name, fn in calibration.items()
     }
 
     # Query order is SHUFFLED per run (VERDICT r12 #2): with a fixed order,
@@ -315,14 +356,14 @@ def main() -> None:
     # calibration entries above/below bracket whatever host drift remains.
     import random
 
-    exec_order = list(QUERIES.items())
+    exec_order = list(queries.items())
     random.Random(time.time_ns()).shuffle(exec_order)
 
-    runs: dict[str, list[float]] = {name: [] for name in QUERIES}
-    trig_runs: dict[str, list[int]] = {name: [] for name in QUERIES}
+    runs: dict[str, list[float]] = {name: [] for name in queries}
+    stream_runs: dict[str, list[dict]] = {name: [] for name in queries}
     for name, fn in exec_order:
         for i in range(reps + 1):
-            n_trig0 = trigger_counter.n
+            rep = trigger_counter.rep = _new_rep()
             t0 = time.time()
             try:
                 df = fn(spark, SF_DIR)
@@ -333,7 +374,7 @@ def main() -> None:
                 dt = -1.0
             if i > 0:  # rep 0 is the discarded per-query warm-up
                 runs[name].append(dt)
-                trig_runs[name].append(trigger_counter.n - n_trig0)
+                stream_runs[name].append(rep)
             elif dt < 0:
                 # warm-up already failed — record the failure once and move
                 # on instead of paying `reps` more attempts
@@ -352,14 +393,34 @@ def main() -> None:
         return good[mid] if len(good) % 2 else round((good[mid - 1] + good[mid]) / 2, 3)
 
     # end-of-run calibration pass: start/end disagreement measures drift
-    # WITHIN this run (thermal, page-cache, competing load)
-    for name, fn in CALIBRATION.items():
+    # WITHIN this run (thermal, page-cache, competing load); its stream
+    # calibration must not add triggers to the last entry's rep
+    trigger_counter.rep = _new_rep()
+    for name, fn in calibration.items():
         calib_runs[f"{name}_end"] = measure(fn)
 
     timings = {name: median(xs) for name, xs in runs.items()}
     # max over measured reps: replays are deterministic so reps agree; max
     # is the conservative pick if a rep raced the async listener delivery
-    triggers = {name: (max(xs) if xs else 0) for name, xs in trig_runs.items()}
+    triggers = {
+        name: max((r["triggers"] for r in rs), default=0)
+        for name, rs in stream_runs.items()
+    }
+    streaming = {name: rs for name, rs in stream_runs.items() if triggers[name]}
+    duration_ms = {
+        name: {
+            k: statistics.median(r["duration_ms"].get(k, 0) for r in rs)
+            for k in sorted({k for r in rs for k in r["duration_ms"]})
+        }
+        for name, rs in streaming.items()
+    }
+    state = {
+        name: {
+            "peak_rows": max(r["peak_rows"] for r in rs),
+            "commit_ms": statistics.median(r["commit_ms"] for r in rs),
+        }
+        for name, rs in streaming.items()
+    }
     # the one-time shared preparation is real work the engine does for the
     # dedup/text family — charge it explicitly instead of to whichever query
     # ran first
@@ -380,6 +441,11 @@ def main() -> None:
         # wall time is ~(triggers × 1-3 s floor) + data-dependent work at
         # bench SFs, so comparers must read deltas next to these
         "triggers": triggers,
+        # streaming entries only, medians over measured reps: each
+        # durationMs component summed over the rep's triggers, and the
+        # rep's peak state numRowsTotal and summed state commitTimeMs
+        "duration_ms": duration_ms,
+        "state": state,
         "sf": sf_of(SF_DIR),
         "n_queries": len(timings),
         "n_failed": len(timings) - len(ok),
@@ -409,4 +475,4 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])

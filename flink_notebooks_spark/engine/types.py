@@ -112,10 +112,6 @@ def parse_type(s: str) -> T.DataType:
     raise TypeParseError(f"unsupported Flink type: {s!r}")
 
 
-def spark_ddl_name(dt: T.DataType) -> str:
-    return dt.simpleString()
-
-
 def to_flink_type(dt: T.DataType) -> str:
     """Spark type → Flink SQL type name (inverse of parse_type, for
     SHOW CREATE TABLE round-trips)."""

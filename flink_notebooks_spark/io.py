@@ -138,12 +138,6 @@ def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {t: load_table(spark, sf_dir, t) for t in TABLES}
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every test table as a temp view (for the SQL surface)."""
-    for t in TABLES:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)
-
-
 # --- ephemeral scratch space for bounded streaming replays --------------------
 # The bounded-replay queries (memory-sink availableNow runs, staged file
 # sources, foreachBatch gate sinks, throwaway checkpoints) create and discard

@@ -3022,25 +3022,12 @@ def match_recognize_stream(
         return frame.iloc[nc:].reset_index(drop=True)
 
     def run_stream(key, pdfs, state):
-        import os as _os
-        import time as _time
-
         import pandas as pd
 
-        _dbg = _os.environ.get("MR_STREAM_DEBUG")
-        _t0 = _time.time()
-        _marks = []
-
-        def _mark(label):
-            if _dbg:
-                _marks.append((label, _time.time() - _t0))
-
         new = [p for p in pdfs if len(p)]
-        _mark('arrow_in')
         if state.exists:
             buf_bytes, mn = state.get
             buf, carry = _state_loads(bytes(buf_bytes))
-            _mark('state_load')
             parts = ([buf] if buf is not None and len(buf) else []) + new
         else:
             mn = 0
@@ -3053,10 +3040,8 @@ def match_recognize_stream(
 
         def save(keep_df, carry_df, mn_val):
             state.update((bytearray(_state_dumps(keep_df, carry_df)), mn_val))
-            _mark('state_save')
 
         rows = pd.concat(parts, ignore_index=True) if len(parts) > 1 else parts[0]
-        _mark('concat')
         wm_ms = state.getCurrentWatermarkMs()
         if wm_ms <= 0 and not state.hasTimedOut:
             # nothing can be mature yet (first micro-batch: the watermark
@@ -3067,16 +3052,6 @@ def match_recognize_stream(
                     int(pd.to_datetime(rows[ocol]).values.view("int64").max() // 1_000_000)
                     + close_ms
                 )
-            if _dbg:
-                import sys as _sys
-
-                print(
-                    f"MRDBG-buf key={key} nrows={len(rows)} "
-                    f"marks={[(l, round(t, 3)) for l, t in _marks]} "
-                    f"total={_time.time() - _t0:.3f}",
-                    file=_sys.stderr,
-                    flush=True,
-                )
             return
         ts_ms = pd.to_datetime(rows[ocol]).values.view("int64") // 1_000_000
         if state.hasTimedOut:
@@ -3086,12 +3061,10 @@ def match_recognize_stream(
         else:
             mature_mask = ts_ms <= wm_ms
             require_closed = True
-        _mark('pre_sort')
         mature = rows if mature_mask.all() else rows[mature_mask]
         if not _lex_sorted(mature, order_cols):
             mature = mature.sort_values(order_cols, kind="mergesort")
         mature = mature.reset_index(drop=True)
-        _mark('sort')
         immature = rows.iloc[0:0] if mature_mask.all() else rows[~mature_mask]
         if prev_evals:
             mature = eval_deferred(mature, carry)
@@ -3101,13 +3074,11 @@ def match_recognize_stream(
             # helper must see (matches cannot start or land on them)
             frame = pd.concat([carry, mature], ignore_index=True)
             nc = len(carry)
-        _mark('pre_match')
         out_rows, emitted, keep_from, stop_at = _run_matches(
             frame, spec, measures, input_cols, out_names,
             match_num0=mn, require_closed=require_closed, stateful=stateful,
             start_at=nc,
         )
-        _mark('match')
         if spec.within_ms is not None and require_closed and len(frame):
             # WITHIN bounds live state: scanned no-match rows whose whole
             # match window the watermark has passed are decided forever
@@ -3137,10 +3108,6 @@ def match_recognize_stream(
             save(keep, carry, mn + emitted)
         else:
             state.remove()
-        if _dbg:
-            import sys as _sys
-            print(f"MRDBG key={key} nrows={sum(len(x) for x in parts)} "
-                  f"marks={[(l, round(t,3)) for l, t in _marks]}", file=_sys.stderr, flush=True)
         if out_rows:
             yield pd.DataFrame(out_rows, columns=out_names)
 

@@ -427,7 +427,7 @@ def _table_rowcount(spark, sf_dir, table: str) -> int:
         return load_table(spark, sf_dir, table).count()
 
 
-def _keyed_shards(spark, sf_dir, table: str = "events") -> int | None:
+def _keyed_shards(spark, sf_dir, table: str = "events") -> int:
     """Shard count for the per-user/per-key streaming state ops run
     shard-keyed (operators/shard_state.py): ``table``'s ROWCOUNT is a
     conservative upper bound on the live key domain, so per-shard state
@@ -437,20 +437,9 @@ def _keyed_shards(spark, sf_dir, table: str = "events") -> int | None:
     user keys at sf0.1; the fixed per-call protocol cost was the dominant
     term of every user-keyed entry, guide §4). Overshooting the key domain
     is safe: empty shards are never invoked, so calls per trigger ≤
-    min(shards, keys with data) — never more than per-key grouping paid.
-
-    ``SPARK_GRAFT_KEYED_SHARDS``: ``off``/``none``/``0`` disables sharding
-    (per-key grouping, the pre-r15 shape) — an ops escape hatch and the
-    paired-A/B lever; a positive integer pins the count; unset derives it."""
-    import os
-
+    min(shards, keys with data) — never more than per-key grouping paid."""
     from ..operators.shard_state import shards_for_keys
 
-    env = os.environ.get("SPARK_GRAFT_KEYED_SHARDS", "").strip().lower()
-    if env in ("off", "none", "0"):
-        return None
-    if env.isdigit():
-        return int(env)
     return shards_for_keys(
         _table_rowcount(spark, sf_dir, table),
         spark.sparkContext.defaultParallelism,

@@ -3,8 +3,9 @@
 The reference wires Iceberg hadoop/Glue catalogs into Flink; the Spark
 equivalent is the ``iceberg-spark-runtime`` package registering a
 ``SparkCatalog``. That jar is not bundled in this environment, so this
-module provides (a) the catalog configuration helper a deployment uses and
-(b) a clear, early error instead of an opaque classpath failure. With the
+module raises a clear, early error instead of an opaque classpath failure.
+A deployment registers the catalog with the usual static
+``spark.sql.catalog.<name>`` confs at session build. With the
 jar present, Iceberg tables need nothing else from this engine — they are
 ordinary Spark-catalog tables reachable through the same SQL surface
 (`USE CATALOG`, `SHOW TABLES`, queries, `INSERT`).
@@ -23,22 +24,6 @@ def runtime_available(spark: SparkSession) -> bool:
         return True
     except Exception:  # noqa: BLE001
         return False
-
-
-def catalog_conf(name: str, warehouse: str, catalog_impl: str = "hadoop") -> dict[str, str]:
-    """Spark confs that register an Iceberg catalog (set at session build —
-    they are static). ``catalog_impl``: hadoop | hive | glue."""
-    base = f"spark.sql.catalog.{name}"
-    conf = {base: RUNTIME_CLASS, f"{base}.warehouse": warehouse}
-    if catalog_impl == "hadoop":
-        conf[f"{base}.type"] = "hadoop"
-    elif catalog_impl == "hive":
-        conf[f"{base}.type"] = "hive"
-    elif catalog_impl == "glue":
-        conf[f"{base}.catalog-impl"] = "org.apache.iceberg.aws.glue.GlueCatalog"
-    else:
-        raise ValueError(f"unknown iceberg catalog impl: {catalog_impl}")
-    return conf
 
 
 def _require(spark: SparkSession) -> None:

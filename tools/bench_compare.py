@@ -1,309 +1,253 @@
-"""Compare two bench.py summary JSONs, protocol-aware — with a regression GATE.
-
-Round 10 switched bench.py to grouped per-query reps with a discarded
-warm-up; numbers from the old interleaved protocol are systematically
-higher, so cross-protocol deltas are measurement artifacts, not
-regressions (ADVICE r10). This tool refuses to diff mismatched protocols
-unless --force, and reports per-query deltas over the shared entries only.
+"""Compare two bench.py summary JSONs, protocol-aware — with a paired-rerun GATE.
 
 Usage:
     python tools/bench_compare.py OLD.json NEW.json [--threshold 0.25] [--force]
-    python tools/bench_compare.py OLD.json NEW.json --gate
+    python tools/bench_compare.py OLD.json NEW.json --gate --base REV [--threshold 0.25]
 
-Default mode: exit code 0 always (reporting tool); the per-commit gate is
-the test suite. Output: shared-entry totals, the queries whose |delta|
+Report mode (exit 0 always): shared-entry totals, the entries whose |delta|
 exceeds the threshold (relative, on entries >= 0.2 s — sub-200 ms entries
-are pure trigger/launch noise at sf0.1), and entries present on one side
-only.
+are pure trigger/launch noise at sf0.1), entries present on one side only,
+and the fixed-code calibration ratios as notes. Round 10 switched bench.py
+to grouped per-query reps with a discarded warm-up; numbers from the old
+interleaved protocol are systematically higher, so a cross-protocol diff is
+refused unless --force.
 
---gate mode (VERDICT r13 #3) encodes the noise band the r13 same-code A/B
-archive quantified (BENCH_LOCAL_r13_final vs _rep2: identical code,
-sub-second entries swinging ±140%, drift-adjusted totals moving ~+12%, while
-fixed-code calibration tracked the host at x0.94). It exits NONZERO only on
-evidence that same-code noise cannot produce:
-
-  * a PER-ENTRY regression that is simultaneously multi-second
-    (drift-adjusted slowdown >= GATE_ABS_SEC = 2.0 s) AND large relative
-    to its old wall (drift-adjusted >= GATE_REL = +50%) — excluding
-    streaming entries whose both sides sit inside the per-trigger floor
-    band with a changed trigger count (floor artifacts, VERDICT r11 #6);
-  * or a drift-adjusted SHARED-TOTAL regression >= GATE_TOTAL_REL = +20%
-    AND >= GATE_TOTAL_ABS_SEC = 5 s, computed over the entries NOT already
-    attributed above — the broad-small-regression catch (same-code A/B
-    moved ~+12%; 20% leaves headroom without masking a real slowdown).
-
-"Drift-adjusted" divides each new/old ratio by the median fixed-code
-calibration ratio, so a slower HOST never fails the gate and a faster host
-never hides a regression. Gating requires calibration entries on both
-sides (bench.py r13+); without them the gate exits 2 (cannot attribute a
-shift to code vs host — not a pass).
-
-When both summaries carry per-entry trigger counts (bench.py r12+), moved
-streaming entries are annotated with them and flagged "floor-dominated"
-when both sides' per-trigger wall sits inside the micro-batch constant
-band (<=2.5 s/trigger) — such deltas are trigger-floor artifacts (an extra
-eviction micro-batch, a changed trigger count), not per-row regressions.
+Gate mode: two single-run archives cannot separate a code regression from
+a host that got slower between them (CPU-steal bursts last minutes). The
+archives only nominate: every entry at least ``threshold`` slower (and
+>= 0.2 s) is flagged. REV is checked out with ``git worktree add`` into a
+temp dir, and ``bench.py --only <flagged>`` runs from the base tree and
+from this working tree for PAIRS pairs, swapping which tree runs first in
+each pair. An entry fails only when the working tree is slower in at least
+WINS_NEEDED of the pairs AND its median is above the base median by more
+than the base runs' interquartile range. Exit codes: 0 pass; 1 an entry
+failed (named); 2 undecided — the shared total is slower by at least the
+threshold with no entry flagged, a base run lost a flagged entry, or the
+archives use different protocols. The worktree is removed on every exit.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
+import os
+import shutil
+import signal
 import statistics
+import subprocess
 import sys
+import tempfile
 
-FLOOR_SEC_PER_TRIGGER = 2.5
-GATE_ABS_SEC = 2.0  # drift-adjusted per-entry slowdown must exceed this …
-GATE_REL = 0.50  # … AND this relative share of the old wall
-GATE_TOTAL_REL = 0.20  # drift-adjusted shared-total regression ceiling …
-GATE_TOTAL_ABS_SEC = 5.0  # … that must also be multi-second in absolute
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+MIN_SEC = 0.2  # entries under this on both sides are launch noise
+PAIRS = 10
+WINS_NEEDED = 9
 
 
-def _load(path: str) -> dict:
-    with open(path) as f:
-        text = f.read().strip()
-    # bench output files may carry a stderr preamble; the summary is the
-    # last line that parses
-    for line in reversed(text.splitlines()):
+def _last_json(text: str, where: str) -> dict:
+    # bench output may carry a stderr preamble; the summary is the last
+    # line that parses
+    for line in reversed(text.strip().splitlines()):
         try:
             return json.loads(line)
         except json.JSONDecodeError:
             continue
-    raise SystemExit(f"{path}: no JSON summary line found")
+    raise SystemExit(f"{where}: no JSON summary line found")
 
 
-# the original (r13) calibration trio — the COMPUTE class. r15 added
-# calib_small_files (host metadata latency) and calib_stream_state (the
-# streaming trigger floor): different host dimensions that must not be
-# median-mixed into the compute drift, because the whole point of adding
-# them is that they move independently (r14: streaming entries drifted
-# x1.4-1.6 between host classes while the compute trio read x1.1).
-_COMPUTE_CALIB = ("calib_jvm_sum", "calib_parquet_scan", "calib_shuffle_agg")
-_STREAM_CALIB = "calib_stream_state"
+def _load(path: str) -> dict:
+    with open(path) as f:
+        return _last_json(f.read(), path)
 
 
-def host_drift(old: dict, new: dict) -> float | None:
-    """Median new/old ratio of the shared fixed-code COMPUTE calibration
-    entries — the host's speed change between the two archives, measured on
-    jobs whose code cannot have changed. None when not separable."""
-    co = old.get("calibration") or {}
-    cn = new.get("calibration") or {}
-    shared = [
-        k
-        for k in co
-        if k in cn
-        and co[k] > 0
-        and cn[k] > 0
-        # start AND *_end samples of the compute trio both count — the
-        # end-of-run re-measure is half the within-run drift signal
-        and (k[:-4] if k.endswith("_end") else k) in _COMPUTE_CALIB
-    ]
-    if not shared:  # pre-r13 archives, or custom calibration sets
-        shared = [k for k in co if k in cn and co[k] > 0 and cn[k] > 0]
-    if not shared:
-        return None
-    return statistics.median(cn[k] / co[k] for k in shared)
-
-
-def stream_drift(old: dict, new: dict) -> float | None:
-    """new/old ratio of the fixed stateful streaming micro-replay
-    (calib_stream_state, r15+) — the trigger-floor class's own host drift.
-    None when either archive predates it; callers then fall back to the
-    compute drift for streaming entries (the pre-r15 behavior)."""
-    co = old.get("calibration") or {}
-    cn = new.get("calibration") or {}
-    ratios = [
-        cn[k] / co[k]
-        for k in (_STREAM_CALIB, _STREAM_CALIB + "_end")
-        if co.get(k) and cn.get(k) and co[k] > 0 and cn[k] > 0
-    ]
-    if not ratios:
-        return None
-    return statistics.median(ratios)
-
-
-def gate_failures(old: dict, new: dict) -> tuple[list[str], float | None]:
-    """The regressions the noise band cannot explain (see module doc).
-    Returns (failure messages, drift). Raises ValueError when the archives
-    carry no shared calibration (gate not computable)."""
-    drift = host_drift(old, new)
-    if drift is None:
-        raise ValueError(
-            "gate needs fixed-code calibration entries on BOTH archives "
-            "(bench.py r13+) to separate host drift from code regressions"
-        )
-    sdrift = stream_drift(old, new)
+def moved_entries(old: dict, new: dict, threshold: float) -> list[tuple[float, str, float, float]]:
+    """(relative delta, name, old s, new s) for every shared entry whose
+    |delta| is at least ``threshold`` and that takes >= MIN_SEC on one side;
+    slowest first."""
     qo, qn = old["queries"], new["queries"]
-    to, tn = old.get("triggers", {}), new.get("triggers", {})
-
-    def drift_for(k: str) -> float:
-        # streaming entries (triggers on both sides) are adjusted by the
-        # trigger-floor calibration when both archives carry it — the class
-        # the compute drift is blind to (VERDICT r14 #1)
-        if sdrift is not None and to.get(k) and tn.get(k):
-            return sdrift
-        return drift
-
-    shared = sorted(set(qo) & set(qn))
-    fails: list[str] = []
-    attributed: set[str] = set()  # entry-failed or floor-explained
-    for k in shared:
-        a, b = qo[k], qn[k]
-        if a <= 0 or b < 0:
-            continue
-        adj = b / drift_for(k)  # this entry's wall "on the old host"
-        if adj - a < GATE_ABS_SEC or (adj - a) / a < GATE_REL:
-            continue
-        ta, tb = to.get(k), tn.get(k)
-        if (
-            ta
-            and tb
-            and ta != tb
-            and a / ta <= FLOOR_SEC_PER_TRIGGER
-            and b / tb <= FLOOR_SEC_PER_TRIGGER
-        ):
-            attributed.add(k)  # trigger-floor artifact, not a regression
-            continue
-        attributed.add(k)
-        fails.append(
-            f"{k}: {a:.2f}s -> {b:.2f}s (drift-adjusted {adj:.2f}s, "
-            f"{(adj - a) / a * 100:+.0f}% and {adj - a:+.1f}s)"
-        )
-    # the total rule catches BROAD small regressions no single entry trips;
-    # entries already attributed above (failed or floor-explained) are
-    # excluded so one big mover doesn't double-report
-    both = [k for k in shared if qo[k] >= 0 and qn[k] >= 0 and k not in attributed]
-    so = sum(qo[k] for k in both)
-    sn = sum(qn[k] for k in both)
-    sn_adj = sum(qn[k] / drift_for(k) for k in both)
-    if (
-        so > 0
-        and sn_adj - so >= GATE_TOTAL_ABS_SEC
-        and (sn_adj - so) / so >= GATE_TOTAL_REL
-    ):
-        fails.append(
-            f"shared total: {so:.1f}s -> {sn:.1f}s (drift-adjusted "
-            f"{sn_adj:.1f}s, {(sn_adj - so) / so * 100:+.0f}%)"
-        )
-    return fails, drift
-
-
-def main(argv: list[str]) -> int:
-    threshold = 0.25
-    args: list[str] = []
-    i = 0
-    while i < len(argv):
-        a = argv[i]
-        if a.startswith("--threshold"):
-            if "=" in a:
-                threshold = float(a.split("=", 1)[1])
-            else:  # space-separated form: consume the next token
-                i += 1
-                threshold = float(argv[i])
-        elif not a.startswith("--"):
-            args.append(a)
-        i += 1
-    if len(args) != 2:
-        print(__doc__)
-        return 0
-    old, new = _load(args[0]), _load(args[1])
-    po = old.get("bench_protocol", "pre-v2 (untagged)")
-    pn = new.get("bench_protocol", "pre-v2 (untagged)")
-    if po != pn and "--force" not in argv:
-        print(
-            f"REFUSING cross-protocol comparison: {args[0]} is '{po}', "
-            f"{args[1]} is '{pn}' — deltas would be measurement artifacts "
-            "(ADVICE r10). Pass --force to diff anyway; do not quote the "
-            "result as a regression/improvement."
-        )
-        return 2 if "--gate" in argv else 0
-    if "--gate" in argv:
-        try:
-            fails, drift = gate_failures(old, new)
-        except ValueError as e:
-            print(f"GATE NOT COMPUTABLE: {e}")
-            return 2
-        sd = stream_drift(old, new)
-        sd_note = f" stream-floor x{sd:.2f}" if sd is not None else ""
-        print(f"gate: host drift x{drift:.2f}{sd_note}", end="  ")
-        if fails:
-            print(f"FAIL ({len(fails)} regression(s) beyond the noise band):")
-            for f in fails:
-                print(f"  {f}")
-            return 1
-        print("PASS — no drift-adjusted multi-second regressions")
-        return 0
-    qo, qn = old["queries"], new["queries"]
-    shared = sorted(set(qo) & set(qn))
-    so = sum(qo[k] for k in shared if qo[k] >= 0)
-    sn = sum(qn[k] for k in shared if qn[k] >= 0)
-    pct = f"  ({(sn - so) / so * 100:+.1f}%)" if so > 0 else ""
-    print(
-        f"shared entries: {len(shared)}  old total {so:.1f}s  new total "
-        f"{sn:.1f}s{pct}"
-    )
-    # Host-drift separation (VERDICT r12 #2): the calibration entries are
-    # fixed-code jobs, so their cross-archive ratio measures the HOST.
-    # Per-entry deltas are then annotated with the drift-adjusted residual —
-    # the part the calibration does NOT explain.
-    drift = host_drift(old, new)
-    if drift is not None:
-        co, cn = old["calibration"], new["calibration"]
-        detail = ", ".join(
-            f"{k} x{cn[k] / co[k]:.2f}"
-            for k in sorted(co)
-            if k in cn and co[k] > 0 and cn[k] > 0
-        )
-        print(f"host drift (fixed-code calibration): x{drift:.2f}  [{detail}]")
-    elif old.get("calibration") or new.get("calibration"):
-        print(
-            "calibration present on one side only — host drift not "
-            "separable for this pair (first r13+ archive vs an older one)"
-        )
-    # trigger counts (bench.py r12+): a streaming entry's wall is
-    # ~(triggers × 1-3 s of per-micro-batch constants) + data work, so a
-    # delta whose both sides sit inside the per-trigger floor band — or one
-    # explained by a changed trigger count — is a floor artifact, not a
-    # per-row regression (VERDICT r11 #6)
-    to, tn = old.get("triggers", {}), new.get("triggers", {})
-    sdrift_r = stream_drift(old, new)
     moved = []
-    for k in shared:
+    for k in sorted(set(qo) & set(qn)):
         a, b = qo[k], qn[k]
-        if a <= 0 or b < 0 or max(a, b) < 0.2:
+        if a <= 0 or b < 0 or max(a, b) < MIN_SEC:
             continue
         rel = (b - a) / a
         if abs(rel) >= threshold:
             moved.append((rel, k, a, b))
-    for rel, k, a, b in sorted(moved, reverse=True):
-        tags = []
-        class_drift = (
-            sdrift_r
-            if sdrift_r is not None and to.get(k) and tn.get(k)
-            else drift
+    return sorted(moved, reverse=True)
+
+
+def shared_totals(old: dict, new: dict) -> tuple[int, float, float]:
+    qo, qn = old["queries"], new["queries"]
+    shared = set(qo) & set(qn)
+    so = sum(qo[k] for k in shared if qo[k] >= 0)
+    sn = sum(qn[k] for k in shared if qn[k] >= 0)
+    return len(shared), so, sn
+
+
+def _iqr(xs: list[float]) -> float:
+    q = statistics.quantiles(xs, n=4, method="inclusive")
+    return q[2] - q[0]
+
+
+def run_bench(tree: str, entries: list[str]) -> dict:
+    """``bench.py --only`` from ``tree``; returns its ``queries`` map."""
+    r = subprocess.run(
+        [sys.executable, os.path.join(tree, "bench.py"), "--only", ",".join(entries)],
+        cwd=tree,
+        capture_output=True,
+        text=True,
+    )
+    if r.returncode != 0:
+        raise RuntimeError(
+            f"bench.py in {tree} exited {r.returncode}:\n{r.stderr[-2000:]}"
         )
-        if class_drift is not None:
-            residual = (b / a) / class_drift - 1
-            tags.append(f"drift-adjusted {residual * 100:+.0f}%")
-            if abs(residual) < threshold:
-                tags.append("within host drift")
-        ta, tb = to.get(k), tn.get(k)
-        if ta and tb:  # streaming on both sides
-            floor_dominated = (
-                a / ta <= FLOOR_SEC_PER_TRIGGER and b / tb <= FLOOR_SEC_PER_TRIGGER
+    return _last_json(r.stdout, f"bench.py in {tree}")["queries"]
+
+
+def paired_gate(
+    old: dict,
+    new: dict,
+    base: str,
+    threshold: float = 0.25,
+    repo: str = ROOT,
+    runner=run_bench,
+) -> int:
+    """The gate decision (see module doc); returns the exit code."""
+    flagged = [k for rel, k, _, _ in moved_entries(old, new, threshold) if rel > 0]
+    if not flagged:
+        _, so, sn = shared_totals(old, new)
+        if so > 0 and (sn - so) / so >= threshold:
+            print(
+                f"UNDECIDED: shared total {so:.1f}s -> {sn:.1f}s "
+                f"({(sn - so) / so * 100:+.0f}%) with no single entry flagged"
             )
-            tags.append(f"triggers {ta}->{tb}")
-            if ta != tb:
-                tags.append("trigger-count change")
-            if floor_dominated:
-                tags.append("floor-dominated")
-        note = ("  [" + ", ".join(tags) + "]") if tags else ""
+            return 2
+        print("PASS: no entry flagged as slower")
+        return 0
+    print(f"flagged: {', '.join(flagged)}; {PAIRS} paired reruns against {base}")
+    tmp = tempfile.mkdtemp(prefix="bench-gate-")
+    wt = os.path.join(tmp, "base")
+    prev = signal.signal(signal.SIGTERM, lambda *_: sys.exit(143))
+    try:
+        subprocess.run(
+            ["git", "-C", repo, "worktree", "add", "--detach", wt, base],
+            check=True,
+            capture_output=True,
+            text=True,
+        )
+        with open(os.path.join(wt, "bench.py")) as f:
+            if "--only" not in f.read():
+                raise RuntimeError(f"{base}'s bench.py has no --only selection")
+        samples: dict[str, dict[str, list[float]]] = {
+            k: {"base": [], "new": []} for k in flagged
+        }
+        for i in range(PAIRS):
+            order = [("base", wt), ("new", repo)]
+            if i % 2:
+                order.reverse()
+            got = {side: runner(tree, flagged) for side, tree in order}
+            for k in flagged:
+                for side in ("base", "new"):
+                    samples[k][side].append(got[side].get(k, -1.0))
+            print(
+                f"pair {i + 1} ({order[0][0]} first): "
+                + ", ".join(
+                    f"{k} {samples[k]['base'][-1]:.3f}->{samples[k]['new'][-1]:.3f}"
+                    for k in flagged
+                ),
+                flush=True,
+            )
+    finally:
+        subprocess.run(
+            ["git", "-C", repo, "worktree", "remove", "--force", wt],
+            capture_output=True,
+        )
+        shutil.rmtree(tmp, ignore_errors=True)
+        subprocess.run(["git", "-C", repo, "worktree", "prune"], capture_output=True)
+        signal.signal(signal.SIGTERM, prev)
+    failed, undecided = [], []
+    for k in flagged:
+        b, n = samples[k]["base"], samples[k]["new"]
+        if any(x < 0 for x in b):
+            undecided.append(k)
+            print(f"  {k}: UNDECIDED, the base tree failed it in a rerun")
+            continue
+        # a rep the working tree failed counts as slower
+        n = [x if x >= 0 else float("inf") for x in n]
+        wins = sum(y > x for x, y in zip(b, n))
+        gap = statistics.median(n) - statistics.median(b)
+        iqr = _iqr(b)
+        verdict = "FAIL" if wins >= WINS_NEEDED and gap > iqr else "ok"
+        print(
+            f"  {k}: {verdict}  slower in {wins}/{PAIRS} pairs, median "
+            f"{statistics.median(b):.3f}s -> {statistics.median(n):.3f}s "
+            f"(gap {gap:+.3f}s, base IQR {iqr:.3f}s)"
+        )
+        if verdict == "FAIL":
+            failed.append(k)
+    if failed:
+        print(f"FAIL: {', '.join(failed)}")
+        return 1
+    if undecided:
+        return 2
+    print("PASS: no flagged entry is slower in the paired reruns")
+    return 0
+
+
+def report(old: dict, new: dict, threshold: float) -> None:
+    n, so, sn = shared_totals(old, new)
+    pct = f"  ({(sn - so) / so * 100:+.1f}%)" if so > 0 else ""
+    print(f"shared entries: {n}  old total {so:.1f}s  new total {sn:.1f}s{pct}")
+    co, cn = old.get("calibration") or {}, new.get("calibration") or {}
+    ratios = [f"{k} x{cn[k] / co[k]:.2f}" for k in sorted(co) if co[k] > 0 and cn.get(k, -1) > 0]
+    if ratios:
+        print(f"note, fixed-code calibration new/old: {', '.join(ratios)}")
+    to, tn = old.get("triggers", {}), new.get("triggers", {})
+    for rel, k, a, b in moved_entries(old, new, threshold):
+        ta, tb = to.get(k), tn.get(k)
+        note = f"  [triggers {ta}->{tb}]" if ta and tb else ""
         print(f"  {k:45s} {a:8.3f} -> {b:8.3f}  ({rel * 100:+.0f}%){note}")
+    qo, qn = old["queries"], new["queries"]
     only_old = sorted(set(qo) - set(qn))
     only_new = sorted(set(qn) - set(qo))
     if only_old:
         print(f"removed ({len(only_old)}): {', '.join(only_old)}")
     if only_new:
         print(f"added ({len(only_new)}): {', '.join(only_new)}")
+
+
+def main(argv: list[str]) -> int:
+    ap = argparse.ArgumentParser(
+        description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter
+    )
+    ap.add_argument("old")
+    ap.add_argument("new")
+    ap.add_argument("--threshold", type=float, default=0.25)
+    ap.add_argument("--force", action="store_true", help="diff across protocols")
+    ap.add_argument("--gate", action="store_true", help="decide by paired reruns")
+    ap.add_argument("--base", metavar="REV", help="the gate's base revision")
+    args = ap.parse_args(argv)
+    if args.gate and args.base is None:
+        ap.error("--gate needs --base REV")
+    old, new = _load(args.old), _load(args.new)
+    po = old.get("bench_protocol", "pre-v2 (untagged)")
+    pn = new.get("bench_protocol", "pre-v2 (untagged)")
+    if po != pn and not args.force:
+        print(
+            f"REFUSING cross-protocol comparison: {args.old} is '{po}', "
+            f"{args.new} is '{pn}' — deltas would be measurement artifacts "
+            "(ADVICE r10). Pass --force to diff anyway; do not quote the "
+            "result as a regression/improvement."
+        )
+        return 2 if args.gate else 0
+    if args.gate:
+        try:
+            return paired_gate(old, new, args.base, args.threshold)
+        except (subprocess.CalledProcessError, RuntimeError) as e:
+            # a rerun that cannot run decides nothing
+            print(f"UNDECIDED: {e} {getattr(e, 'stderr', '') or ''}".strip())
+            return 2
+    report(old, new, args.threshold)
     return 0
 
 

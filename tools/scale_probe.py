@@ -1,14 +1,25 @@
-"""Empirical scale probe: run the most expensive registry ops at sf0.1 and
-at a synthetic ~10x corpus, and measure the SLOPE (VERDICT r11 next-round #1).
+"""Build the synthetic 10x probe corpus for the scale slope (VERDICT r11
+next-round #1).
 
 The 100 TB story was previously argued from plan shapes and state-bound
-proofs at one scale; this measures it. For each probed op the tool records
-wall time, micro-batch (trigger) count, and the max keyed-state size
-(``stateOperators[].numRowsTotal`` off the progress events) at both scales,
-and emits SCALE_r12.json with per-op ratios. "Scales" here means: wall grows
-at most ~linearly in input rows (streaming replays keep the same trigger
-count, so their per-trigger data grows 10x), and streaming state stays at
-the live-window size, not the key-domain history.
+proofs at one scale; the slope measures it. This tool only WRITES the probe
+corpus; the measurement is bench.py's own protocol, run once per scale:
+
+    python tools/scale_probe.py /tmp/scale/f1 --factor 1
+    python tools/scale_probe.py /tmp/scale/f10 --factor 10
+    for d in f1 f10; do
+        SPARK_GRAFT_SF_DIR=/tmp/scale/$d python bench.py \
+            --only streaming_dedup_minhash_ttl,streaming_events_funnel_ttl,... \
+            > /tmp/scale/$d.json
+    done
+
+Each summary carries the per-entry wall (``queries``), micro-batch count
+(``triggers``) and peak keyed-state rows (``state.<entry>.peak_rows``), so
+the slope is the f10/f1 ratio of each. "Scales" means: wall grows at most
+~linearly in input rows (streaming replays keep the same trigger count, so
+their per-trigger data grows 10x), and streaming state stays at the
+live-window size, not the key-domain history. bench.py materializes every
+shared corpus cache at both scales, as it does in a full run.
 
 10x corpus construction (preserves dup-rate and skew — naive replication
 would give every document 10 exact copies and inflate the near-dup pair
@@ -37,14 +48,9 @@ count quadratically):
   bound.
 - every other table is hard-linked from the source dir unchanged.
 
-Because the embedding table is generated on both sides, the probe builds
-TWO dirs: a factor-1 probe dir (hardlinked fixture tables + generated
-embeddings) and the factor-N dir — and the slope is measured between them.
-
-Usage:
-    python tools/scale_probe.py [--small /root/testdata/sf0.1]
-        [--work-dir /tmp/spark_graft_scale] [--factor 10]
-        [--reps 2] [--out SCALE_r12.json] [--ops name,name,...]
+Because the embedding table is generated on both sides, the slope is
+measured between a factor-1 probe dir (hardlinked fixture tables +
+generated embeddings) and the factor-N dir, never against the fixture.
 """
 
 from __future__ import annotations
@@ -53,28 +59,6 @@ import argparse
 import json
 import os
 import shutil
-import sys
-import time
-
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-# the registry's heaviest entries (BENCH_LOCAL_r11_final ranking) plus the
-# VERDICT-named families: near-dup dedup (both families, TTL'd forms),
-# embedding LSH clustering, the curation pipeline, streaming OVER, the
-# window TVF ops, and a heavy keyed-state TTL op
-DEFAULT_OPS = [
-    "streaming_dedup_minhash",
-    "streaming_dedup_minhash_ttl",
-    "streaming_dedup_embedding",
-    "streaming_dedup_embedding_ttl",
-    "dedup_embedding_clusters_lsh",
-    "curation_pipeline",
-    "streaming_over_range_agg",
-    "streaming_window_join",
-    "streaming_window_topn",
-    "streaming_events_funnel_ttl",
-]
-
 
 EMB_DIM = 256  # above the noise floor for this corpus size (see docstring)
 EMB_GROUP_P = 0.10  # probability a new row starts a dup group
@@ -220,259 +204,13 @@ def build_probe_corpus(small: str, out: str, factor: int) -> dict:
     return rows
 
 
-class _ProgressMeter:
-    """Counts triggers and tracks the max keyed-state rows across every
-    streaming query that progresses while an op runs."""
-
-    def __init__(self):
-        self.triggers = 0
-        self.max_state_rows = 0
-
-    def reset(self):
-        self.triggers = 0
-        self.max_state_rows = 0
-
-    def snap(self):
-        return (self.triggers, self.max_state_rows)
-
-
-def _install_meter(spark) -> _ProgressMeter:
-    from pyspark.sql.streaming import StreamingQueryListener
-
-    meter = _ProgressMeter()
-
-    class L(StreamingQueryListener):
-        def onQueryStarted(self, event):
-            pass
-
-        def onQueryProgress(self, event):
-            meter.triggers += 1
-            try:
-                p = json.loads(event.progress.json)
-            except Exception:  # noqa: BLE001
-                return
-            for so in p.get("stateOperators") or []:
-                n = so.get("numRowsTotal") or 0
-                if n > meter.max_state_rows:
-                    meter.max_state_rows = n
-
-        def onQueryIdle(self, event):
-            pass
-
-        def onQueryTerminated(self, event):
-            pass
-
-    spark.streams.addListener(L())
-    return meter
-
-
-def geometry_report(rows: dict) -> dict:
-    """The adaptive geometry the ops RESOLVE at this corpus size (VERDICT
-    r13 #2: show which knobs engaged past their fixture floors). These are
-    the same functions the real query paths call with the real row counts —
-    recorded here so SCALE_r*.json documents the engagement, and asserted
-    against the floors in the summary."""
-    from flink_notebooks_spark.queries import llm
-
-    n_doc = rows.get("documents") or 0
-    n_emb = rows.get("embeddings") or 0
-    nlist = llm.ivf_cells_for(n_emb)
-    return {
-        "simhash_blocks": llm.simhash_blocks_for(n_doc),
-        "emb_lsh_bits": llm.lsh_bits_for(n_emb),
-        "ann_lsh_planes": llm.lsh_planes_for(n_emb),
-        "ivf_nlist": nlist,
-        "ivf_nprobe": llm.ivf_nprobe_for(nlist),
-        "ivf_train_sample": llm.ivf_train_sample_for(nlist),
-    }
-
-
-def ivf_recall_at(spark, sf_dir: str, sim_floor: float = 0.4) -> dict:
-    """VERDICT r13 #4: recall of the IVF ANN against the brute-force twin
-    at the probe corpus, for BOTH training paths — the driver-side sampler
-    and the distributed pyspark.ml KMeans trainer, engaged through its
-    public ``distributed_train`` parameter (the auto threshold sits at
-    ~4.2M vectors; forcing the parameter exercises the identical code path
-    on this corpus, where the brute-force truth is still computable).
-
-    Recall reports twice: over ALL top-k truth pairs, and restricted to
-    CONTRASTED pairs (true sim ≥ ``sim_floor``, the dedup threshold). On
-    the synthetic probe corpus most of a query's exact top-10 sits at the
-    random-cosine noise floor, where cell locality carries no signal and
-    no ANN can (or needs to) recall — the contrasted recall is the metric
-    the dedup/retrieval uses actually depend on."""
-    from flink_notebooks_spark.queries.llm import ann_ivf_topk, similarity_topk
-
-    truth_rows = similarity_topk(spark, sf_dir).select("q_id", "nn_id", "sim").collect()
-    truth = {(r["q_id"], r["nn_id"]) for r in truth_rows}
-    contrasted = {
-        (r["q_id"], r["nn_id"]) for r in truth_rows if r["sim"] >= sim_floor
-    }
-    out = {"truth_pairs": len(truth), "contrasted_pairs": len(contrasted)}
-    for label, dist in (("driver_train", False), ("distributed_train", True)):
-        t0 = time.time()
-        got = {
-            (r["q_id"], r["nn_id"])
-            for r in ann_ivf_topk(spark, sf_dir, distributed_train=dist)
-            .select("q_id", "nn_id")
-            .collect()
-        }
-        out[label] = {
-            "recall": round(len(got & truth) / max(len(truth), 1), 4),
-            "recall_contrasted": round(
-                len(got & contrasted) / max(len(contrasted), 1), 4
-            ),
-            "wall_sec": round(time.time() - t0, 3),
-        }
-    return out
-
-
-def _drop_strm_views(spark) -> None:
-    for t in spark.catalog.listTables():
-        if t.name.startswith("strm_"):
-            spark.catalog.dropTempView(t.name)
-
-
-def run_sweep(
-    spark, meter, sf_dir: str, ops: list[str], reps: int, preps: list[str] | None = None
-) -> dict:
-    from flink_notebooks_spark.queries import QUERIES
-    from flink_notebooks_spark.queries.corpus import _bm25_postings  # noqa: F401
-    from flink_notebooks_spark.queries.llm import (
-        cosine_pairs_df,
-        jaccard_pairs_df,
-        shingled_docs,
-        tokenized_docs,
-    )
-
-    prep_fns = {
-        "tokenized": tokenized_docs,
-        "shingled": shingled_docs,
-        "jaccard_pairs": jaccard_pairs_df,
-        "cosine_pairs": cosine_pairs_df,
-    }
-    if preps is None:
-        preps = list(prep_fns)
-    out = {}
-    # the shared corpus-prep caches are charged explicitly, like bench.py —
-    # dedup entries then measure their own work, not the shared preparation.
-    # `preps` restricts the set: the exact pair caches (jaccard/cosine) are
-    # O(n²)-family and only warranted when a probed op actually reads them —
-    # at factor 100 materializing an unused exact-GEMM pair table would
-    # dominate the whole probe.
-    t0 = time.time()
-    for pname in preps:
-        prep_fns[pname](spark, sf_dir).write.format("noop").mode("overwrite").save()
-    out["shared_corpus_prep"] = {
-        "wall_sec": round(time.time() - t0, 3),
-        "triggers": 0,
-        "max_state_rows": 0,
-        "out_rows": None,
-    }
-    for name in ops:
-        fn = QUERIES[name]
-        best = None
-        for _ in range(reps):
-            meter.reset()
-            t0 = time.time()
-            df = fn(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()  # bench protocol
-            wall = round(time.time() - t0, 3)
-            n = df.count()  # outside the timer: output-volume sanity only
-            trig, state = meter.snap()
-            rec = {
-                "wall_sec": wall,
-                "triggers": trig,
-                "max_state_rows": state,
-                "out_rows": n,
-            }
-            if best is None or wall < best["wall_sec"]:
-                # min wall; triggers/state are deterministic across reps
-                best = rec
-            _drop_strm_views(spark)
-        out[name] = best
-        print(f"  {sf_dir}: {name}: {best}", file=sys.stderr)
-    return out
-
-
 def main() -> None:
-    ap = argparse.ArgumentParser()
+    ap = argparse.ArgumentParser(description="Write the scale-probe corpus dir.")
+    ap.add_argument("out", help="corpus dir to write (rebuilt unless its manifest matches)")
     ap.add_argument("--small", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    ap.add_argument("--work-dir", default="/tmp/spark_graft_scale")
     ap.add_argument("--factor", type=int, default=10)
-    ap.add_argument("--reps", type=int, default=2)
-    ap.add_argument("--out", default="SCALE_r12.json")
-    ap.add_argument("--ops", default=",".join(DEFAULT_OPS))
-    ap.add_argument(
-        "--preps",
-        default=None,
-        help="comma list of shared preps to materialize "
-        "(tokenized,shingled,jaccard_pairs,cosine_pairs); default all",
-    )
-    ap.add_argument(
-        "--ivf-recall",
-        action="store_true",
-        help="also measure IVF recall vs the brute-force twin at the big "
-        "corpus, for both the driver-side and distributed training paths",
-    )
     args = ap.parse_args()
-    ops = [o for o in args.ops.split(",") if o]
-
-    small_dir = os.path.join(args.work_dir, "f1")
-    big_dir = os.path.join(args.work_dir, f"f{args.factor}")
-    small_rows = build_probe_corpus(args.small, small_dir, 1)
-    big_rows = build_probe_corpus(args.small, big_dir, args.factor)
-    print(f"probe corpora: f1={small_rows} f{args.factor}={big_rows}", file=sys.stderr)
-
-    from flink_notebooks_spark.session import get_spark
-
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
-    spark = get_spark("scale-probe", cpus=cpus)
-    meter = _install_meter(spark)
-    # one throwaway stream: state-store/commit-log init is ~5 s once
-    wq = (
-        spark.readStream.format("rate").option("rowsPerSecond", "1").load()
-        .groupBy("value").count()
-        .writeStream.format("memory").queryName("scale_probe_warmup")
-        .outputMode("update").trigger(availableNow=True).start()
-    )
-    wq.awaitTermination()
-
-    preps = [p for p in args.preps.split(",") if p] if args.preps else None
-    small_res = run_sweep(spark, meter, small_dir, ops, args.reps, preps)
-    big_res = run_sweep(spark, meter, big_dir, ops, args.reps, preps)
-
-    report = {
-        "factor": args.factor,
-        "fixture_dir": args.small,
-        "small_dir": small_dir,
-        "big_dir": big_dir,
-        "small_rows": small_rows,
-        "big_rows": big_rows,
-        "cpus": cpus,
-        "reps": args.reps,
-        "geometry": {
-            "small": geometry_report(small_rows),
-            "big": geometry_report(big_rows),
-        },
-        "ops": {},
-    }
-    if args.ivf_recall:
-        print("measuring IVF recall at the big corpus…", file=sys.stderr)
-        report["ivf_recall_big"] = ivf_recall_at(spark, big_dir)
-        print(f"  ivf_recall: {report['ivf_recall_big']}", file=sys.stderr)
-    for name in ["shared_corpus_prep", *ops]:
-        s, b = small_res[name], big_res[name]
-        rec = {"small": s, "big": b}
-        if s["wall_sec"] > 0:
-            rec["wall_ratio"] = round(b["wall_sec"] / s["wall_sec"], 2)
-        if s["max_state_rows"]:
-            rec["state_ratio"] = round(b["max_state_rows"] / s["max_state_rows"], 2)
-        report["ops"][name] = rec
-    spark.stop()
-    with open(args.out, "w") as f:
-        json.dump(report, f, indent=1)
-    print(json.dumps({k: v.get("wall_ratio") for k, v in report["ops"].items()}))
+    print(json.dumps(build_probe_corpus(args.small, args.out, args.factor)))
 
 
 if __name__ == "__main__":
