@@ -8,9 +8,11 @@ driver transfer) — the number measures engine execution, not collect().
 
     python bench.py [--only name,name,...]
 
-``--only`` runs just the named registry entries and calibration jobs under
-the same protocol (warm-up, shared corpus prep, grouped reps, shuffled
-order); an unknown name exits 2 before any Spark session starts.
+``--only`` runs just the named registry entries and calibration jobs with
+the same steps (warm-up, shared corpus prep, grouped reps, shuffled order);
+its archive is marked ``grouped-warmup-v2-only``, since its medians are not
+comparable with a full run's. An unknown name exits 2 before any Spark
+session starts.
 """
 
 from __future__ import annotations
@@ -169,6 +171,16 @@ def _parse_only(argv: list[str] | None) -> set[str] | None:
     if unknown or not names:
         ap.error(f"unknown bench entries: {', '.join(sorted(unknown)) or '(none given)'}")
     return names
+
+
+def bench_protocol(only: set[str] | None) -> str:
+    """The archive's measurement protocol marker: grouped per-query reps
+    with a discarded warm-up rep (round 10+). Numbers from different
+    protocols are NOT comparable: the grouped-warmup protocol lowers
+    medians against the old interleaved one, and an ``--only`` run's
+    medians differ from a full run's of the same entry by up to 25%, so
+    ``bench_compare.py`` refuses to diff across markers."""
+    return "grouped-warmup-v2" if only is None else "grouped-warmup-v2-only"
 
 
 def main(argv: list[str] | None = None) -> None:
@@ -457,12 +469,7 @@ def main(argv: list[str] | None = None) -> None:
         # stay comparable with pre-r13 archives.
         "calibration": {name: median(xs) for name, xs in calib_runs.items()},
         "exec_order": "shuffled-per-run",
-        # measurement protocol marker: grouped per-query reps with a
-        # discarded warm-up rep (round 10+). Numbers from different
-        # protocols are NOT comparable — the grouped-warmup protocol
-        # systematically lowers medians vs the old interleaved one, so
-        # cross-round deltas must only be quoted protocol-to-same-protocol.
-        "bench_protocol": "grouped-warmup-v2",
+        "bench_protocol": bench_protocol(only),
     }
     spark.stop()
     # Emit the summary as the sole, flushed, final stdout line: stop the

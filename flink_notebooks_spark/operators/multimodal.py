@@ -1,10 +1,9 @@
 """Multimodal columns: opaque binary payloads + typed metadata + decode plumbing.
 
 Design (per the 100 TB pipeline contract): image/audio/video payloads ride as
-``binary`` columns with a typed metadata struct; decode / feature-extraction /
-resize / frame-sampling run as Arrow-batched ``mapInPandas`` stages so the
-payload bytes never leave the executors and each Python batch amortizes
-serialization.
+``binary`` columns with a typed metadata struct; decode and feature
+extraction run as Arrow-batched ``mapInPandas`` stages so the payload bytes
+never leave the executors and each Python batch amortizes serialization.
 
 Decode is two-layered:
 
@@ -381,44 +380,3 @@ def extract_features(df: DataFrame, id_col: str = "doc_id", fake: bool = True) -
             yield pd.DataFrame({id_col: pdf[id_col].to_numpy(), "features": feats})
 
     return pruned.mapInPandas(run, f"{id_col} long, features array<double>")
-
-
-# frame-index estimation when the container carries only a duration (mvhd
-# has no frame count — that would need an stts/stsz walk): assume a nominal
-# fps. Sampling INDICES scale linearly with fps, so a wrong nominal changes
-# density, never correctness of the plumbing.
-NOMINAL_FPS = 30
-
-
-def frame_sample(
-    df: DataFrame, id_col: str = "doc_id", every: int = 10, fake: bool = True
-) -> DataFrame:
-    """video payload → one row per sampled frame index (explode-shaped
-    mapInPandas). For containers whose header yields a REAL duration (MP4
-    ``mvhd`` via sniff_header), ``n_frames = duration × NOMINAL_FPS`` — a
-    header-derived count, no codec needed; otherwise the fake derives a
-    count from payload length (``fake=False`` raises there, marking where
-    ffmpeg/pyav would plug in)."""
-    pruned = df.select(id_col, "payload")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, frames = [], []
-            for i, p in zip(pdf[id_col], pdf["payload"]):
-                p = bytes(p)
-                hdr = sniff_header(p) if p else None
-                if hdr is not None and hdr.get("duration_s"):
-                    n_frames = max(1, int(hdr["duration_s"] * NOMINAL_FPS))
-                elif not fake:
-                    raise NotImplementedError(
-                        "real frame sampling of containers without a parsed "
-                        "duration needs ffmpeg/pyav"
-                    )
-                else:
-                    n_frames = max(1, len(p) // 64)
-                for k in range(0, n_frames, every):
-                    ids.append(i)
-                    frames.append(k)
-            yield pd.DataFrame({id_col: ids, "frame_idx": frames})
-
-    return pruned.mapInPandas(run, f"{id_col} long, frame_idx int")

@@ -446,14 +446,6 @@ def _keyed_shards(spark, sf_dir, table: str = "events") -> int:
     )
 
 
-def minhash_pair_stream(spark, sf_dir, staging_dir: str | None = None):
-    """The UNSINKED verified-pair stream behind ``streaming_dedup_minhash``
-    — exposed so tests (and real deployments) can attach their own sink +
-    checkpointLocation; a restart with the same ``staging_dir`` resumes
-    bucket state from the checkpoint."""
-    return _minhash_pair_stream(spark, sf_dir, staging_dir)
-
-
 @query("streaming_dedup_minhash")
 def streaming_dedup_minhash(spark, sf_dir):
     """Streaming MinHash-LSH near-dedup: detect each arriving document's

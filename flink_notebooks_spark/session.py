@@ -260,6 +260,18 @@ def scoped_shuffle_partitions(spark: SparkSession, partitions: int):
             spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
+def _worker_pythonpath() -> str:
+    """``spark.executorEnv.PYTHONPATH`` with this package's parent directory
+    appended, so the workers can run ``-m flink_notebooks_spark.daemon``.
+    A value the running JVM already holds (from spark-defaults.conf or
+    ``--conf``) is kept in front."""
+    from pyspark import SparkConf
+
+    parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    parts = SparkConf().get("spark.executorEnv.PYTHONPATH", "").split(os.pathsep)
+    return os.pathsep.join([p for p in parts if p and p != parent] + [parent])
+
+
 def get_spark(app_name: str = "flink-notebooks-spark", cpus: int | None = None) -> SparkSession:
     """Build (or get) a tuned local SparkSession.
 
@@ -284,6 +296,12 @@ def get_spark(app_name: str = "flink-notebooks-spark", cpus: int | None = None) 
         # noise in bench/test runs
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.parquet.compression.codec", "zstd")
+        # Python workers start from flink_notebooks_spark/daemon.py, which
+        # drops Spark's archives from their path (the per-task
+        # invalidate_caches() floor). Static confs: a driver-provided
+        # session keeps Spark's default daemon.
+        .config("spark.python.daemon.module", "flink_notebooks_spark.daemon")
+        .config("spark.executorEnv.PYTHONPATH", _worker_pythonpath())
     )
     # shuffle/spill scratch on the fastest local storage (static conf — must
     # be set before the JVM starts; see _scratch_local_dir for the measured

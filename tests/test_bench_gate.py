@@ -264,3 +264,20 @@ def test_bench_only_rejects_unknown_entry_before_spark():
     )
     assert r.returncode == 2
     assert "no_such_entry" in r.stderr and r.stdout == ""
+
+
+def test_only_runs_carry_their_own_protocol(tmp_path):
+    # --only medians differ from full-run medians of the same entry, so a
+    # full archive and an --only archive are refused like any other
+    # cross-protocol pair
+    sys.path.insert(0, str(REPO))
+    from bench import bench_protocol
+
+    full, only = bench_protocol(None), bench_protocol({"q1"})
+    assert full == "grouped-warmup-v2" and only != full
+    old, new = tmp_path / "full.json", tmp_path / "only.json"
+    old.write_text(json.dumps({**_archive({"q1": 5.0}), "bench_protocol": full}))
+    new.write_text(json.dumps({**_archive({"q1": 9.0}), "bench_protocol": only}))
+    r = _cli(str(old), str(new))
+    assert r.returncode == 0 and "REFUSING" in r.stdout and "+80%" not in r.stdout
+    assert _cli(str(old), str(new), "--gate", "--base", "HEAD").returncode == 2

