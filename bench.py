@@ -26,6 +26,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from pyspark.sql.streaming import StreamingQueryListener  # noqa: E402
+
 from flink_notebooks_spark.queries import QUERIES  # noqa: E402
 from flink_notebooks_spark.session import get_spark, scoped_shuffle_partitions  # noqa: E402
 
@@ -183,6 +185,51 @@ def bench_protocol(only: set[str] | None) -> str:
     return "grouped-warmup-v2" if only is None else "grouped-warmup-v2-only"
 
 
+def _new_rep() -> dict:
+    return {"triggers": 0, "duration_ms": {}, "peak_rows": 0, "commit_ms": 0}
+
+
+class TriggerCounter(StreamingQueryListener):
+    """Per-rep trigger counts, with each trigger's time split (durationMs:
+    addBatch, walCommit, commitOffsets, ...) and state (numRowsTotal,
+    commitTimeMs) summed per rep. Streaming replays at bench SFs are
+    trigger-floor-dominated, so a streaming entry's wall delta reads only
+    next to its trigger count. Progress events arrive asynchronously, so
+    one rep's last event can land after the next rep has begun: each run
+    is mapped to the rep current at its start (``onQueryStarted`` runs
+    before ``start()`` returns) and each event is credited by ``runId``.
+    Runs started before the listener was added are not counted."""
+
+    def __init__(self):
+        self.rep = _new_rep()
+        self._rep_of_run: dict = {}
+
+    def onQueryStarted(self, event):
+        self._rep_of_run[event.runId] = self.rep
+
+    def onQueryProgress(self, event):
+        p = event.progress
+        rep = self._rep_of_run.get(p.runId)
+        if rep is None:
+            return
+        rep["triggers"] += 1
+        for k, v in (p.durationMs or {}).items():
+            rep["duration_ms"][k] = rep["duration_ms"].get(k, 0) + v
+        for op in p.stateOperators or []:
+            rep["peak_rows"] = max(rep["peak_rows"], op.numRowsTotal)
+            rep["commit_ms"] += op.commitTimeMs
+
+    def onQueryTerminated(self, event):
+        # the bus delivers a run's termination after its last progress event
+        self._rep_of_run.pop(event.runId, None)
+
+    def drain(self, timeout_s: float = 10.0) -> None:
+        """Wait until every counted run's events have been delivered."""
+        deadline = time.time() + timeout_s
+        while self._rep_of_run and time.time() < deadline:
+            time.sleep(0.05)
+
+
 def main(argv: list[str] | None = None) -> None:
     only = _parse_only(argv)
     queries = {k: v for k, v in QUERIES.items() if only is None or k in only}
@@ -274,47 +321,9 @@ def main(argv: list[str] | None = None) -> None:
     )
     wq.awaitTermination()
 
-    # Per-entry micro-batch (trigger) counts: streaming replays at bench SFs
-    # are trigger-floor-dominated — ~1-3 s of per-micro-batch constants
-    # (trigger scheduling, state-store commit, Arrow round-trip) swamp the
-    # data-dependent part — so a wall-time delta on a streaming entry is
-    # only interpretable next to its trigger count (an extra eviction
-    # micro-batch reads as "1.5-2× slower" while the per-row cost is flat).
-    # The same progress events also carry where each trigger's time went
-    # (durationMs: addBatch, walCommit, commitOffsets, queryPlanning, ...)
-    # and the state it holds (stateOperators: numRowsTotal, commitTimeMs),
-    # summed per rep here. Delivery is via the listener bus and async, so
-    # the figures are accurate to the rep boundary within listener-thread
-    # latency (ms) — exact for terminated availableNow replays, approximate
-    # never by more than the final event. Batch entries count 0.
-    from pyspark.sql.streaming import StreamingQueryListener
-
-    def _new_rep() -> dict:
-        return {"triggers": 0, "duration_ms": {}, "peak_rows": 0, "commit_ms": 0}
-
-    class _TriggerCounter(StreamingQueryListener):
-        def __init__(self):
-            self.rep = _new_rep()
-
-        def onQueryStarted(self, event):
-            pass
-
-        def onQueryProgress(self, event):
-            p, rep = event.progress, self.rep
-            rep["triggers"] += 1
-            for k, v in (p.durationMs or {}).items():
-                rep["duration_ms"][k] = rep["duration_ms"].get(k, 0) + v
-            for op in p.stateOperators or []:
-                rep["peak_rows"] = max(rep["peak_rows"], op.numRowsTotal)
-                rep["commit_ms"] += op.commitTimeMs
-
-        def onQueryIdle(self, event):
-            pass
-
-        def onQueryTerminated(self, event):
-            pass
-
-    trigger_counter = _TriggerCounter()
+    # Per-entry micro-batch (trigger) counts and where each trigger's time
+    # went (see TriggerCounter). Batch entries count 0.
+    trigger_counter = TriggerCounter()
     spark.streams.addListener(trigger_counter)
 
     # Every query runs SPARK_GRAFT_BENCH_REPS measured times (default 3) and
@@ -411,9 +420,10 @@ def main(argv: list[str] | None = None) -> None:
     for name, fn in calibration.items():
         calib_runs[f"{name}_end"] = measure(fn)
 
+    trigger_counter.drain()
     timings = {name: median(xs) for name, xs in runs.items()}
-    # max over measured reps: replays are deterministic so reps agree; max
-    # is the conservative pick if a rep raced the async listener delivery
+    # max over measured reps: replays are deterministic and every progress
+    # event is credited to its own run's rep, so the reps agree
     triggers = {
         name: max((r["triggers"] for r in rs), default=0)
         for name, rs in stream_runs.items()

@@ -103,7 +103,7 @@ def _grouping_cols(df: DataFrame) -> list[str] | None:
     FlatMapGroupsInPandasWithState node and returns its grouping attributes
     IF they all survive into the output schema by name — the condition under
     which per-key changelog diffing (statement.changelog_entries) is sound.
-    Keyed-state ops (applyInPandasWithState — the TTL'd funnel/retention/
+    Keyed-state ops (shard_state.apply_keyed_state — the TTL'd funnel/retention/
     sessionize family) emit per-key revision rows in update mode, exactly
     the shape the diff reconstructs ±U kinds from. Plans that rename/drop
     keys (e.g. window aggs projecting window.start) fall back to INSERT-only
@@ -359,7 +359,7 @@ class Engine:
         protocol — token pages, pause/resume/cancel, and changelog-kind
         reconstruction (statement.changelog_entries), exactly like a
         streaming SELECT. This is the embedding surface for operators the
-        SQL dialect can't express (the registered applyInPandasWithState
+        SQL dialect can't express (the registered keyed-state
         queries: TTL'd funnel/retention/sessionize, streaming dedup):
         their per-key revision rows ride update mode, and _grouping_cols
         reads the keyed-state operator's grouping attributes, so the

@@ -25,7 +25,7 @@ matched input row; measures there default to RUNNING per-row evaluation
 honored. Alternation is supported as variable groups
 ``(A|B)`` with optional quantifiers — rows classify as the first listed
 variable whose predicate holds. Streaming input runs through
-``match_recognize_stream`` (keyed state over ``applyInPandasWithState``,
+``match_recognize_stream`` (keyed state through ``apply_keyed_state``,
 watermark-frontier emission — see its docstring). ``PREV`` in DEFINE works
 on both inputs: batch compiles it to a ``lag()`` window (codegen); streaming
 defers it into the keyed-state matcher, where the per-key sorted buffer plus
@@ -2882,7 +2882,7 @@ def match_recognize_stream(
     the capability Flink declares via its CEP/planner runtime, reference
     flink-runtime/build.gradle:37).
 
-    Keyed pattern matching via ``applyInPandasWithState``: per key, the
+    Keyed pattern matching via ``apply_keyed_state``: per key, the
     state holds the un-consumed row buffer (+ the match counter); every
     micro-batch appends the key's new rows, re-runs the same matcher core
     the batch operator uses over the MATURE prefix (rows with event time ≤
@@ -2924,8 +2924,6 @@ def match_recognize_stream(
     match resolves in favor of the emitted match; Flink's NFA makes the
     same call for AFTER MATCH SKIP PAST LAST ROW.
     """
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     if not df.isStreaming:
         raise ValueError("match_recognize_stream requires a streaming DataFrame")
     spec, measures, input_cols, out_schema, prepared, deferred, stateful = _prepare_spec(

@@ -5,7 +5,7 @@ rowtime RANGE|ROWS BETWEEN ... PRECEDING AND CURRENT ROW)`` on streaming
 tables (stock Flink 1.20 planner, reference flink-runtime/build.gradle:37);
 Spark Structured Streaming rejects window functions on streams
 (``NON_TIME_WINDOW_NOT_SUPPORTED_IN_STREAMING``), so this module supplies
-the operator: a keyed row buffer in ``applyInPandasWithState`` — the same
+the operator: a keyed row buffer in ``apply_keyed_state`` — the same
 state shape Flink's OverAggregate keeps — with
 
 * watermark-mature emission: a row emits (exactly once, in event-time
@@ -111,7 +111,8 @@ def streaming_over_window(
     """
     import numpy as np
     import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    from .shard_state import apply_keyed_state
 
     kind = frame[0]
     if kind not in ("range", "rows", "unbounded"):
@@ -376,18 +377,15 @@ def streaming_over_window(
         if out is not None:
             yield out
 
-    if shards is not None:
-        from .shard_state import shard_keyed_state
-
-        return shard_keyed_state(
-            df, list(partition_by), over_fn, out_schema, "append", "event", shards
-        )
-    return df.groupBy(*partition_by).applyInPandasWithState(
+    return apply_keyed_state(
+        df,
+        list(partition_by),
         over_fn,
         out_schema,
         state_schema,
         "append",
-        GroupStateTimeout.EventTimeTimeout,
+        "event",
+        shards=shards,
     )
 
 

@@ -1,4 +1,9 @@
-"""Shard-keyed execution of per-key ``applyInPandasWithState`` operators.
+"""The package's one keyed-state layer, and shard-keyed execution of
+per-key ``applyInPandasWithState`` operators.
+
+``apply_keyed_state`` is the only place the package calls Spark's keyed-
+state API: with ``shards=None`` it is Spark's per-key form, otherwise the
+shard-keyed wrapper below.
 
 Problem (guide §4: the JVM↔Python boundary): ``applyInPandasWithState``
 invokes the Python function once PER GROUP per micro-batch, and each
@@ -51,7 +56,7 @@ from __future__ import annotations
 
 import pickle
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 # Deadline sentinel: no timer set for this key.
@@ -81,26 +86,43 @@ def apply_keyed_state(
     timeout: str,
     shards: int | None = None,
 ) -> DataFrame:
-    """One-call dispatch for the repo's keyed-state operators: plain
-    ``groupBy(*key_cols).applyInPandasWithState`` when ``shards`` is None,
-    the shard-keyed wrapper otherwise (``state_schema`` describes the
-    per-key tuple and is unused in the sharded form, where per-key state is
-    pickled — kept in the signature so both forms read identically at the
-    call site). ``timeout``: ``'event'`` or ``'none'``."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
+    """The one keyed-state layer: every stateful Python operator of the
+    package runs through here. ``shards=None`` is Spark's per-key form,
+    plain ``groupBy(*key_cols).applyInPandasWithState`` (state rows follow
+    ``state_schema``); a shard count runs the shard-keyed wrapper, where
+    per-key state is pickled and ``state_schema`` sets the tuple arity that
+    ``state.update`` must match, as Spark's state conversion enforces on
+    the per-key form. ``timeout``: ``'event'`` or ``'none'``."""
     if shards is not None:
         return shard_keyed_state(
-            df, key_cols, fn, out_schema, mode, timeout, shards
+            df, key_cols, fn, out_schema, mode, timeout, shards, state_schema
         )
     return df.groupBy(*key_cols).applyInPandasWithState(
-        fn,
-        out_schema,
-        state_schema,
-        mode,
+        fn, out_schema, state_schema, mode, _group_state_timeout(timeout)
+    )
+
+
+def latest_revision(df: DataFrame, keys: list[str]) -> DataFrame:
+    """The rows of each key's latest revision (the ``rev`` column): the
+    final state of an update-mode keyed stream whose revisions are
+    cumulative, read back from its sink."""
+    w = Window.partitionBy(*keys)
+    return (
+        df.withColumn("maxrev", F.max("rev").over(w))
+        .filter(F.col("rev") == F.col("maxrev"))
+        .drop("maxrev")
+    )
+
+
+def _group_state_timeout(timeout: str):
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    if timeout not in ("event", "none"):
+        raise ValueError(f"keyed state: unknown timeout {timeout!r}")
+    return (
         GroupStateTimeout.EventTimeTimeout
         if timeout == "event"
-        else GroupStateTimeout.NoTimeout,
+        else GroupStateTimeout.NoTimeout
     )
 
 
@@ -113,17 +135,22 @@ class _KeyState:
     ever touching it (Spark raises on the access, not at plan time).
     ``event_timeout``: whether the operator was dispatched with
     ``timeout='event'``; setting a timer without it raises, as Spark's
-    GroupState does under NoTimeout."""
+    GroupState does under NoTimeout. ``n_fields``: the state schema's
+    top-level field count; ``update`` rejects a tuple of another length,
+    as Spark's state conversion does (None: unchecked)."""
 
-    __slots__ = ("_val", "_dl", "_timed_out", "_wm", "_touched", "_event_timeout")
+    __slots__ = (
+        "_val", "_dl", "_timed_out", "_wm", "_touched", "_event_timeout", "_n_fields"
+    )
 
-    def __init__(self, val, timed_out: bool, wm, event_timeout: bool = True):
+    def __init__(self, val, timed_out: bool, wm, event_timeout: bool, n_fields):
         self._val = val  # unpickled tuple or None
         self._dl = _NO_TIMER  # cleared on invocation, like Spark
         self._timed_out = timed_out
         self._wm = wm
         self._touched = False
         self._event_timeout = event_timeout
+        self._n_fields = n_fields
 
     @property
     def exists(self) -> bool:
@@ -142,7 +169,13 @@ class _KeyState:
     def update(self, new) -> None:
         if new is None:
             raise ValueError("cannot update state to None")
-        self._val = tuple(new)
+        new = tuple(new)
+        if self._n_fields is not None and len(new) != self._n_fields:
+            raise ValueError(
+                f"state tuple has {len(new)} fields, the state schema "
+                f"{self._n_fields}"
+            )
+        self._val = new
         self._touched = True
 
     def remove(self) -> None:
@@ -182,6 +215,7 @@ def shard_keyed_state(
     mode: str,
     timeout: str,
     shards: int,
+    state_schema: str | None = None,
 ) -> DataFrame:
     """Run per-key state function ``fn(key, pdfs, state)`` shard-keyed.
 
@@ -190,11 +224,15 @@ def shard_keyed_state(
     ``df.groupBy(*key_cols).applyInPandasWithState(fn, ...)`` would invoke
     it; only the grouping (and hence Python-call/state-I/O granularity)
     changes. ``timeout``: ``'event'`` (EventTimeTimeout) or ``'none'``.
+    ``state_schema``: the per-key state's DDL; its top-level field count,
+    taken here on the driver, is the arity ``state.update`` must match.
     """
-    from pyspark.sql.streaming.state import GroupStateTimeout
+    from pyspark.sql.types import DataType
 
-    if timeout not in ("event", "none"):
-        raise ValueError(f"shard_keyed_state: unknown timeout {timeout!r}")
+    group_timeout = _group_state_timeout(timeout)
+    n_fields = (
+        None if state_schema is None else len(DataType.fromDDL(state_schema).fields)
+    )
     shards = int(shards)
     key_list = list(key_cols)
 
@@ -224,7 +262,7 @@ def shard_keyed_state(
         def invoke(key, chunks, timed_out):
             ent = entries.get(key)
             val = pickle.loads(ent[0]) if ent is not None else None
-            ks = _KeyState(val, timed_out, wm, timeout == "event")
+            ks = _KeyState(val, timed_out, wm, timeout == "event", n_fields)
             for out in fn(key, chunks, ks):
                 if out is not None and len(out):
                     out_parts.append(out)
@@ -290,7 +328,5 @@ def shard_keyed_state(
         out_schema,
         "pks array<binary>, blobs array<binary>, dls array<bigint>",
         mode,
-        GroupStateTimeout.EventTimeTimeout
-        if timeout == "event"
-        else GroupStateTimeout.NoTimeout,
+        group_timeout,
     )

@@ -752,13 +752,13 @@ def _anomaly_scan_stream(spark, sf_dir, horizon_s: int | None = None):
     import math
 
     import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
 
     from ..io import (
         events_stream_schema,
         session_state_ttl_s,
         stream_ts_cols,
     )
+    from ..operators.shard_state import apply_keyed_state
 
     if horizon_s is None:
         horizon_s = session_state_ttl_s(spark)
@@ -826,25 +826,24 @@ def _anomaly_scan_stream(spark, sf_dir, horizon_s: int | None = None):
                         out.append((key[0], h, c, z, rev))
         yield pd.DataFrame(out, columns=["event_type", "h_us", "c", "z", "rev"])
 
-    return stream.groupBy("event_type").applyInPandasWithState(
+    return apply_keyed_state(
+        stream,
+        ["event_type"],
         scan,
         "event_type string, h_us long, c long, z double, rev long",
         "rev long, hs array<long>, cs array<long>",
         "update",
-        GroupStateTimeout.NoTimeout
-        if horizon_s is None
-        else GroupStateTimeout.EventTimeTimeout,
+        "none" if horizon_s is None else "event",
     )
 
 
 def _anomaly_latest(out):
     """Latest-revision anomaly rows per type (shared post-processing)."""
     from ..io import _EPOCH_NTZ
+    from ..operators.shard_state import latest_revision
 
-    w = Window.partitionBy("event_type")
     return (
-        out.withColumn("maxrev", F.max("rev").over(w))
-        .filter(F.col("rev") == F.col("maxrev"))
+        latest_revision(out, ["event_type"])
         .select(
             "event_type",
             F.expr(f"timestampadd(MICROSECOND, h_us, {_EPOCH_NTZ})").alias("h"),
@@ -973,7 +972,6 @@ def _funnel_state_stream(
     the divergence it buys is the same one Flink's TTL buys: a user
     returning after the horizon restarts the funnel."""
     import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
 
     from ..io import (
         events_stream_schema,
@@ -1056,12 +1054,9 @@ def _funnel_state_stream(
 def _funnel_rollup(out):
     """Latest-revision per user → the single-row funnel roll-up (shared by
     the NoTimeout and TTL'd forms; exact-integer-µs arithmetic throughout)."""
-    w = Window.partitionBy("user_id")
-    u = (
-        out.withColumn("maxrev", F.max("rev").over(w))
-        .filter(F.col("rev") == F.col("maxrev"))
-        .select("user_id", "t1", "t2", "t3")
-    )
+    from ..operators.shard_state import latest_revision
+
+    u = latest_revision(out, ["user_id"]).select("user_id", "t1", "t2", "t3")
     return u.agg(
         F.count("t1").alias("n_view_users"),
         F.count("t2").alias("n_click_users"),
@@ -1300,8 +1295,8 @@ def streaming_quality_filter(spark, sf_dir):
     scoring itself never enters Python (stateless Catalyst projection
     upstream of the keyed state op)."""
     import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
 
+    from ..operators.shard_state import apply_keyed_state, latest_revision
     from .streaming import _run_to_memory, _staged_table_stream
 
     raw = _staged_table_stream(
@@ -1334,18 +1329,18 @@ def streaming_quality_filter(spark, sf_dir):
             [(key[0], n, s, rev)], columns=["source", "n", "s", "rev"]
         )
 
-    res = kept.groupBy("source").applyInPandasWithState(
+    res = apply_keyed_state(
+        kept,
+        ["source"],
         roll,
         "source string, n long, s long, rev long",
         "rev long, n long, s long",
         "update",
-        GroupStateTimeout.NoTimeout,
+        "none",
     )
     out = _run_to_memory(res, "update")
-    w = Window.partitionBy("source")
     return (
-        out.withColumn("maxrev", F.max("rev").over(w))
-        .filter(F.col("rev") == F.col("maxrev"))
+        latest_revision(out, ["source"])
         .select(
             "source",
             F.col("n").alias("n_kept"),
@@ -1375,7 +1370,6 @@ def _retention_state_stream(
     horizon, who would found a spurious new cohort, which is why the
     registered horizon exceeds the re-appearance window."""
     import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
 
     from ..io import (
         events_stream_schema,
@@ -1453,15 +1447,11 @@ def _retention_state_stream(
 def _retention_rollup(spark, out):
     """Latest revision per user → (cohort_day, day_offset) user counts
     (shared by the NoTimeout and TTL'd forms)."""
+    from ..operators.shard_state import latest_revision
     from .llm import RETENTION_MAX_OFFSET
 
     day_us = 86_400_000_000
-    w = Window.partitionBy("user_id")
-    u = (
-        out.withColumn("maxrev", F.max("rev").over(w))
-        .filter(F.col("rev") == F.col("maxrev"))
-        .select("user_id", "first_us", "mask")
-    )
+    u = latest_revision(out, ["user_id"]).select("user_id", "first_us", "mask")
     offs = spark.range(RETENTION_MAX_OFFSET + 1).select(
         F.col("id").cast("int").alias("day_offset")
     )
@@ -1722,7 +1712,6 @@ def markov_delta_stream(spark, sf_dir, staging_dir=None, shards=None):
     checkpoint-restart test writes it to a parquet sink). Emits per-user
     (from_type, to_type, n) COUNT DELTAS per trigger."""
     import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
 
     from ..io import events_stream_schema, stream_ts_cols
     from .streaming import _staged_table_stream
@@ -2174,8 +2163,8 @@ def budget_admission_stream(spark, sf_dir, staging_dir=None):
     pattern); ``staging_dir`` pins the staged slices a restarted query's
     checkpoint references."""
     import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
 
+    from ..operators.shard_state import apply_keyed_state
     from .streaming import _staged_table_stream
 
     raw = _staged_table_stream(
@@ -2213,10 +2202,12 @@ def budget_admission_stream(spark, sf_dir, staging_dir=None):
         state.update((spent,))
         yield out
 
-    return stream.groupBy("source").applyInPandasWithState(
+    return apply_keyed_state(
+        stream,
+        ["source"],
         admit,
         "source string, doc_id long, n_tokens long, cum_tokens long",
         "spent long",
         "append",
-        GroupStateTimeout.NoTimeout,
+        "none",
     )

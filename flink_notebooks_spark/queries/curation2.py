@@ -302,8 +302,8 @@ def sample_per_source_stream(spark, sf_dir, staging_dir=None):
     curated, closed set) with exactly K (hash, id) pairs per key — bounded
     by construction, no TTL needed (NoTimeout is correct here)."""
     import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
 
+    from ..operators.shard_state import apply_keyed_state
     from .llm import SAMPLE_K
     from .streaming import _staged_table_stream
 
@@ -343,22 +343,24 @@ def sample_per_source_stream(spark, sf_dir, staging_dir=None):
             columns=["source", "rank", "doc_id", "rev"],
         )
 
-    return stream.groupBy("source").applyInPandasWithState(
+    return apply_keyed_state(
+        stream,
+        ["source"],
         serve,
         "source string, rank int, doc_id long, rev long",
         "rev long, hs array<string>, ids array<long>",
         "update",
-        GroupStateTimeout.NoTimeout,
+        "none",
     )
 
 
 def sample_latest_revision(out):
     """Each source's LATEST revision across emitted rows = its final sample
     (revisions are cumulative; shared with the restart test)."""
-    w = Window.partitionBy("source")
+    from ..operators.shard_state import latest_revision
+
     return (
-        out.withColumn("maxrev", F.max("rev").over(w))
-        .filter(F.col("rev") == F.col("maxrev"))
+        latest_revision(out, ["source"])
         .select("source", "rank", "doc_id")
         .orderBy("source", "rank")
     )

@@ -802,9 +802,9 @@ def knn_topk_stream(spark, sf_dir, staging_dir=None):
     needed (NoTimeout is correct here)."""
     import numpy as np
     import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
 
     from ..io import load_table
+    from ..operators.shard_state import apply_keyed_state
     from .llm import TOPK_QUERY_IDS
     from .streaming import _staged_table_stream
 
@@ -871,12 +871,14 @@ def knn_topk_stream(spark, sf_dir, staging_dir=None):
             rows, columns=["shard", "q_id", "nn_id", "sim", "rev"]
         )
 
-    return stream.groupBy("shard").applyInPandasWithState(
+    return apply_keyed_state(
+        stream,
+        ["shard"],
         serve,
         "shard int, q_id long, nn_id long, sim double, rev long",
         "rev long, ids array<long>, qs array<long>, sims array<double>",
         "update",
-        GroupStateTimeout.NoTimeout,
+        "none",
     )
 
 
@@ -884,10 +886,9 @@ def _knn_latest_topk(out):
     """Each shard's LATEST revision, re-ranked across shards — exact
     because per-subset top-k then merge IS global top-k. Shared by the
     query (memory sink) and the restart test (parquet sink union)."""
-    w = Window.partitionBy("shard")
-    latest = out.withColumn("maxrev", F.max("rev").over(w)).filter(
-        F.col("rev") == F.col("maxrev")
-    )
+    from ..operators.shard_state import latest_revision
+
+    latest = latest_revision(out, ["shard"])
     rw = Window.partitionBy("q_id").orderBy(F.desc("sim"), "nn_id")
     return (
         latest.withColumn("rn", F.row_number().over(rw))

@@ -229,13 +229,12 @@ SESSIONIZE_ORACLE = """
 @query("streaming_stateful_sessionize", oracle=SESSIONIZE_ORACLE)
 def streaming_stateful_sessionize(spark, sf_dir):
     """Custom stateful streaming operator (SURVEY.md T9/W9 class):
-    ``applyInPandasWithState`` sessionization — arbitrary per-key state, the
+    ``apply_keyed_state`` sessionization — arbitrary per-key state, the
     escape hatch for operators Spark SQL can't express. The bounded
     AvailableNow replay delivers each key in one batch, so sessions close
     deterministically at end-of-input (an unbounded run would emit on
     watermark timeouts instead; same state logic)."""
     import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
 
     stream = _read_events_stream(spark, sf_dir).select("user_id", "event_id", "ts_us")
 
@@ -394,7 +393,7 @@ def _staged_table_stream(
 STREAM_BUCKET_CAP = 100_000
 # State-key granularity: buckets are sharded pmod(bh, shards) so one Python
 # state-group call covers a shard of buckets, not a single bucket (see the
-# applyInPandasWithState comment in streaming_dedup_minhash). The shard
+# grouping comment in _minhash_pair_stream). The shard
 # count is CORPUS-derived (like llm.lsh_bits_for), never the core count:
 # per-shard members ≈ live docs / shards, so this target bounds the state
 # blob one group call round-trips while keeping Python invocations per
@@ -446,6 +445,85 @@ def _keyed_shards(spark, sf_dir, table: str = "events") -> int:
     )
 
 
+def _minhash_bucket_fn(ttl_s: int | None):
+    """The state function of ``_minhash_pair_stream``'s (band, shard)
+    groups. State packs the shard's buckets as parallel arrays: bucket
+    hashes, per-bucket member counts, the flattened members and, with
+    ``ttl_s``, each member's arrival ms (``mts``). With a TTL, members
+    older than ``watermark − ttl`` are pruned at every touch, a shard whose
+    members all aged out removes its state row, and an idle shard is
+    evicted whole on event-time timeout: state is O(live window)."""
+    from itertools import repeat
+
+    import pandas as pd
+
+    ttl = ttl_s is not None
+    width = 2 if ttl else 1  # member columns: ids[, mts]
+    op = "streaming_dedup_minhash" + ("_ttl" if ttl else "")
+    window = " within one TTL window" if ttl else ""
+
+    def bucket_pairs(key, pdfs, state):
+        if state.hasTimedOut:  # TTL only: an idle shard, every member stale
+            state.remove()
+            return
+        store: dict[int, tuple[list[int], ...]] = {}
+        if state.exists:
+            bhs, cnts, *cols = state.get
+            off = 0
+            for h, c in zip(bhs, cnts):
+                store[int(h)] = tuple(
+                    [int(x) for x in col[off : off + c]] for col in cols
+                )
+                off += c
+        if ttl:
+            cutoff_ms = state.getCurrentWatermarkMs() - ttl_s * 1000
+            for h, (mem, ts) in list(store.items()):
+                keep = [(d, m) for d, m in zip(mem, ts) if m > cutoff_ms]
+                if keep:
+                    store[h] = ([d for d, _ in keep], [m for _, m in keep])
+                else:
+                    del store[h]
+        pairs = []
+        for pdf in pdfs:
+            arrivals = pdf["arrival_us"] if ttl else repeat(None)
+            for bh, d, aus in zip(pdf["bh"], pdf["doc_id"], arrivals):
+                cols = store.setdefault(int(bh), ([], []) if ttl else ([],))
+                mem, d = cols[0], int(d)
+                if d in mem:  # replayed arrival
+                    continue
+                pairs.extend((min(d, m), max(d, m)) for m in mem)
+                mem.append(d)
+                if ttl:
+                    cols[1].append(int(aus) // 1000)
+                if len(mem) > STREAM_BUCKET_CAP:
+                    raise ValueError(
+                        f"{op}: LSH bucket {key} exceeds {STREAM_BUCKET_CAP} "
+                        f"members{window} — near-constant content has "
+                        "collapsed this band; salt-split or pre-filter "
+                        "boilerplate"
+                    )
+        if store:
+            vals = store.values()
+            state.update(
+                (list(store), [len(v[0]) for v in vals])
+                + tuple([x for v in vals for x in v[i]] for i in range(width))
+            )
+            if ttl:
+                # evict the whole shard once its newest member ages out
+                # (strictly above the watermark, as Spark requires of
+                # event-time timers)
+                newest_ms = max(m for v in vals for m in v[1])
+                state.setTimeoutTimestamp(
+                    max(newest_ms + ttl_s * 1000 + 1, state.getCurrentWatermarkMs() + 1)
+                )
+        else:
+            state.remove()
+        if pairs:
+            yield pd.DataFrame(pairs, columns=["a", "b"], dtype="int64")
+
+    return bucket_pairs
+
+
 @query("streaming_dedup_minhash")
 def streaming_dedup_minhash(spark, sf_dir):
     """Streaming MinHash-LSH near-dedup: detect each arriving document's
@@ -456,7 +534,7 @@ def streaming_dedup_minhash(spark, sf_dir):
     Plan: per-row MinHash(128) signatures as pure Catalyst expressions
     (``array_min`` over a ``transform`` lambda — identical hash derivation
     to the batch explode/min-reduce, so signatures are bit-equal), explode
-    to 32 (band, band-hash) keys, then ONE ``applyInPandasWithState``
+    to 32 (band, band-hash) keys, then ONE keyed-state operator
     keyed by bucket: state is the member doc_id list (longs only — never
     text or signatures), each new arrival emits candidate pairs against
     the stored members. Exact-Jaccard verification is a STREAM-STATIC join
@@ -490,10 +568,8 @@ def _minhash_pair_stream(
     ``EventTimeTimeout`` — state is O(docs per TTL window), Flink's
     ``table.exec.state.ttl`` on its dedup operators. Eviction is one batch
     delayed (the watermark is the previous batch's), same as Flink."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     from ..io import session_state_ttl_s
+    from ..operators.shard_state import apply_keyed_state
     from .llm import BAND_ROWS, N_HASHES, NGRAMS, WORDS, shingled_docs
 
     if ttl_s is None:
@@ -542,103 +618,6 @@ def _minhash_pair_stream(
         "doc_id", *extra, F.col("bb.band").alias("band"), F.col("bb.bh").alias("bh")
     )
 
-    def bucket_pairs(key, pdfs, state):
-        # state: one SHARD of buckets, packed as parallel arrays
-        # (bucket hashes, per-bucket member counts, flattened members)
-        store: dict[int, list[int]] = {}
-        if state.exists:
-            bhs, cnts, flat = state.get
-            off = 0
-            for h, c in zip(bhs, cnts):
-                store[int(h)] = [int(x) for x in flat[off : off + c]]
-                off += c
-        pairs = []
-        for pdf in pdfs:
-            for bh, d in zip(pdf["bh"], pdf["doc_id"]):
-                mem = store.setdefault(int(bh), [])
-                d = int(d)
-                if d in mem:  # replayed arrival
-                    continue
-                pairs.extend((min(d, m), max(d, m)) for m in mem)
-                mem.append(d)
-                if len(mem) > STREAM_BUCKET_CAP:
-                    raise ValueError(
-                        f"streaming_dedup_minhash: LSH bucket {key} exceeds "
-                        f"{STREAM_BUCKET_CAP} members — near-constant content "
-                        "has collapsed this band; salt-split or pre-filter "
-                        "boilerplate"
-                    )
-        state.update(
-            (
-                list(store.keys()),
-                [len(v) for v in store.values()],
-                [x for v in store.values() for x in v],
-            )
-        )
-        if pairs:
-            yield pd.DataFrame(pairs, columns=["a", "b"], dtype="int64")
-
-    def bucket_pairs_ttl(key, pdfs, state):
-        # TTL form: members carry arrival ms; stale members are pruned at
-        # every touch, empty shards drop their state row, idle shards are
-        # evicted whole on event-time timeout. State is O(live window).
-        if state.hasTimedOut:
-            state.remove()
-            return
-        store: dict[int, tuple[list[int], list[int]]] = {}
-        if state.exists:
-            bhs, cnts, flat, mts = state.get
-            off = 0
-            for h, c in zip(bhs, cnts):
-                store[int(h)] = (
-                    [int(x) for x in flat[off : off + c]],
-                    [int(m) for m in mts[off : off + c]],
-                )
-                off += c
-        cutoff_ms = state.getCurrentWatermarkMs() - ttl_s * 1000
-        for h in list(store):
-            mem, ts = store[h]
-            keep = [(d, m) for d, m in zip(mem, ts) if m > cutoff_ms]
-            if keep:
-                store[h] = ([d for d, _ in keep], [m for _, m in keep])
-            else:
-                del store[h]
-        pairs = []
-        for pdf in pdfs:
-            for bh, d, aus in zip(pdf["bh"], pdf["doc_id"], pdf["arrival_us"]):
-                mem, ts = store.setdefault(int(bh), ([], []))
-                d = int(d)
-                if d in mem:  # replayed arrival
-                    continue
-                pairs.extend((min(d, m), max(d, m)) for m in mem)
-                mem.append(d)
-                ts.append(int(aus) // 1000)
-                if len(mem) > STREAM_BUCKET_CAP:
-                    raise ValueError(
-                        f"streaming_dedup_minhash_ttl: LSH bucket {key} "
-                        f"exceeds {STREAM_BUCKET_CAP} members within one TTL "
-                        "window — salt-split or pre-filter boilerplate"
-                    )
-        if store:
-            state.update(
-                (
-                    list(store.keys()),
-                    [len(v[0]) for v in store.values()],
-                    [x for v in store.values() for x in v[0]],
-                    [m for v in store.values() for m in v[1]],
-                )
-            )
-            newest_ms = max(m for v in store.values() for m in v[1])
-            # evict the whole shard once its newest member ages out (strictly
-            # above the watermark, which Spark requires of event-time timers)
-            state.setTimeoutTimestamp(
-                max(newest_ms + ttl_s * 1000 + 1, state.getCurrentWatermarkMs() + 1)
-            )
-        else:
-            state.remove()
-        if pairs:
-            yield pd.DataFrame(pairs, columns=["a", "b"], dtype="int64")
-
     # Group by (band, shard-of-bucket), NOT (band, bucket): Python is invoked
     # once PER GROUP per trigger, and (band, bucket) keys are ~1 group per
     # input row (measured ~2 ms/group ⇒ the state op dominated end-to-end).
@@ -662,15 +641,15 @@ def _minhash_pair_stream(
         sharded = sharded.withColumn(
             "ev_time", F.timestamp_micros(F.col("arrival_us"))
         ).withWatermark("ev_time", "0 seconds")
-    cand = sharded.groupBy("band", "shard").applyInPandasWithState(
-        bucket_pairs if ttl_s is None else bucket_pairs_ttl,
+    cand = apply_keyed_state(
+        sharded,
+        ["band", "shard"],
+        _minhash_bucket_fn(ttl_s),
         "a long, b long",
         "bhs array<long>, cnts array<int>, members array<long>"
         + ("" if ttl_s is None else ", mts array<long>"),
         "append",
-        GroupStateTimeout.NoTimeout
-        if ttl_s is None
-        else GroupStateTimeout.EventTimeTimeout,
+        "none" if ttl_s is None else "event",
     )
     # exact verification: STREAM-STATIC join against the corpus shingle sets
     # (same expressions as the batch _verify_pairs, minus the sort — ORDER BY
@@ -704,7 +683,7 @@ def streaming_dedup_embedding(spark, sf_dir):
     Same geometry end-to-end: identical (seed, dim)-derived hyperplanes in
     a streaming ``mapInPandas`` (signatures are bit-equal to batch), 80
     bands × 6 bits exploded to compact (vec_id, band, sig, prefix) rows,
-    and ONE shard-keyed ``applyInPandasWithState`` operator whose state
+    and ONE shard-keyed keyed-state operator whose state
     holds member ids + their packed earlier-band signatures. The batch
     path's FIRST-AGREEING-BAND rule runs inside the state op — a pair is
     emitted only by its earliest agreeing band, so no pair-keyed dedup
@@ -748,9 +727,9 @@ def _embedding_cand_stream(spark, sf_dir, ttl_s: int | None = None):
     the verify joins so the stages can be measured independently)."""
     import numpy as np
     import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
 
     from ..io import session_state_ttl_s
+    from ..operators.shard_state import apply_keyed_state
     from .llm import CLUSTER_LSH_BANDS, CLUSTER_LSH_SEED
     from .llm import _embeddings_rowcount, lsh_bits_for
 
@@ -820,10 +799,36 @@ def _embedding_cand_stream(spark, sf_dir, ttl_s: int | None = None):
             "ev_time", F.timestamp_micros(F.col("arrival_us"))
         ).withWatermark("ev_time", "0 seconds")
 
-    def _bucket_arrivals(pdfs, ttl: bool):
+    return apply_keyed_state(
+        rows,
+        ["band", "shard"],
+        _embedding_bucket_fn(ttl_s),
+        "a long, b long",
+        "sigs array<long>, cnts array<int>, ids array<long>, prefs array<binary>"
+        + ("" if ttl_s is None else ", mts array<long>"),
+        "append",
+        "none" if ttl_s is None else "event",
+    )
+
+
+def _embedding_bucket_fn(ttl_s: int | None):
+    """The state function of ``_embedding_cand_stream``'s (band, shard)
+    groups. State packs the shard's buckets as parallel arrays: bucket
+    signatures, per-bucket member counts, the flattened member ids and
+    earlier-band prefixes and, with ``ttl_s``, each member's arrival ms
+    (``mts``) — pruned, emptied and evicted as in ``_minhash_bucket_fn``."""
+    import numpy as np
+    import pandas as pd
+
+    ttl = ttl_s is not None
+    width = 3 if ttl else 2  # member columns: ids, prefixes[, mts]
+    op = "streaming_dedup_embedding" + ("_ttl" if ttl else "")
+    window = " within one TTL window" if ttl else ""
+
+    def _bucket_arrivals(pdfs):
         """One micro-batch's rows for this (band, shard) group, grouped by
         bucket in vec_id order: yields (sig, vec_ids int64 array, prefix
-        bytes list[, arrival_us array]). Within-batch duplicate vec_ids are
+        bytes list, arrival_us array or None). Within-batch duplicate vec_ids are
         dropped here (first kept) — the emitted-pair multiset is order- and
         duplicate-independent, so grouping per bucket is exactly equivalent
         to the old one-arrival-at-a-time walk."""
@@ -841,10 +846,8 @@ def _embedding_cand_stream(spark, sf_dir, ttl_s: int | None = None):
                     grp = grp[keep]
                     aids = aids[keep]
             aprefs = [bytes(p) for p in grp["prefix"]]
-            if ttl:
-                yield int(sg), aids, aprefs, grp["arrival_us"].to_numpy(np.int64)
-            else:
-                yield int(sg), aids, aprefs, None
+            aus = grp["arrival_us"].to_numpy(np.int64) if ttl else None
+            yield int(sg), aids, aprefs, aus
 
     def _emit_bucket(ids, prefs_m, aids, aprefs, out):
         """Insert one bucket's new arrivals and emit their candidate pairs,
@@ -896,112 +899,58 @@ def _embedding_cand_stream(spark, sf_dir, ttl_s: int | None = None):
         prefs_m.extend(aprefs)
         return newmask
 
-    def _pairs_df(out):
-        cat = np.concatenate(out)
-        return pd.DataFrame({"a": cat[:, 0], "b": cat[:, 1]})
-
     def bucket_pairs(key, pdfs, state):
-        store: dict[int, tuple[list[int], list[bytes]]] = {}
-        if state.exists:
-            sigs_s, cnts, ids_s, prefs = state.get
-            off = 0
-            for sg, c in zip(sigs_s, cnts):
-                store[int(sg)] = (
-                    [int(x) for x in ids_s[off : off + c]],
-                    [bytes(p) for p in prefs[off : off + c]],
-                )
-                off += c
-        out: list = []
-        for sg, aids, aprefs, _ in _bucket_arrivals(pdfs, ttl=False):
-            ids, prefs_m = store.setdefault(sg, ([], []))
-            _emit_bucket(ids, prefs_m, aids, aprefs, out)
-            if len(ids) > STREAM_BUCKET_CAP:
-                raise ValueError(
-                    f"streaming_dedup_embedding: LSH bucket {key} exceeds "
-                    f"{STREAM_BUCKET_CAP} members — raise CLUSTER_LSH_BITS "
-                    "or pre-filter degenerate embeddings"
-                )
-        state.update(
-            (
-                list(store.keys()),
-                [len(v[0]) for v in store.values()],
-                [x for v in store.values() for x in v[0]],
-                [p for v in store.values() for p in v[1]],
-            )
-        )
-        if out:
-            yield _pairs_df(out)
-
-    def bucket_pairs_ttl(key, pdfs, state):
-        if state.hasTimedOut:
+        if state.hasTimedOut:  # TTL only: an idle shard, every member stale
             state.remove()
             return
-        store: dict[int, tuple[list[int], list[bytes], list[int]]] = {}
+        store: dict[int, tuple[list, ...]] = {}
         if state.exists:
-            sigs_s, cnts, ids_s, prefs, mts = state.get
+            sigs_s, cnts, *cols = state.get
             off = 0
             for sg, c in zip(sigs_s, cnts):
-                store[int(sg)] = (
-                    [int(x) for x in ids_s[off : off + c]],
-                    [bytes(p) for p in prefs[off : off + c]],
-                    [int(m) for m in mts[off : off + c]],
+                store[int(sg)] = tuple(
+                    [conv(x) for x in col[off : off + c]]
+                    for conv, col in zip((int, bytes, int), cols)
                 )
                 off += c
-        cutoff_ms = state.getCurrentWatermarkMs() - ttl_s * 1000
-        for sg in list(store):
-            ids, prefs_m, ts = store[sg]
-            keep = [
-                (d, p, m) for d, p, m in zip(ids, prefs_m, ts) if m > cutoff_ms
-            ]
-            if keep:
-                store[sg] = (
-                    [d for d, _, _ in keep],
-                    [p for _, p, _ in keep],
-                    [m for _, _, m in keep],
-                )
-            else:
-                del store[sg]
+        if ttl:
+            cutoff_ms = state.getCurrentWatermarkMs() - ttl_s * 1000
+            for sg, v in list(store.items()):
+                keep = [i for i, m in enumerate(v[2]) if m > cutoff_ms]
+                if keep:
+                    store[sg] = tuple([col[i] for i in keep] for col in v)
+                else:
+                    del store[sg]
         out: list = []
-        for sg, aids, aprefs, aus in _bucket_arrivals(pdfs, ttl=True):
-            ids, prefs_m, ts = store.setdefault(sg, ([], [], []))
-            newmask = _emit_bucket(ids, prefs_m, aids, aprefs, out)
-            ts.extend(int(x) // 1000 for x in aus[newmask])
-            if len(ids) > STREAM_BUCKET_CAP:
+        for sg, aids, aprefs, aus in _bucket_arrivals(pdfs):
+            cols = store.setdefault(sg, ([], [], []) if ttl else ([], []))
+            newmask = _emit_bucket(cols[0], cols[1], aids, aprefs, out)
+            if ttl:
+                cols[2].extend(int(x) // 1000 for x in aus[newmask])
+            if len(cols[0]) > STREAM_BUCKET_CAP:
                 raise ValueError(
-                    f"streaming_dedup_embedding_ttl: LSH bucket {key} "
-                    f"exceeds {STREAM_BUCKET_CAP} members within one TTL "
-                    "window — raise CLUSTER_LSH_BITS or pre-filter"
+                    f"{op}: LSH bucket {key} exceeds {STREAM_BUCKET_CAP} "
+                    f"members{window} — raise CLUSTER_LSH_BITS or pre-filter "
+                    "degenerate embeddings"
                 )
         if store:
+            vals = store.values()
             state.update(
-                (
-                    list(store.keys()),
-                    [len(v[0]) for v in store.values()],
-                    [x for v in store.values() for x in v[0]],
-                    [p for v in store.values() for p in v[1]],
-                    [m for v in store.values() for m in v[2]],
+                (list(store), [len(v[0]) for v in vals])
+                + tuple([x for v in vals for x in v[i]] for i in range(width))
+            )
+            if ttl:
+                newest_ms = max(m for v in vals for m in v[2])
+                state.setTimeoutTimestamp(
+                    max(newest_ms + ttl_s * 1000 + 1, state.getCurrentWatermarkMs() + 1)
                 )
-            )
-            newest_ms = max(m for v in store.values() for m in v[2])
-            state.setTimeoutTimestamp(
-                max(newest_ms + ttl_s * 1000 + 1, state.getCurrentWatermarkMs() + 1)
-            )
         else:
             state.remove()
         if out:
-            yield _pairs_df(out)
+            cat = np.concatenate(out)
+            yield pd.DataFrame({"a": cat[:, 0], "b": cat[:, 1]})
 
-    cand = rows.groupBy("band", "shard").applyInPandasWithState(
-        bucket_pairs if ttl_s is None else bucket_pairs_ttl,
-        "a long, b long",
-        "sigs array<long>, cnts array<int>, ids array<long>, prefs array<binary>"
-        + ("" if ttl_s is None else ", mts array<long>"),
-        "append",
-        GroupStateTimeout.NoTimeout
-        if ttl_s is None
-        else GroupStateTimeout.EventTimeTimeout,
-    )
-    return cand
+    return bucket_pairs
 
 
 def _staged_events_stream(

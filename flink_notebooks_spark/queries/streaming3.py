@@ -9,9 +9,10 @@ otherwise accumulates state forever. Round 10 closed that for W8 dedup
 closes the remaining class: the per-user funnel/retention/sessionize state,
 the per-type anomaly hour tables, and — the direct analog of the W8 leak —
 the streaming near-dup dedup signature state. Spark's mechanism is
-``GroupStateTimeout.EventTimeTimeout`` + ``state.setTimeoutTimestamp`` (whole
--key eviction) plus watermark-cutoff pruning inside the state update (content
-eviction where the key domain is bounded but per-key content grows).
+the event-time timeout (``apply_keyed_state(..., timeout='event')``) +
+``state.setTimeoutTimestamp`` (whole-key eviction) plus watermark-cutoff
+pruning inside the state update (content eviction where the key domain is
+bounded but per-key content grows).
 
 Each TTL'd form shares its state function with the NoTimeout original
 (corpus._funnel_state_stream / _retention_state_stream / _anomaly_scan_stream,
@@ -153,7 +154,6 @@ def _sessionize_ttl_stream(spark, sf_dir, shards: int | None = None):
     own sink and read ``numRowsTotal`` off the query's progress (the state
     ends at 1 row: the sentinel key; every real user evicted on close)."""
     import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
 
     gap = 1_800_000_000  # 30 min in µs, matches the batch analog
     gap_ms = gap // 1000

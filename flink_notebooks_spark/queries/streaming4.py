@@ -5,7 +5,7 @@ rowtime RANGE|ROWS BETWEEN ... PRECEDING AND CURRENT ROW)`` on streaming
 input (stock Flink 1.20 planner, reference flink-runtime/build.gradle:37;
 SURVEY.md §2.6 W4-W6 cover the batch forms — this module adds the streaming
 forms). Spark Structured Streaming has no native streaming OVER, so the
-operator is a keyed-state buffer (``applyInPandasWithState``), the same
+operator is a keyed-state buffer (``apply_keyed_state``), the same
 place Flink's OverAggregate operator keeps its row state:
 
 * rows buffer per key until the WATERMARK passes their event time — then
@@ -367,7 +367,8 @@ def _window_topn_stream(spark, sf_dir):
     """The unsinked window Top-N stream (tests attach their own sink and
     assert the closed-window state really frees)."""
     import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    from ..operators.shard_state import apply_keyed_state
 
     w_us = WJOIN_WINDOW_S * 1_000_000
     w_ms = WJOIN_WINDOW_S * 1000
@@ -413,12 +414,14 @@ def _window_topn_stream(spark, sf_dir):
             max(int(key[0]) * 1000 + w_ms + 1, state.getCurrentWatermarkMs() + 1)
         )
 
-    return events.groupBy("w_start").applyInPandasWithState(
+    return apply_keyed_state(
+        events,
+        ["w_start"],
         rank_window,
         "w_start long, event_type string, cnt long, rk long",
         "types array<string>, cnts array<long>",
         "append",
-        GroupStateTimeout.EventTimeTimeout,
+        "event",
     )
 
 

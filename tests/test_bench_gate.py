@@ -10,6 +10,7 @@ import json
 import random
 import subprocess
 import sys
+import time
 from pathlib import Path
 
 import pytest
@@ -281,3 +282,46 @@ def test_only_runs_carry_their_own_protocol(tmp_path):
     r = _cli(str(old), str(new))
     assert r.returncode == 0 and "REFUSING" in r.stdout and "+80%" not in r.stdout
     assert _cli(str(old), str(new), "--gate", "--base", "HEAD").returncode == 2
+
+
+def test_trigger_counter_credits_late_progress_to_its_own_rep():
+    # progress events arrive asynchronously: rep 1's last trigger is
+    # delivered after rep 2 has started, and must still count for rep 1
+    from types import SimpleNamespace
+
+    sys.path.insert(0, str(REPO))
+    from bench import TriggerCounter, _new_rep
+
+    def progress(run_id):
+        op = SimpleNamespace(numRowsTotal=5, commitTimeMs=2)
+        return SimpleNamespace(
+            progress=SimpleNamespace(
+                runId=run_id, durationMs={"addBatch": 10}, stateOperators=[op]
+            )
+        )
+
+    counter = TriggerCounter()
+    rep1 = counter.rep = _new_rep()
+    counter.onQueryStarted(SimpleNamespace(runId="run-1"))
+    for _ in range(3):
+        counter.onQueryProgress(progress("run-1"))
+    rep2 = counter.rep = _new_rep()
+    counter.onQueryStarted(SimpleNamespace(runId="run-2"))
+    counter.onQueryProgress(progress("run-1"))  # late event of rep 1
+    for _ in range(4):
+        counter.onQueryProgress(progress("run-2"))
+    counter.onQueryProgress(progress("started-before-the-listener"))
+    assert rep1["triggers"] == rep2["triggers"] == 4
+    assert rep1["duration_ms"] == rep2["duration_ms"] == {"addBatch": 40}
+    assert rep1["commit_ms"] == rep2["commit_ms"] == 8
+    assert rep1["peak_rows"] == 5
+    # the summary waits for every counted run's termination, which the bus
+    # delivers after the run's last progress event
+    counter.onQueryTerminated(SimpleNamespace(runId="run-1"))
+    t0 = time.time()
+    counter.drain(timeout_s=0.3)
+    assert time.time() - t0 >= 0.3  # run-2 is still open
+    counter.onQueryTerminated(SimpleNamespace(runId="run-2"))
+    t0 = time.time()
+    counter.drain(timeout_s=5.0)
+    assert time.time() - t0 < 1.0
