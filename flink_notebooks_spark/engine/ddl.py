@@ -21,7 +21,9 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import types as T
 
-from .types import _split_top, parse_type
+from . import sql_text
+from .sql_text import match_bracket, split_top
+from .types import parse_type
 
 
 @dataclass
@@ -104,52 +106,24 @@ _INTERVAL_UNITS = {
 
 
 def strip_comments(sql: str) -> str:
-    """Strip ``--`` and ``/* */`` comments OUTSIDE string literals.
+    """The statement without comments (``sql_text.strip_comments``),
+    surrounding blanks or trailing ``;``."""
+    return sql_text.strip_comments(sql).strip().rstrip(";").strip()
 
-    A blind regex eats ``--`` inside quoted option values (e.g.
-    ``'path' = '/a--b'``), silently corrupting the statement — found by the
-    DDL parse/render/parse property test. Single-quoted strings (with ``''``
-    escapes) are opaque to comment scanning, as in real SQL lexers.
-    """
-    out = []
-    i, n = 0, len(sql)
-    while i < n:
-        ch = sql[i]
-        if ch == "'":
-            j = i + 1
-            while j < n:
-                if sql[j] == "'":
-                    if j + 1 < n and sql[j + 1] == "'":  # '' escape
-                        j += 2
-                        continue
-                    break
-                j += 1
-            out.append(sql[i : j + 1])
-            i = j + 1
-        elif ch == "-" and sql.startswith("--", i):
-            while i < n and sql[i] != "\n":
-                i += 1
-            out.append(" ")
-        elif ch == "/" and sql.startswith("/*", i):
-            end = sql.find("*/", i + 2)
-            if sql.startswith("/*+", i):
-                # optimizer hint, not a comment: /*+ BROADCAST(t) */,
-                # Flink's /*+ OPTIONS(...) */ — must reach the planner
-                out.append(sql[i : (n if end < 0 else end + 2)])
-            else:
-                out.append(" ")
-            i = n if end < 0 else end + 2
-        else:
-            out.append(ch)
-            i += 1
-    return "".join(out).strip().rstrip(";").strip()
+
+# a column name: plain, or backtick-quoted with any characters inside
+_NAME = r"(`(?:[^`]|``)+`|\w+)"
+
+
+def _unquote(name: str) -> str:
+    return name[1:-1].replace("``", "`") if name.startswith("`") else name
 
 
 def _parse_watermark(body: str) -> WatermarkDef:
-    m = re.match(r"WATERMARK\s+FOR\s+(`?)(\w+)\1\s+AS\s+(.+)", body, re.IGNORECASE | re.DOTALL)
+    m = re.match(r"WATERMARK\s+FOR\s+" + _NAME + r"\s+AS\s+(.+)", body, re.IGNORECASE | re.DOTALL)
     if not m:
         raise ValueError(f"bad WATERMARK clause: {body!r}")
-    col, expr = m.group(2), m.group(3).strip()
+    col, expr = _unquote(m.group(1)), m.group(2).strip()
     delay = None
     dm = re.search(
         r"-\s*INTERVAL\s+'(\d+(?:\.\d+)?)'\s+(\w+)", expr, re.IGNORECASE
@@ -162,7 +136,7 @@ def _parse_watermark(body: str) -> WatermarkDef:
 
 
 def _parse_schema_items(body: str, table: TableDef) -> None:
-    for item in _split_top(body):
+    for item in split_top(body):
         item = item.strip()
         if not item:
             continue
@@ -171,28 +145,30 @@ def _parse_schema_items(body: str, table: TableDef) -> None:
             table.watermark = _parse_watermark(item)
             continue
         if up.startswith("PRIMARY KEY"):
-            m = re.match(r"PRIMARY\s+KEY\s*\(([^)]*)\)", item, re.IGNORECASE)
+            m = re.match(r"PRIMARY\s+KEY\s*\((.*)\)", item, re.IGNORECASE | re.DOTALL)
             if m:
-                table.primary_key = [c.strip().strip("`") for c in m.group(1).split(",")]
+                table.primary_key = [_unquote(c.strip()) for c in split_top(m.group(1))]
             continue
         if re.match(r"(UNIQUE|CONSTRAINT)\b", up):
             continue  # tolerated, unenforced
         # computed column:  name AS expr
-        m = re.match(r"(`?)([\w]+)\1\s+AS\s+(.+)", item, re.IGNORECASE | re.DOTALL)
+        m = re.match(_NAME + r"\s+AS\s+(.+)", item, re.IGNORECASE | re.DOTALL)
         if m and not re.match(
-            r"(`?)\w+\1\s+(ARRAY|MAP|ROW|MULTISET)\s*<", item, re.IGNORECASE
+            _NAME + r"\s+(ARRAY|MAP|ROW|MULTISET)\s*<", item, re.IGNORECASE
         ):
-            table.columns.append(ColumnDef(name=m.group(2), computed_expr=m.group(3).strip()))
+            table.columns.append(
+                ColumnDef(name=_unquote(m.group(1)), computed_expr=m.group(2).strip())
+            )
             continue
         # regular column:  name TYPE [NOT NULL] [COMMENT '...']
-        m = re.match(r"(`?)([\w]+)\1\s+(.+)", item, re.DOTALL)
+        m = re.match(_NAME + r"\s+(.+)", item, re.DOTALL)
         if not m:
             raise ValueError(f"bad column definition: {item!r}")
-        name, rest = m.group(2), m.group(3).strip()
+        name, rest = _unquote(m.group(1)), m.group(2).strip()
         comment = None
-        cm = re.search(r"\s+COMMENT\s+'([^']*)'\s*$", rest, re.IGNORECASE)
+        cm = re.search(r"\s+COMMENT\s+'((?:[^']|'')*)'\s*$", rest, re.IGNORECASE)
         if cm:
-            comment = cm.group(1)
+            comment = cm.group(1).replace("''", "'")
             rest = rest[: cm.start()].strip()
         nullable = True
         nm = re.search(r"\s+NOT\s+NULL\s*$", rest, re.IGNORECASE)
@@ -239,27 +215,12 @@ def _match_like_tail(rest: str):
     with_body = None
     m = re.match(r"WITH\s*\(", rest, re.IGNORECASE)
     if m:
-        depth, i = 1, m.end()
-        while i < len(rest) and depth > 0:
-            if rest[i] == "'":  # skip quoted values ('' escapes included)
-                j = i + 1
-                while j < len(rest):
-                    if rest[j] == "'":
-                        if j + 1 < len(rest) and rest[j + 1] == "'":
-                            j += 2
-                            continue
-                        break
-                    j += 1
-                i = j
-            elif rest[i] == "(":
-                depth += 1
-            elif rest[i] == ")":
-                depth -= 1
-            i += 1
-        if depth != 0:
+        try:
+            close = match_bracket(rest, m.end() - 1)
+        except ValueError:
             return None
-        with_body = rest[m.end() : i - 1]
-        rest = rest[i:].strip()
+        with_body = rest[m.end() : close]
+        rest = rest[close + 1 :].strip()
     lm = re.match(
         r"LIKE\s+(`?)([\w.]+)\1\s*(?:\((.*)\))?\s*$", rest, re.IGNORECASE | re.DOTALL
     )
@@ -401,20 +362,11 @@ def parse_statement(sql: str) -> Parsed:
         re.IGNORECASE,
     )
     if m:
-        # balanced-paren scan: regex can't split schema body from WITH(...)
-        # because both may nest parens (DECIMAL(10,2), quoted options)
-        body_start = m.end()  # just after the '('
-        depth, i = 1, body_start
-        while i < len(sql) and depth > 0:
-            if sql[i] == "(":
-                depth += 1
-            elif sql[i] == ")":
-                depth -= 1
-            i += 1
-        if depth != 0:
-            raise ValueError("unbalanced parentheses in CREATE TABLE")
-        schema_body = sql[body_start : i - 1]
-        rest = sql[i:].strip()
+        # the schema body ends at the bracket matching its "(" (the body
+        # and WITH (...) may both nest brackets and quote them)
+        close = match_bracket(sql, m.end() - 1)
+        schema_body = sql[m.end() : close]
+        rest = sql[close + 1 :].strip()
         options = {}
         partitioned: list[str] = []
         pm = re.match(
@@ -793,44 +745,25 @@ def parse_statement(sql: str) -> Parsed:
 
 
 def split_statements(text: str) -> list[str]:
-    """Split a cell/script into statements on top-level semicolons.
+    """Split a cell/script into statements on the semicolons in code.
 
     ``EXECUTE STATEMENT SET BEGIN …; …; END`` blocks contain semicolons and
-    stay one statement (split ends only after the closing END). ``--`` and
-    ``/* */`` comment spans are kept with the current statement and never
-    split it — a ';' or apostrophe inside a comment is plain text."""
-    out, cur, in_str = [], [], False
-    i = 0
-    while i < len(text):
-        ch = text[i]
-        if not in_str and ch == "-" and text[i : i + 2] == "--":
-            end = text.find("\n", i)
-            end = len(text) if end == -1 else end
-            cur.append(text[i:end])
-            i = end
-            continue
-        if not in_str and ch == "/" and text[i : i + 2] == "/*":
-            end = text.find("*/", i + 2)
-            end = len(text) if end == -1 else end + 2
-            cur.append(text[i:end])
-            i = end
-            continue
-        if ch == "'":
-            in_str = not in_str
-            cur.append(ch)
-        elif ch == ";" and not in_str:
-            stmt = "".join(cur).strip()
-            up = re.sub(r"\s+", " ", stmt.upper())
-            if up.startswith("EXECUTE STATEMENT SET") and not up.endswith(" END"):
-                cur.append(ch)  # still inside the BEGIN…END block
-            else:
-                if stmt and strip_comments(stmt).strip():
-                    out.append(stmt)
-                cur = []
-        else:
-            cur.append(ch)
-        i += 1
-    last = "".join(cur).strip()
-    if last and strip_comments(last).strip():
-        out.append(last)
+    stay one statement (split ends only after the closing END). Comments
+    stay with their statement; a ';' or apostrophe inside a comment, a
+    literal or a backtick name is plain text. Comment-only pieces are
+    dropped."""
+    out, cur = [], []
+    pieces = split_top(text, ";")
+    for k, piece in enumerate(pieces):
+        cur.append(piece)
+        code = re.sub(r"\s+", " ", strip_comments(";".join(cur)).upper())
+        if (
+            k < len(pieces) - 1
+            and code.startswith("EXECUTE STATEMENT SET")
+            and not code.endswith(" END")
+        ):
+            continue  # still inside the BEGIN … END block
+        if code:
+            out.append(";".join(cur).strip())
+        cur = []
     return out

@@ -28,7 +28,7 @@ from ..session import get_spark, scoped_shuffle_partitions, tune
 from ..sources import build_source, connectors
 from ..sources import filesystem as fs_sink
 from .ddl import Parsed, TableDef, parse_statement, split_statements
-from .types import _split_top
+from .sql_text import code_matches, match_bracket, split_top, sub_code
 from .window_sql import rewrite_flink_dialect
 from .statement import (
     BatchStatement,
@@ -1122,7 +1122,7 @@ class Engine:
             return (parts[0], parts[-1]) if len(parts) > 1 else ("", parts[-1])
 
         probe_keys, dim_keys = [], []
-        for clause in re.split(r"\bAND\b", m.group("cond"), flags=re.IGNORECASE):
+        for clause in split_top(m.group("cond"), "AND"):
             eq = clause.split("=")
             if len(eq) != 2:
                 return None  # non-equi temporal condition → fall back
@@ -1152,11 +1152,9 @@ class Engine:
         # identifier positions only — a string literal containing "p." or
         # "d." must survive verbatim (same literal-safety contract as the
         # streaming-OVER alias strip)
-        from .window_sql import _sub_code
-
         strip = rf"\b({palias}|{dalias})\s*\.\s*"
-        sel = _sub_code(strip, "", m.group("sel"))
-        rest = _sub_code(strip, "", m.group("rest") or "")
+        sel = sub_code(strip, "", m.group("sel"))
+        rest = sub_code(strip, "", m.group("rest") or "")
         return self.spark.sql(f"SELECT {sel} FROM __tj_result {rest}")
 
     _OVER_SPEC = re.compile(
@@ -1221,29 +1219,25 @@ class Engine:
 
         from ..operators.over_window import OverAgg, streaming_over_window
 
-        if not re.search(r"\bOVER\s*\(", sql, re.IGNORECASE):
-            return None
         # mask balanced OVER (...) spans so top-level parsing can't trip on
         # the parens/commas/ORDER BY inside the window specs
         specs: list[str] = []
         masked = []
-        i, n = 0, len(sql)
-        over_open = re.compile(r"\bOVER\s*\(", re.IGNORECASE)
-        while i < n:
-            m = over_open.search(sql, i)
-            if m is None:
-                masked.append(sql[i:])
-                break
-            depth, j = 1, m.end()
-            while j < n and depth:
-                depth += {"(": 1, ")": -1}.get(sql[j], 0)
-                j += 1
-            if depth:
+        i = 0
+        for m in code_matches(r"\bOVER\s*\(", sql):
+            if m.start() < i:
+                continue  # inside the previous OVER span
+            try:
+                j = match_bracket(sql, m.end() - 1)
+            except ValueError:
                 return None  # unbalanced — let the fallback error
             masked.append(sql[i : m.start()])
             masked.append(f"\x00W{len(specs)}\x00")
-            specs.append(sql[m.end() : j - 1].strip())
-            i = j
+            specs.append(sql[m.end() : j].strip())
+            i = j + 1
+        if not specs:
+            return None
+        masked.append(sql[i:])
         msql = "".join(masked)
         q = re.match(
             r"^\s*SELECT\s+(?P<sel>.+?)\s+FROM\s+(?P<tbl>[\w.`]+)"
@@ -1284,17 +1278,12 @@ class Engine:
             )
         alias = q.group("alias")
         if alias:
-            from .window_sql import _in_string
-
             _alias_re = re.compile(rf"\b{re.escape(alias)}\s*\.\s*")
 
             def strip_alias(s: str) -> str:
                 # identifier positions only — never rewrite inside a string
                 # literal (WHERE note = 't.x' must keep its literal intact)
-                return _alias_re.sub(
-                    lambda m: "" if not _in_string(s, m.start()) else m.group(0),
-                    s,
-                )
+                return sub_code(_alias_re, "", s)
 
         else:
             strip_alias = lambda s: s  # noqa: E731
@@ -1333,7 +1322,7 @@ class Engine:
             }[sp.group("unit").upper()]
             frame = ("range", int(float(sp.group("iv")) * unit_us))
         part_cols = []
-        for c in _split_top(sp.group("part"), angle=False):
+        for c in split_top(sp.group("part")):
             c = strip_alias(c).strip().strip("`")
             if not re.fullmatch(r"[\w.`]+", c):
                 raise NotImplementedError(
@@ -1343,7 +1332,7 @@ class Engine:
                 )
             part_cols.append(c.split(".")[-1].strip("`"))
         dtypes = dict(base.dtypes)
-        items = _split_top(q.group("sel"), angle=False)
+        items = split_top(q.group("sel"))
         aggs: list[OverAgg] = []
         carries: list[tuple[str, str]] = []  # (source col, output alias)
         post: list = []  # (kind, payload) in output order
@@ -1530,8 +1519,6 @@ class Engine:
         Returns None when ``sql`` is not this shape (callers fall through
         to the single-table path / the loud guard)."""
 
-        from .window_sql import _in_string
-
         m = re.match(
             r"^\s*SELECT\s+(?P<sel>.+?)\s+FROM\s+TABLE\s*\(\s*"
             r"(?P<fn>TUMBLE|HOP|CUMULATE|SESSION)\s*\(\s*"
@@ -1618,7 +1605,7 @@ class Engine:
         merge_items += [f"{k} AS __k{j}" for j, k in enumerate(key_cols)]
         partial_cols: list[tuple[str, str]] = []  # (state col, re-merge fn)
         n_agg = 0
-        for item in _split_top(sel, angle=False):
+        for item in split_top(sel):
             s = item.strip()
             km = KEY.match(s)
             if km:
@@ -1688,10 +1675,7 @@ class Engine:
             )
 
         def sub_cw(text: str, lit: str) -> str:
-            return call_re.sub(
-                lambda mm: mm.group(0) if _in_string(text, mm.start()) else lit,
-                text,
-            )
+            return sub_code(call_re, lambda _: lit, text)
 
         grp_sql = ", ".join(["window_start", "window_end"] + key_cols)
         merge_sql_t = (
@@ -2197,19 +2181,13 @@ class Engine:
         queries raise, like Flink outside streaming; joins/aggregates with
         CURRENT_WATERMARK raise with guidance."""
 
-        from .window_sql import _in_string
-
         call_re = re.compile(
             r"\bCURRENT_WATERMARK\s*\(\s*(?P<col>[`\w.]+)\s*\)", re.IGNORECASE
         )
-        raw_hits = [
-            m
-            for m in re.finditer(r"\bCURRENT_WATERMARK\b", sql, re.IGNORECASE)
-            if not _in_string(sql, m.start())
-        ]
+        raw_hits = code_matches(r"\bCURRENT_WATERMARK\b", sql)
         if not raw_hits:
             return None
-        calls = [m for m in call_re.finditer(sql) if not _in_string(sql, m.start())]
+        calls = code_matches(call_re, sql)
         win = self._cw_window_agg(sql, call_re, calls, raw_hits)
         if win is not None:
             return win
@@ -2219,13 +2197,11 @@ class Engine:
             sql,
             re.IGNORECASE | re.DOTALL,
         )
-        unsupported_kw = any(
-            not _in_string(sql, m.start())
-            for m in re.finditer(
+        unsupported_kw = bool(
+            code_matches(
                 r"\b(JOIN|GROUP\s+BY|UNION|HAVING|LIMIT|ORDER\s+BY|"
                 r"MATCH_RECOGNIZE|OVER)\b",
                 sql,
-                re.IGNORECASE,
             )
         )
         if len(calls) != len(raw_hits) or q is None or unsupported_kw:
@@ -2266,15 +2242,12 @@ class Engine:
             )
 
         def sub_cw(text: str, lit: str) -> str:
-            return call_re.sub(
-                lambda m: m.group(0) if _in_string(text, m.start()) else lit,
-                text,
-            )
+            return sub_code(call_re, lambda _: lit, text)
 
         sel, where = q.group("sel"), q.group("where")
         sel_items = [
-            rewrite_flink_dialect(s)
-            for s in _split_top(sub_cw(sel, "CAST(NULL AS TIMESTAMP)"), angle=False)
+            rewrite_flink_dialect(s.strip())
+            for s in split_top(sub_cw(sel, "CAST(NULL AS TIMESTAMP)"))
         ]
         # schema/changelog probe: the projected shape the client sees (the
         # streamed df below carries ALL table columns so the per-batch
@@ -2307,8 +2280,8 @@ class Engine:
                 out = out.filter(F.expr(rewrite_flink_dialect(sub_cw(where, lit))))
             return out.selectExpr(
                 *[
-                    rewrite_flink_dialect(sub_cw(s, lit))
-                    for s in _split_top(sel, angle=False)
+                    rewrite_flink_dialect(sub_cw(s.strip(), lit))
+                    for s in split_top(sel)
                 ]
             )
 

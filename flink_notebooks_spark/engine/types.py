@@ -13,33 +13,11 @@ import re
 
 from pyspark.sql import types as T
 
+from .sql_text import split_top
+
 
 class TypeParseError(ValueError):
     pass
-
-
-def _split_top(s: str, sep: str = ",", angle: bool = True) -> list[str]:
-    """Split on separators that are not nested inside (), <> (or quotes).
-
-    ``angle=False`` treats < and > as ordinary characters — required for
-    SQL SELECT lists, where they are comparison operators, not brackets."""
-    parts, depth, cur = [], 0, []
-    opens = "(<" if angle else "("
-    closes = ")>" if angle else ")"
-    for ch in s:
-        if ch in opens:
-            depth += 1
-        elif ch in closes:
-            depth -= 1
-        if ch == sep and depth == 0:
-            parts.append("".join(cur).strip())
-            cur = []
-        else:
-            cur.append(ch)
-    last = "".join(cur).strip()
-    if last:
-        parts.append(last)
-    return parts
 
 
 _SIMPLE = {
@@ -97,11 +75,11 @@ def parse_type(s: str) -> T.DataType:
         # multiset ≈ map<element, count>
         return T.MapType(parse_type(s[9:-1]), T.IntegerType())
     if up.startswith("MAP<") and s.endswith(">"):
-        k, v = _split_top(s[4:-1])
+        k, v = split_top(s[4:-1])
         return T.MapType(parse_type(k), parse_type(v))
     if up.startswith("ROW<") and s.endswith(">"):
         fields = []
-        for item in _split_top(s[4:-1]):
+        for item in split_top(s[4:-1]):
             mm = re.match(r"(`?)(\w+)\1\s+(.+)", item.strip(), re.DOTALL)
             if not mm:
                 raise TypeParseError(f"bad ROW field: {item!r}")

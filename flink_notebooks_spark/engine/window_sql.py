@@ -25,6 +25,16 @@ from __future__ import annotations
 
 import re
 
+from .sql_text import (
+    code_matches,
+    in_noncode,
+    match_bracket,
+    search_code,
+    split_top,
+    strip_comments,
+    sub_code,
+)
+
 _UNITS = {
     "SECOND": "seconds",
     "SECONDS": "seconds",
@@ -62,7 +72,7 @@ def rewrite_temporal_join(sql: str) -> str:
     explosion); wiring that into arbitrary SQL would need a Catalyst rule,
     documented as the J7 limitation in SURVEY.md §7.3.
     """
-    return _sub_code(
+    return sub_code(
         r"\bFOR\s+SYSTEM_TIME\s+AS\s+OF\s+[`\w.]+(\s*\(\s*\))?",
         " ",
         sql,
@@ -198,7 +208,7 @@ def rewrite_group_windows(sql: str) -> str:
     # selectors first (TUMBLE_START before TUMBLE so prefixes don't collide)
     def sel(prefix: str, target: str) -> None:
         nonlocal sql
-        sql = _sub_code(
+        sql = sub_code(
             rf"\b{prefix}_(START|END)\s*\(([^()]*)\)",
             lambda m: f"{target}.{'start' if m.group(1).upper() == 'START' else 'end'}",
             sql,
@@ -208,12 +218,12 @@ def rewrite_group_windows(sql: str) -> str:
     sel("HOP", "window")
     sel("SESSION", "session_window")
 
-    sql = _sub_code(
+    sql = sub_code(
         rf"\bTUMBLE\s*\(\s*{_COL}\s*,\s*{_IVL}\s*\)",
         lambda m: f"window({m.group(1)}, {_dur(m.group(2), m.group(3))})",
         sql,
     )
-    sql = _sub_code(
+    sql = sub_code(
         rf"\bHOP\s*\(\s*{_COL}\s*,\s*{_IVL}\s*,\s*{_IVL}\s*\)",
         lambda m: (
             f"window({m.group(1)}, {_dur(m.group(4), m.group(5))}, "
@@ -221,7 +231,7 @@ def rewrite_group_windows(sql: str) -> str:
         ),
         sql,
     )
-    sql = _sub_code(
+    sql = sub_code(
         rf"\bSESSION\s*\(\s*{_COL}\s*,\s*{_IVL}\s*\)",
         lambda m: f"session_window({m.group(1)}, {_dur(m.group(2), m.group(3))})",
         sql,
@@ -252,137 +262,14 @@ def rewrite_group_windows(sql: str) -> str:
 # --------------------------------------------------------------------------
 
 
-def _skip_string(sql: str, j: int) -> int:
-    """j at the opening quote; return index AFTER the closing quote
-    (SQL-style doubled '' escapes)."""
-    n = len(sql)
-    j += 1
-    while j < n:
-        if sql[j] == "'":
-            if j + 1 < n and sql[j + 1] == "'":
-                j += 2
-                continue
-            return j + 1
-        j += 1
-    return n
-
-
-def _skip_noncode(sql: str, j: int) -> int | None:
-    """If sql[j] opens a string literal, a backtick-quoted identifier, a
-    ``--`` line comment, or a ``/* */`` block comment, return the index
-    just past it; else None. Keeps the quote-tracking scanners from
-    misreading an apostrophe inside a comment as a literal opener (which
-    would flip the literal state for everything after it). Backtick
-    identifiers are skipped like literals so a name such as ``` `x--y` ```
-    neither starts a comment nor gets rewritten (Spark doubles a backtick
-    inside the name: ``` `a``b` ```)."""
-    if sql[j] == "'":
-        return _skip_string(sql, j)
-    if sql[j] == "`":
-        k, n = j + 1, len(sql)
-        while k < n:
-            if sql[k] == "`":
-                if k + 1 < n and sql[k + 1] == "`":
-                    k += 2
-                    continue
-                return k + 1
-            k += 1
-        return n
-    if sql.startswith("--", j):
-        e = sql.find("\n", j)
-        return len(sql) if e < 0 else e + 1
-    if sql.startswith("/*", j):
-        e = sql.find("*/", j + 2)
-        return len(sql) if e < 0 else e + 2
-    return None
-
-
-def _match_delim(sql: str, i: int, open_ch: str, close_ch: str) -> int:
-    """i at the opening delimiter; return index of its matching closer,
-    skipping string literals and comments."""
-    depth, j, n = 0, i, len(sql)
-    while j < n:
-        c = sql[j]
-        nj = _skip_noncode(sql, j)
-        if nj is not None:
-            j = nj
-            continue
-        if c == open_ch:
-            depth += 1
-        elif c == close_ch:
-            depth -= 1
-            if depth == 0:
-                return j
-        j += 1
-    raise ValueError(f"unbalanced {open_ch}{close_ch} in SQL")
-
-
-def _in_string(sql: str, pos: int) -> bool:
-    """True when pos sits inside a string literal OR a comment — both are
-    spans the rewriters must leave untouched."""
-    j = 0
-    while j < pos:
-        nj = _skip_noncode(sql, j)
-        if nj is not None:
-            if nj > pos:
-                return True
-            j = nj
-            continue
-        j += 1
-    return False
-
-
-def _sub_code(pattern, repl, sql: str, flags=re.IGNORECASE) -> str:
-    """``re.sub`` that leaves matches inside string literals / comments
-    untouched — the guard every text-level rewrite needs (a literal
-    ``'COLLECT(x'`` or a comment holding ``ARRAY[`` must survive verbatim).
-    ``repl`` may be a string (backref-expanded) or a callable."""
-
-    def guard(m: re.Match) -> str:
-        if _in_string(sql, m.start()):
-            return m.group(0)
-        return repl(m) if callable(repl) else m.expand(repl)
-
-    return re.sub(pattern, guard, sql, flags=flags)
-
-
-def _split_args(s: str) -> list[str]:
-    """Split on top-level commas, respecting (), [], strings, comments."""
-    parts, depth, j, start, n = [], 0, 0, 0, len(s)
-    while j < n:
-        c = s[j]
-        nj = _skip_noncode(s, j)
-        if nj is not None:
-            j = nj
-            continue
-        if c in "([":
-            depth += 1
-        elif c in ")]":
-            depth -= 1
-        elif c == "," and depth == 0:
-            parts.append(s[start:j])
-            start = j + 1
-        j += 1
-    parts.append(s[start:])
-    return parts
-
-
 _ON_NULL_RE = re.compile(r"\s+(NULL|ABSENT)\s+ON\s+NULL\s*$", re.IGNORECASE)
 _KV_RE = re.compile(r"^\s*(?:KEY\s+)?(.+?)\s+VALUE\s+(.+)$", re.IGNORECASE | re.DOTALL)
 
 
 def _rewrite_bracket_ctors(sql: str) -> str:
-    pat = re.compile(r"\b(ARRAY|MAP)\s*\[", re.IGNORECASE)
-    while True:
-        m = None
-        for cand in pat.finditer(sql):
-            if not _in_string(sql, cand.start()):
-                m = cand
-                break
-        if m is None:
-            return sql
+    while (m := search_code(r"\b(ARRAY|MAP)\s*\[", sql)) is not None:
         open_i = m.end() - 1
-        close_i = _match_delim(sql, open_i, "[", "]")
+        close_i = match_bracket(sql, open_i)
         fn = "array" if m.group(1).upper() == "ARRAY" else "map"
         sql = (
             sql[: m.start()]
@@ -391,20 +278,13 @@ def _rewrite_bracket_ctors(sql: str) -> str:
             + ")"
             + sql[close_i + 1 :]
         )
+    return sql
 
 
 def _rewrite_json_fn(sql: str, name: str, build) -> str:
-    pat = re.compile(rf"\b{name}\s*\(", re.IGNORECASE)
-    while True:
-        m = None
-        for cand in pat.finditer(sql):
-            if not _in_string(sql, cand.start()):
-                m = cand
-                break
-        if m is None:
-            return sql
+    while (m := search_code(rf"\b{name}\s*\(", sql)) is not None:
         open_i = m.end() - 1
-        close_i = _match_delim(sql, open_i, "(", ")")
+        close_i = match_bracket(sql, open_i)
         inner = sql[open_i + 1 : close_i]
         flag = None
         fm = _ON_NULL_RE.search(inner)
@@ -412,11 +292,12 @@ def _rewrite_json_fn(sql: str, name: str, build) -> str:
             flag = fm.group(1).upper()
             inner = inner[: fm.start()]
         sql = sql[: m.start()] + build(inner, flag) + sql[close_i + 1 :]
+    return sql
 
 
 def _build_json_object(inner: str, flag: str | None) -> str:
     pairs = []
-    for part in _split_args(inner):
+    for part in split_top(inner):
         if not part.strip():
             continue
         kv = _KV_RE.match(part)
@@ -435,7 +316,7 @@ def _build_json_object(inner: str, flag: str | None) -> str:
 
 
 def _build_json_array(inner: str, flag: str | None) -> str:
-    args = ", ".join(a.strip() for a in _split_args(inner) if a.strip())
+    args = ", ".join(a.strip() for a in split_top(inner) if a.strip())
     if not args:
         return "'[]'"
     if flag == "NULL":
@@ -475,73 +356,30 @@ def _rewrite_subscripts(sql: str) -> str:
     (identifier, backtick, ``)`` or ``]``); bracket constructors were
     rewritten to call syntax before this runs."""
     while True:
-        n = len(sql)
-        j = 0
         found = None
-        while j < n:
-            c = sql[j]
-            nj = _skip_noncode(sql, j)
-            if nj is not None:
-                j = nj
-                continue
-            if c == "[":
-                k = j - 1
-                while k >= 0 and sql[k] in " \t\n":
-                    k -= 1
-                if k >= 0 and (sql[k].isalnum() or sql[k] in "_`)]."):
-                    found = j
-                    break
-            j += 1
+        for m in code_matches(r"\[", sql):
+            tail = sql[: m.start()].rstrip(" \t\n")
+            if tail and (tail[-1].isalnum() or tail[-1] in "_`)]."):
+                found = m.start()
+                break
         if found is None:
             return sql
-        close_i = _match_delim(sql, found, "[", "]")
+        close_i = match_bracket(sql, found)
         idx = sql[found + 1 : close_i]
-        # string-literal/comment spans, so the backward walk never counts
-        # brackets inside literals (e.g. split(s, '[')[1]) or comments
-        spans = []
-        si = 0
-        while si < len(sql):
-            se = _skip_noncode(sql, si)
-            if se is not None:
-                spans.append((si, se))
-                si = se
-            else:
-                si += 1
-
-        def span_start(pos):
-            for s0, e0 in spans:
-                if s0 <= pos < e0:
-                    return s0
-            return None
-
-        # walk back over the postfix chain to the base expression's start
-        b = found - 1
-        while b >= 0 and sql[b] in " \t\n":
-            b -= 1
-        end = b + 1
+        # walk back over the postfix chain to the base expression's start,
+        # jumping over bracket groups and backtick names whole
+        end = len(sql[:found].rstrip(" \t\n"))
+        b = end - 1
         while b >= 0:
             ch = sql[b]
-            if ch.isalnum() or ch in "_`.$":
+            if ch == "`":
+                b = sql.rfind("`", 0, b) - 1
+            elif ch.isalnum() or ch in "_.$":
                 b -= 1
-                continue
-            if ch in ")]":
-                opener = "(" if ch == ")" else "["
-                depth = 0
-                while b >= 0:
-                    s0 = span_start(b)
-                    if s0 is not None:
-                        b = s0 - 1
-                        continue
-                    if sql[b] == ch:
-                        depth += 1
-                    elif sql[b] == opener:
-                        depth -= 1
-                        if depth == 0:
-                            break
-                    b -= 1
-                b -= 1
-                continue
-            break
+            elif ch in ")]":
+                b = match_bracket(sql, b) - 1
+            else:
+                break
         base = sql[b + 1 : end]
         sql = sql[: b + 1] + f"element_at({base}, {idx})" + sql[close_i + 1 :]
 
@@ -549,7 +387,7 @@ def _rewrite_subscripts(sql: str) -> str:
 def _build_array_slice(inner: str, flag: str | None) -> str:
     """Flink ARRAY_SLICE(arr, start[, end]) — 1-based INCLUSIVE end — to
     Spark slice(arr, start, length)."""
-    args = [a.strip() for a in _split_args(inner)]
+    args = [a.strip() for a in split_top(inner)]
     if len(args) == 2:
         a, s = args
         return f"slice({a}, {s}, greatest(0, size({a}) - ({s}) + 1))"
@@ -565,27 +403,22 @@ def _rewrite_str_to_map(sql: str) -> str:
     delimiters explicit; 2/3-argument forms pass through unchanged.
     Single forward pass (the output still contains the function name, so
     the generic rescan-from-the-start rewriter would never terminate)."""
-    pat = re.compile(r"\bSTR_TO_MAP\s*\(", re.IGNORECASE)
     out, pos = [], 0
-    while True:
-        m = pat.search(sql, pos)
-        if m is None:
-            out.append(sql[pos:])
-            return "".join(out)
-        if _in_string(sql, m.start()):
-            out.append(sql[pos : m.end()])
-            pos = m.end()
-            continue
+    for m in code_matches(r"\bSTR_TO_MAP\s*\(", sql):
+        if m.start() < pos:
+            continue  # inside the previous call's arguments, kept verbatim
         open_i = m.end() - 1
-        close_i = _match_delim(sql, open_i, "(", ")")
+        close_i = match_bracket(sql, open_i)
         inner = sql[open_i + 1 : close_i]
-        args = [a.strip() for a in _split_args(inner)]
+        args = [a.strip() for a in split_top(inner)]
         out.append(sql[pos : m.start()])
         if len(args) == 1:
             out.append(f"str_to_map({args[0]}, ',', '=')")
         else:
             out.append(f"str_to_map({inner})")
         pos = close_i + 1
+    out.append(sql[pos:])
+    return "".join(out)
 
 
 def _build_element(inner: str, flag: str | None) -> str:
@@ -601,7 +434,7 @@ def _build_element(inner: str, flag: str | None) -> str:
 def _build_row_ctor(inner: str, flag: str | None) -> str:
     """Flink ROW(a, b, ...) constructor → named_struct with Flink's
     conventional f0, f1, ... field names."""
-    args = [a.strip() for a in _split_args(inner)]
+    args = [a.strip() for a in split_top(inner)]
     pairs = ", ".join(f"'f{i}', {a}" for i, a in enumerate(args))
     return f"named_struct({pairs})"
 
@@ -622,7 +455,7 @@ def _rewrite_is_json(sql: str) -> str:
     def repl(m: re.Match) -> str:
         # never rewrite inside a string literal (the keyword match or the
         # operand could sit mid-literal and corrupt it)
-        if _in_string(sql, m.start()) or _in_string(sql, m.end() - 1):
+        if in_noncode(sql, m.start()) or in_noncode(sql, m.end() - 1):
             return m.group(0)
         x, neg, kind = m.group(1), m.group(2), (m.group(3) or "VALUE").upper()
         valid = f"try_parse_json({x}) IS NOT NULL"
@@ -663,7 +496,7 @@ def rewrite_scalar_syntax(sql: str) -> str:
     ):
         if re.search(rf"\b{name}\s*\(", sql, re.IGNORECASE):
             sql = _rewrite_json_fn(sql, name, build)
-    sql = _sub_code(r"\bARRAY_CONCAT\s*\(", "concat(", sql)
+    sql = sub_code(r"\bARRAY_CONCAT\s*\(", "concat(", sql)
     if re.search(r"\bSTR_TO_MAP\s*\(", sql, re.IGNORECASE):
         sql = _rewrite_str_to_map(sql)
     if re.search(r"\bIS\s+(NOT\s+)?JSON\b", sql, re.IGNORECASE):
@@ -675,9 +508,9 @@ def rewrite_scalar_syntax(sql: str) -> str:
     # Flink's COLLECT multiset aggregate → the closest Spark aggregate
     # (collect_list; multiset multiplicity is preserved, order is not part
     # of either contract)
-    sql = _sub_code(r"\bCOLLECT\s*\(", "collect_list(", sql)
-    sql = _sub_code(r"\bARRAY_REVERSE\s*\(", "reverse(", sql)
-    sql = _sub_code(r"\bMAP_UNION\s*\(", "map_concat(", sql)
+    sql = sub_code(r"\bCOLLECT\s*\(", "collect_list(", sql)
+    sql = sub_code(r"\bARRAY_REVERSE\s*\(", "reverse(", sql)
+    sql = sub_code(r"\bMAP_UNION\s*\(", "map_concat(", sql)
     if re.search(r"\bARRAY_SLICE\s*\(", sql, re.IGNORECASE):
         sql = _rewrite_json_fn(sql, "ARRAY_SLICE", _build_array_slice)
     # TO_TIMESTAMP_LTZ(numeric, precision): Flink's epoch form — Spark's
@@ -698,10 +531,10 @@ def rewrite_scalar_syntax(sql: str) -> str:
     )
     # Flink's niladic time attributes; Spark needs the call form. LOCALTIME
     # returns Flink's TIME — mapped to STRING like the TIME type itself.
-    sql = _sub_code(
+    sql = sub_code(
         r"\bLOCALTIMESTAMP\b(?!\s*\()", "localtimestamp()", sql
     )
-    sql = _sub_code(
+    sql = sub_code(
         r"\bLOCALTIME\b(?!\s*\()",
         "date_format(localtimestamp(), 'HH:mm:ss')",
         sql,
@@ -709,38 +542,10 @@ def rewrite_scalar_syntax(sql: str) -> str:
     return sql
 
 
-def _normalize_comments(sql: str) -> str:
-    """Strip comments under FLINK/CALCITE reading before Spark sees the text.
-
-    Flink's lexer ends a block comment at the FIRST ``*/`` and does not
-    nest; Spark's bracketed comments DO nest, so a Flink-valid query like
-    ``SELECT 1 /* a /* b */ AS x`` would die in Spark with
-    UNCLOSED_BRACKETED_COMMENT. Removing the comment spans (one space each,
-    Flink's token-separator semantics) makes the Flink-source reading hold
-    regardless. Optimizer hint comments (``/*+ ... */`` — both engines read
-    them) and string literals pass through verbatim."""
-    out, j, n = [], 0, len(sql)
-    while j < n:
-        nj = _skip_noncode(sql, j)
-        if nj is None:
-            out.append(sql[j])
-            j += 1
-            continue
-        span = sql[j:nj]
-        if span.startswith(("'", "`", "/*+")):
-            # literals, backtick-quoted identifiers (a name like `x--y` is
-            # not a comment), and optimizer hints pass through verbatim
-            out.append(span)
-        else:
-            out.append(" ")
-        j = nj
-    return "".join(out)
-
-
 def rewrite_flink_dialect(sql: str) -> str:
     """The full Flink→Spark dialect chain for query text."""
     if "--" in sql or "/*" in sql:
-        sql = _normalize_comments(sql)
+        sql = strip_comments(sql)
     return rewrite_group_windows(
         rewrite_window_tvfs(rewrite_temporal_join(rewrite_scalar_syntax(sql)))
     )

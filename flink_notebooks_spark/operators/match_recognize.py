@@ -121,6 +121,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..engine.sql_text import (
+    map_literals,
+    match_bracket,
+    search_code,
+    split_top,
+    sub_code,
+)
+
 # --------------------------------------------------------------------- parse
 
 _PAT_TOKEN = re.compile(
@@ -785,7 +793,7 @@ def _parse_pattern_tree(src: str) -> list:
 
 def parse_match_recognize(clause: str) -> MatchSpec:
     """Parse the text INSIDE ``MATCH_RECOGNIZE ( ... )``."""
-    all_rows = bool(re.search(r"\bALL\s+ROWS\s+PER\s+MATCH\b", clause, re.IGNORECASE))
+    all_rows = bool(search_code(r"\bALL\s+ROWS\s+PER\s+MATCH\b", clause))
 
     part = _extract_clause(clause, r"PARTITION\s+BY", _STOPS)
     order = _extract_clause(clause, r"ORDER\s+BY", _STOPS)
@@ -798,17 +806,7 @@ def parse_match_recognize(clause: str) -> MatchSpec:
     pat_h = re.search(r"\bPATTERN\s*\(", clause, re.IGNORECASE)
     if not pat_h:
         raise ValueError("MATCH_RECOGNIZE requires PATTERN (...)")
-    depth, pend = 0, -1
-    for j in range(pat_h.end() - 1, len(clause)):
-        if clause[j] == "(":
-            depth += 1
-        elif clause[j] == ")":
-            depth -= 1
-            if depth == 0:
-                pend = j
-                break
-    if pend < 0:
-        raise ValueError("MATCH_RECOGNIZE: unbalanced PATTERN parens")
+    pend = match_bracket(clause, pat_h.end() - 1)
     pat_src = clause[pat_h.end() : pend]
     pattern: list[PatternTerm] = []
     alternatives = None
@@ -825,7 +823,7 @@ def parse_match_recognize(clause: str) -> MatchSpec:
     if perm_m:
         el_variants: list[list[list[PatternTerm]]] = []  # per element
         any_group = False
-        for el in _split_permute_elements(perm_m.group(1)):
+        for el in split_top(perm_m.group(1)):
             el = el.strip()
             gm = re.fullmatch(
                 r"\((.*)\)\s*(\+|\*|\?|\{(\d+)(,(\d*))?\})?(\?)?", el, re.DOTALL
@@ -1019,27 +1017,14 @@ def parse_match_recognize(clause: str) -> MatchSpec:
     def_m = re.search(r"\bDEFINE\b(.*)$", clause, re.IGNORECASE | re.DOTALL)
     define: dict[str, str] = {}
     if def_m:
-        # split on commas at depth 0 (conditions may contain function calls)
-        parts, depth, cur = [], 0, []
-        for ch in def_m.group(1):
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            if ch == "," and depth == 0:
-                parts.append("".join(cur))
-                cur = []
-            else:
-                cur.append(ch)
-        parts.append("".join(cur))
-        for p in parts:
+        for p in split_top(def_m.group(1)):
             dm = re.match(r"\s*(\w+)\s+AS\s+(.*)$", p.strip(), re.IGNORECASE | re.DOTALL)
             if not dm:
                 raise ValueError(f"MATCH_RECOGNIZE: bad DEFINE entry {p!r}")
             define[dm.group(1).upper()] = dm.group(2).strip()
 
     measures = []
-    for p in _split_top_level(meas):
+    for p in filter(str.strip, split_top(meas)):
         mm = re.match(r"(.*?)\s+AS\s+(\w+)\s*$", p.strip(), re.IGNORECASE | re.DOTALL)
         if not mm:
             raise ValueError(f"MATCH_RECOGNIZE: measure needs AS alias: {p!r}")
@@ -1047,11 +1032,10 @@ def parse_match_recognize(clause: str) -> MatchSpec:
 
     # PATTERN (...) WITHIN INTERVAL 'n' UNIT (Flink CEP time bound)
     within_ms = None
-    wm = re.search(
+    wm = search_code(
         r"\)\s*WITHIN\s+INTERVAL\s+'(\d+(?:\.\d+)?)'\s+"
         r"(MILLISECOND|SECOND|MINUTE|HOUR|DAY)S?\b",
         clause,
-        re.IGNORECASE,
     )
     if wm:
         unit_ms = {
@@ -1063,13 +1047,9 @@ def parse_match_recognize(clause: str) -> MatchSpec:
         }[wm.group(2).upper()]
         within_ms = int(float(wm.group(1)) * unit_ms)
 
-    skip_past = not re.search(
-        r"AFTER\s+MATCH\s+SKIP\s+TO\s+NEXT\s+ROW", clause, re.IGNORECASE
-    )
+    skip_past = not search_code(r"AFTER\s+MATCH\s+SKIP\s+TO\s+NEXT\s+ROW", clause)
     skip_to = None
-    st = re.search(
-        r"AFTER\s+MATCH\s+SKIP\s+TO\s+(FIRST|LAST)\s+(\w+)", clause, re.IGNORECASE
-    )
+    st = search_code(r"AFTER\s+MATCH\s+SKIP\s+TO\s+(FIRST|LAST)\s+(\w+)", clause)
     if st:
         skip_to = (st.group(1).lower(), st.group(2).upper())
         if skip_to[1] not in {v for t in pattern for v in t.vars}:
@@ -1092,41 +1072,6 @@ def parse_match_recognize(clause: str) -> MatchSpec:
         pattern_text=pat_src.strip(),
         nested=nested,
     )
-
-
-def _split_permute_elements(s: str) -> list[str]:
-    """Split PERMUTE's element list on commas outside parens AND braces —
-    a bounded quantifier ``{2,5}`` carries a comma of its own."""
-    parts, depth, cur = [], 0, []
-    for ch in s:
-        if ch in "({":
-            depth += 1
-        elif ch in ")}":
-            depth -= 1
-        if ch == "," and depth == 0:
-            parts.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-    parts.append("".join(cur))
-    return parts
-
-
-def _split_top_level(s: str) -> list[str]:
-    parts, depth, cur = [], 0, []
-    for ch in s:
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if ch == "," and depth == 0:
-            parts.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-    if cur:
-        parts.append("".join(cur))
-    return [p for p in (x.strip() for x in parts) if p]
 
 
 # ------------------------------------------------------------------ measures
@@ -1205,52 +1150,23 @@ _PREV_RE = re.compile(
 _IDENT_RE = re.compile(r"[A-Za-z_]\w*$")
 
 
-def _sql_literal_segments(text: str) -> list[tuple[bool, str]]:
-    """Split a DEFINE condition into SQL string literals ('' escapes) and
-    code segments: ``[(is_literal, segment), ...]``. Every textual
-    transform below must leave literal segments untouched — a condition
-    like ``A.tag = 'AND'`` must not have the literal's AND rewritten."""
-    segs: list[tuple[bool, str]] = []
-    j, n, start = 0, len(text), 0
-    while j < n:
-        if text[j] == "'":
-            k = j + 1
-            while k < n:
-                if text[k] == "'":
-                    if k + 1 < n and text[k + 1] == "'":
-                        k += 2
-                        continue
-                    break
-                k += 1
-            if j > start:
-                segs.append((False, text[start:j]))
-            end = min(k + 1, n)
-            segs.append((True, text[j:end]))
-            j = end
-            start = j
-        else:
-            j += 1
-    if start < n:
-        segs.append((False, text[start:]))
-    return segs
+def _stash_literals(cond: str) -> tuple[str, list[str]]:
+    """Replace each SQL string literal of ``cond`` by an identifier-shaped
+    placeholder ``__litpN__``, so that keyword and paren scans can never
+    fire inside one (a literal 'AND' or '(' would shred the parse).
+    Returns the text and each literal as a PYTHON literal: the repr of the
+    decoded value, which makes SQL's '' escape eval-safe too."""
+    lits: list[str] = []
+
+    def stash(lit: str) -> str:
+        lits.append(repr(lit[1:-1].replace("''", "'")))
+        return f"__litp{len(lits) - 1}__"
+
+    return map_literals(cond, stash), lits
 
 
-def _map_code(text: str, fn) -> str:
-    """Apply ``fn`` to the non-literal segments of ``text``; string
-    literals pass through verbatim."""
-    return "".join(
-        seg if lit else fn(seg) for lit, seg in _sql_literal_segments(text)
-    )
-
-
-def _search_code(pattern, text: str):
-    """re.search over the non-literal segments only."""
-    for lit, seg in _sql_literal_segments(text):
-        if not lit:
-            m = pattern.search(seg) if hasattr(pattern, "search") else re.search(pattern, seg)
-            if m:
-                return m
-    return None
+def _unstash_literals(text: str, lits: list[str]) -> str:
+    return re.sub(r"__litp(\d+)__", lambda m: lits[int(m.group(1))], text)
 
 
 def _compile_defines(df: DataFrame, spec: MatchSpec, defer_prev: bool = False):
@@ -1287,11 +1203,9 @@ def _compile_defines(df: DataFrame, spec: MatchSpec, defer_prev: bool = False):
             df = df.withColumn(f"__mr_{v}", F.lit(True))
             continue
         cross = any(
-            _search_code(re.compile(rf"\b{o}\s*\."), cond) for o in other - {v}
+            search_code(re.compile(rf"\b{o}\s*\."), cond) for o in other - {v}
         )
-        nav = _search_code(
-            re.compile(r"\b(FIRST|LAST)\s*\(", re.IGNORECASE), cond
-        )
+        nav = search_code(r"\b(FIRST|LAST)\s*\(", cond)
         if cross or nav:
             # condition depends on the in-flight match (other variables'
             # mapped rows / FIRST/LAST navigation) — evaluated row-by-row
@@ -1303,16 +1217,15 @@ def _compile_defines(df: DataFrame, spec: MatchSpec, defer_prev: bool = False):
             continue
         # self-qualified columns (A.col) → bare columns (literal-safe: a
         # string literal containing "A." must survive verbatim)
-        bare = _map_code(cond, lambda s: re.sub(rf"\b{v}\s*\.\s*", "", s))
-        if defer_prev and _search_code(_PREV_RE, bare):
+        bare = sub_code(re.compile(rf"\b{v}\s*\.\s*"), "", cond)
+        if defer_prev and search_code(_PREV_RE, bare):
             deferred[v] = bare
             df = df.withColumn(f"__mr_{v}", F.lit(None).cast("boolean"))
             continue
-        bare = _map_code(
+        bare = sub_code(
+            _PREV_RE,
+            lambda m: f"lag({m.group(1)}, {m.group(2) or 1}) OVER ({over})",
             bare,
-            lambda s: _PREV_RE.sub(
-                lambda m: f"lag({m.group(1)}, {m.group(2) or 1}) OVER ({over})", s
-            ),
         )
         df = df.withColumn(f"__mr_{v}", F.expr(bare).cast("boolean"))
     return df, deferred, stateful
@@ -1364,8 +1277,8 @@ def _compile_stateful_cond(
     would also reject the row unless the inner result was strictly false.
     """
     def xform(expr: str) -> str:
-        # one CODE segment of the condition — string literals never enter
-        # here (a literal 'AND' / 'a=b' / 'X.c' must not be rewritten)
+        # the condition with its string literals stashed (a literal 'AND'
+        # / 'a=b' / 'X.c' must not be rewritten)
         expr = _NAV_RE.sub(lambda m: _nav_sub(m, variables, cond), expr)
         expr = _PREV_QUAL_RE.sub(
             lambda m: f"prev({m.group(2)!r}, {int(m.group(3) or 1)})", expr
@@ -1410,10 +1323,8 @@ def _compile_stateful_cond(
     # SQL string literals become PYTHON literals via repr of the decoded
     # value — this both protects their content from the keyword rewrites
     # above and makes SQL's '' quote-escape valid for the Python eval
-    expr = "".join(
-        repr(seg[1:-1].replace("''", "'")) if lit else xform(seg)
-        for lit, seg in _sql_literal_segments(cond)
-    )
+    stashed, lits = _stash_literals(cond)
+    expr = _unstash_literals(xform(stashed), lits)
     import ast
 
     try:
@@ -1534,54 +1445,18 @@ def _sql_bool_to_pandas(cond: str) -> str:
     are the one residual divergence from full SQL three-valued logic.
     """
 
-    # literal-safety: stash SQL string literals behind identifier-shaped
-    # placeholders so the keyword/paren scanning below can never fire
-    # inside one (a literal 'AND' or '(' would otherwise shred the parse);
-    # placeholders substitute back at return as PYTHON literals (repr of
-    # the decoded value — SQL's '' escape becomes eval-safe too). As
-    # comparison operands they ride the plain-column atom rail, which is
-    # exactly right: a literal is never null.
-    lits: list[str] = []
-
-    def _stash(seg: str) -> str:
-        lits.append(repr(seg[1:-1].replace("''", "'")))
-        return f"__litp{len(lits) - 1}__"
-
-    cond = "".join(
-        _stash(seg) if lit else seg for lit, seg in _sql_literal_segments(cond)
-    )
-
-    def split_top(text: str, word: str) -> list[str]:
-        parts, depth, last = [], 0, 0
-        for m in re.finditer(r"[()]|\b" + word + r"\b", text, re.IGNORECASE):
-            tok = m.group(0)
-            if tok == "(":
-                depth += 1
-            elif tok == ")":
-                depth -= 1
-            elif depth == 0:
-                parts.append(text[last : m.start()])
-                last = m.end()
-        parts.append(text[last:])
-        return parts
+    # literal-safety: the keyword/paren scanning below sees placeholders
+    # for the string literals. As comparison operands they ride the
+    # plain-column atom rail, which is exactly right: a literal is never
+    # null.
+    cond, lits = _stash_literals(cond)
 
     def rewrite(text: str) -> tuple[str, str]:
         """→ (satisfied_expr, definitely_false_expr)."""
         text = text.strip()
-        # strip one redundant outer paren pair
-        while text.startswith("(") and text.endswith(")"):
-            depth = 0
-            for i, ch in enumerate(text):
-                if ch == "(":
-                    depth += 1
-                elif ch == ")":
-                    depth -= 1
-                    if depth == 0 and i < len(text) - 1:
-                        break
-            else:
-                text = text[1:-1].strip()
-                continue
-            break
+        # strip redundant outer paren pairs
+        while text.startswith("(") and match_bracket(text, 0) == len(text) - 1:
+            text = text[1:-1].strip()
         ors = split_top(text, "OR")
         if len(ors) > 1:
             pairs = [rewrite(p) for p in ors]
@@ -1618,10 +1493,7 @@ def _sql_bool_to_pandas(cond: str) -> str:
             )
         return "(" + atom + ")", "(~(" + atom + "))"
 
-    out = rewrite(cond)[0]
-    if lits:
-        out = re.sub(r"__litp(\d+)__", lambda m: lits[int(m.group(1))], out)
-    return out
+    return _unstash_literals(rewrite(cond)[0], lits)
 
 
 # PREV expression arguments on the streaming path: column arithmetic only
@@ -3142,18 +3014,7 @@ def sql_match_recognize(spark, sql: str, close_after: str | None = None) -> Data
     if m is None:
         return None
     start = m.end() - 1  # index of the opening paren
-    depth = 0
-    end = -1
-    for i in range(start, len(sql)):
-        if sql[i] == "(":
-            depth += 1
-        elif sql[i] == ")":
-            depth -= 1
-            if depth == 0:
-                end = i
-                break
-    if end < 0:
-        raise ValueError("MATCH_RECOGNIZE: unbalanced parentheses")
+    end = match_bracket(sql, start)
     clause = sql[start + 1 : end]
     rest = sql[end + 1 :].strip().rstrip(";").strip()
     rest = re.sub(r"^AS\s+\w+", "", rest, flags=re.IGNORECASE).strip()

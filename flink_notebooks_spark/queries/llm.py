@@ -913,6 +913,29 @@ def _shard_pairs(pdf, bucket_pairs):
     return pd.concat(outs, ignore_index=True)
 
 
+def hyperplane_signatures(M, bits: int, bands: int):
+    """Band signatures of the rows of the float64 matrix ``M`` under the
+    seeded ±1 hyperplanes: ``(sig_mat, sigpack)``, where ``sig_mat[i, k]``
+    packs row i's ``bits`` sign bits of band k into an int64 and
+    ``sigpack[i]`` holds all of row i's bands as uint16-LE bytes. The
+    planes depend only on (seed, planes, dim), so every worker, batch and
+    stream computes bit-equal signatures — the batch and streaming
+    embedding dedups both call this one kernel."""
+    import numpy as np
+
+    rng = np.random.default_rng(CLUSTER_LSH_SEED)
+    H = (rng.integers(0, 2, size=(bits * bands, M.shape[1])) * 2 - 1).astype(
+        np.float64
+    )
+    bits_m = (M @ H.T > 0).astype(np.int64)  # n × planes sign bits
+    weights = 1 << np.arange(bits, dtype=np.int64)
+    sig_mat = np.stack(
+        [bits_m[:, k * bits : (k + 1) * bits] @ weights for k in range(bands)],
+        axis=1,
+    )
+    return sig_mat, [s.astype("<u2").tobytes() for s in sig_mat]
+
+
 def _lsh_signatures(spark, sf_dir, bits: int, bands: int):
     """Map-only signature stage: one n×d · d×planes BLAS product per Arrow
     batch, emitting a COMPACT row per vector — the int8-quantized vector
@@ -930,26 +953,13 @@ def _lsh_signatures(spark, sf_dir, bits: int, bands: int):
     if bits > 16:
         raise ValueError("cluster LSH: bits > 16 would overflow the uint16 sigpack")
     emb = load_table(spark, sf_dir, "embeddings")
-    n_planes = bits * bands
-    seed = CLUSTER_LSH_SEED
-    weights = 1 << np.arange(bits, dtype=np.int64)
 
     def signatures(batches):
-        H = None
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             M = np.vstack(pdf["embd"].to_numpy())
-            if H is None:  # planes depend only on (seed, dim): identical everywhere
-                rng = np.random.default_rng(seed)
-                H = (
-                    rng.integers(0, 2, size=(n_planes, M.shape[1])) * 2 - 1
-                ).astype(np.float64)
-            bits_m = (M @ H.T > 0).astype(np.int64)  # n × planes sign bits
-            sigs = [
-                bits_m[:, k * bits : (k + 1) * bits] @ weights for k in range(bands)
-            ]
-            sig_mat = np.stack(sigs, axis=1)
+            sig_mat, sigpack = hyperplane_signatures(M, bits, bands)
             # int8 quantization: q = round(u/s), s = max|u|/127 per vector.
             # qerr = 2·‖u − s·q‖/‖u‖ is the RIGOROUS per-vector cosine
             # perturbation bound (‖û − d̂‖ ≤ 2‖u−d‖/‖u‖ for the normalized
@@ -966,7 +976,7 @@ def _lsh_signatures(spark, sf_dir, bits: int, bands: int):
                     "qvec": [q.tobytes() for q in Q],
                     "qerr": qerr,
                     "sigs": list(sig_mat),
-                    "sigpack": [s.astype("<u2").tobytes() for s in sig_mat],
+                    "sigpack": sigpack,
                 }
             )
 

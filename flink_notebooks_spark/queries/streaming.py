@@ -314,15 +314,15 @@ def _staged_table_stream(
     pyarrow read+sort+write per call otherwise, and the file-source listing
     hits the RAM fs instead of disk)."""
     import os
-    import re
 
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    from ..engine.sql_text import split_top
     from ..io import ephemeral_dir
 
     tune(spark)
-    cols = [c.strip().split()[0] for c in re.split(r",(?![^<]*>)", schema)]
+    cols = [c.strip().split()[0] for c in split_top(schema)]
     if arrival_step_s is not None:
         schema = schema + ", arrival_us bigint"
     memo_key = None
@@ -730,7 +730,7 @@ def _embedding_cand_stream(spark, sf_dir, ttl_s: int | None = None):
 
     from ..io import session_state_ttl_s
     from ..operators.shard_state import apply_keyed_state
-    from .llm import CLUSTER_LSH_BANDS, CLUSTER_LSH_SEED
+    from .llm import CLUSTER_LSH_BANDS, hyperplane_signatures
     from .llm import _embeddings_rowcount, lsh_bits_for
 
     if ttl_s is None:
@@ -749,26 +749,15 @@ def _embedding_cand_stream(spark, sf_dir, ttl_s: int | None = None):
     )
 
     def signatures(batches):
-        H = None
-        weights = 1 << np.arange(bits, dtype=np.int64)
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             M = np.vstack(pdf["embedding"].to_numpy()).astype(np.float64)
-            if H is None:  # planes depend only on (seed, dim): match batch
-                rng = np.random.default_rng(CLUSTER_LSH_SEED)
-                H = (
-                    rng.integers(0, 2, size=(bits * bands, M.shape[1])) * 2 - 1
-                ).astype(np.float64)
-            bits_m = (M @ H.T > 0).astype(np.int64)
-            sigs = [
-                bits_m[:, k * bits : (k + 1) * bits] @ weights for k in range(bands)
-            ]
-            sig_mat = np.stack(sigs, axis=1)
+            sig_mat, sigpack = hyperplane_signatures(M, bits, bands)
             cols = {
                 "vec_id": pdf["vec_id"],
                 "sigs": list(sig_mat),
-                "sigpack": [s.astype("<u2").tobytes() for s in sig_mat],
+                "sigpack": sigpack,
             }
             if ttl_s is not None:
                 cols["arrival_us"] = pdf["arrival_us"]

@@ -47,39 +47,6 @@ RUNTIME_CONFS = {
 
 _TUNE_WARNED: set[str] = set()
 
-# Opt-in RocksDB state store for the stateful streaming operators
-# (SPARK_GRAFT_STATE_PROVIDER=rocksdb). The r15 A/B at sf0.1 measured it
-# flat-to-slower than the default HDFS-backed provider (heaviest entry
-# 15.0 vs 13.0 s; others within noise) because these replays' state fits
-# in memory and their checkpoints already sit on fast scratch — so it is
-# NOT the default. At 100 TB-class state (keyed state ≫ executor heap) the
-# RocksDB provider with changelog checkpointing is the right call: state
-# lives off-heap/on-disk and per-trigger commits upload a changelog
-# instead of a full snapshot. The conf is runtime-settable and captured at
-# each query start, so tune() is enough for driver-provided sessions too.
-_ROCKSDB_CONFS = {
-    "spark.sql.streaming.stateStore.providerClass": (
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider"
-    ),
-    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": (
-        "true"
-    ),
-}
-
-
-def _state_store_confs() -> dict:
-    prov = os.environ.get("SPARK_GRAFT_STATE_PROVIDER", "").strip().lower()
-    if prov in ("", "hdfs", "default"):
-        return {}
-    if prov == "rocksdb":
-        return dict(_ROCKSDB_CONFS)
-    raise ValueError(
-        f"SPARK_GRAFT_STATE_PROVIDER={prov!r}: expected 'rocksdb', 'hdfs', "
-        "or unset"
-    )
-
-
 def _ckpt_checksum_confs() -> dict:
     """Spark 4.1 writes a CHECKSUM SIDECAR next to every streaming
     checkpoint file (``spark.sql.streaming.checkpoint.fileChecksum.enabled``
@@ -220,7 +187,7 @@ def tune(spark: SparkSession) -> SparkSession:
     warned about ONCE — environment drift must be loud, not a silent source
     of wrong answers.
     """
-    confs = {**RUNTIME_CONFS, **_state_store_confs(), **_ckpt_checksum_confs()}
+    confs = {**RUNTIME_CONFS, **_ckpt_checksum_confs()}
     for k, v in confs.items():
         try:
             spark.conf.set(k, v)

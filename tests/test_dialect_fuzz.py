@@ -72,7 +72,7 @@ def _comment_junk(rng: random.Random) -> str:
     # reading, which the rewriter implements); a bare '/*' inside is fine —
     # Spark alone would demand a matching '*/' (nested comments), but the
     # rewriter strips comments under Flink/Calcite semantics first
-    # (_normalize_comments), so the nesting divergence never reaches Spark.
+    # (sql_text.strip_comments), so the nesting divergence never reaches Spark.
     # No newline (would end a line comment early).
     frags = [f for f in TRICKY if "*/" not in f and "\n" not in f]
     return " ".join(rng.choice(frags) for _ in range(rng.randint(1, 2)))

@@ -401,10 +401,8 @@ def test_scalar_rewrite_invariants(expr):
     pass is a no-op, (3) leaves no ARRAY[/MAP[ constructors or bare
     subscripts outside string literals, and (4) never unbalances parens
     outside string literals."""
-    from flink_notebooks_spark.engine.window_sql import (
-        _in_string,
-        rewrite_scalar_syntax,
-    )
+    from flink_notebooks_spark.engine.sql_text import in_noncode
+    from flink_notebooks_spark.engine.window_sql import rewrite_scalar_syntax
 
     sql = f"SELECT {expr} AS v"
     out = rewrite_scalar_syntax(sql)
@@ -412,20 +410,12 @@ def test_scalar_rewrite_invariants(expr):
     import re as _re
 
     for m in _re.finditer(r"\[", out):
-        assert _in_string(out, m.start()), (sql, out)
+        assert in_noncode(out, m.start()), (sql, out)
     depth = 0
-    i = 0
-    while i < len(out):
-        c = out[i]
-        if c == "'":
-            from flink_notebooks_spark.engine.window_sql import _skip_string
-
-            i = _skip_string(out, i)
-            continue
+    for c in _re.sub(r"'(?:[^']|'')*'", "''", out):
         depth += c == "("
         depth -= c == ")"
         assert depth >= 0, (sql, out)
-        i += 1
     assert depth == 0, (sql, out)
 
 

@@ -92,44 +92,26 @@ def test_ram_headroom_margin_scales_with_phys_ram(monkeypatch):
     assert sess._scratch_local_dir(min_free_bytes=1) is None
 
 
-def test_state_provider_knob(monkeypatch):
-    from flink_notebooks_spark.session import _state_store_confs
-
-    monkeypatch.delenv("SPARK_GRAFT_STATE_PROVIDER", raising=False)
-    assert _state_store_confs() == {}
-    monkeypatch.setenv("SPARK_GRAFT_STATE_PROVIDER", "hdfs")
-    assert _state_store_confs() == {}
-    monkeypatch.setenv("SPARK_GRAFT_STATE_PROVIDER", "rocksdb")
-    confs = _state_store_confs()
-    assert confs["spark.sql.streaming.stateStore.providerClass"].endswith(
-        "RocksDBStateStoreProvider"
-    )
-    assert (
-        confs[
-            "spark.sql.streaming.stateStore.rocksdb."
-            "changelogCheckpointing.enabled"
-        ]
-        == "true"
-    )
-    monkeypatch.setenv("SPARK_GRAFT_STATE_PROVIDER", "bogus")
-    import pytest
-
-    with pytest.raises(ValueError, match="SPARK_GRAFT_STATE_PROVIDER"):
-        _state_store_confs()
-
-
 def test_rocksdb_provider_end_to_end_parity(spark, sf_dir, monkeypatch):
     """The opt-in provider must not change any result: run a stateful
     streaming replay under RocksDB and compare to the same query under the
     default provider (conf is captured at query start, so scoping the
     session conf around the build is enough)."""
     from flink_notebooks_spark.queries import QUERIES
-    from flink_notebooks_spark.session import _ROCKSDB_CONFS
 
+    rocksdb_confs = {
+        "spark.sql.streaming.stateStore.providerClass": (
+            "org.apache.spark.sql.execution.streaming.state."
+            "RocksDBStateStoreProvider"
+        ),
+        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": (
+            "true"
+        ),
+    }
     name = "streaming_dedup_keys"
     base = QUERIES[name](spark, sf_dir).collect()
     prev = {}
-    for k, v in _ROCKSDB_CONFS.items():
+    for k, v in rocksdb_confs.items():
         prev[k] = spark.conf.get(k, None)
         spark.conf.set(k, v)
     try:

@@ -138,7 +138,7 @@ def test_scalar_rewrite_comment_aware():
 
 def test_backtick_identifiers_survive_rewrites():
     """Backtick-quoted identifiers are opaque names: `x--y` must not start
-    a line comment (regression: _normalize_comments truncated the statement
+    a line comment (regression: the comment stripper truncated the statement
     at the --), `a[1]` inside backticks must not become element_at, and an
     apostrophe inside backticks must not flip the lexer's string state."""
     from flink_notebooks_spark.engine.window_sql import (

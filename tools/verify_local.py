@@ -33,15 +33,24 @@ def _parity_twins() -> dict:
     from flink_notebooks_spark.queries import QUERIES
     from flink_notebooks_spark.queries.llm import cluster_pairs_lsh_df
 
-    return {
-        "streaming_dedup_minhash": lambda spark, sf: QUERIES[
-            "dedup_minhash_lsh"
-        ](spark, sf),
-        "streaming_dedup_embedding": lambda spark, sf: (
+    def minhash(spark, sf):
+        return QUERIES["dedup_minhash_lsh"](spark, sf)
+
+    def embedding(spark, sf):
+        return (
             cluster_pairs_lsh_df(spark, sf)
             .select("a", "b", F.round("sim", 6).alias("sim"))
             .orderBy("a", "b")
-        ),
+        )
+
+    # the TTL forms share their twins: the staged replay fits inside one
+    # TTL window (tests/test_streaming3.py
+    # test_ttl_and_exact_dedup_agree_on_bounded_replay)
+    return {
+        "streaming_dedup_minhash": minhash,
+        "streaming_dedup_minhash_ttl": minhash,
+        "streaming_dedup_embedding": embedding,
+        "streaming_dedup_embedding_ttl": embedding,
     }
 
 
